@@ -7,10 +7,16 @@ partitioned parquet + a JSON commit log, with every commit written
 temp-file-then-rename (atomic on POSIX). The API is narrow enough that a
 real Iceberg catalog can be dropped in behind it unchanged.
 
-Layout under <output_dir>/:
-    data/bucket=<b>/part-*.parquet     extraction results
-    lineage/group-<g>.parquet          one row per committed bucket
-    _manifest.json                     commit log: job_id, committed buckets
+Layout under <output_dir>/ (pipeline._run_groups writes it):
+    data/group=<g>/part-*.parquet      scan layout: one dir per file group
+    data/p_bucket=<b>/part-*.parquet   bucketed layout: one dir per bucket
+    lineage/group-<g>/part-*.parquet   per commit group, overwritten on
+                                       rerun: one row per src_file (scan)
+                                       or per bucket (bucketed)
+    _manifest.json                     commit log: job_id, n_buckets (the
+                                       key count) and, per committed key
+                                       (group id / bucket id), n_rows,
+                                       n_ok, n_failed, bytes_in, checksum
 """
 
 from __future__ import annotations

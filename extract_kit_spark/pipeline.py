@@ -4,29 +4,36 @@ The Spark lifecycle of SURVEY.md §3.4, replacing the reference's two
 orchestrators (`core/vision/processor.ts:68-146` and
 `converters/docx-converter.ts:130-245`) with one declarative plan.
 
-Two layouts, same kernels:
+One job loop (``_run_groups``), two layouts that only plan it. The
+manifest keys of a job are cut into fixed groups; for each group with
+uncommitted keys the loop runs plan → extract → write → lineage →
+commit over those keys only. Group ids are fixed slices of the full key
+range, so they never shift with what is already committed.
 
 ``run_extraction_scan`` (DEFAULT — the 100 TB path): NO shuffle. The
 extraction is a pure map, so the plan is scan → mapInPandas → write;
-task sizing comes from the parquet split (`maxPartitionBytes`), resume
-granularity is input-FILE groups, and the payload bytes are never
-shuffled. Measured on this box the shuffle variant costs ~2–5× wall
-time at local[32]; at 100 TB a payload shuffle would be the single
-dominant cost of the job. Skew from giant documents is bounded by the
-per-doc byte cap, not by repartitioning.
+task sizing comes from the parquet split (`maxPartitionBytes`), the
+manifest key is an input-FILE group id (output under data/group=<g>/),
+and the payload bytes are never shuffled. Measured at local[32] on a
+32-core host, the shuffle variant costs ~2–5× wall time; at 100 TB a
+payload shuffle would be the single dominant cost of the job. Skew
+from giant documents is bounded by the per-doc byte cap, not by
+repartitioning.
 
 ``run_extraction_bucketed``: adds a repartition on xxhash64(url) so the
-OUTPUT is bucketed by url hash (one bucket per task, sorted within) —
-pay the shuffle only when downstream consumers need url-co-located /
-bucket-joinable output. Resume granularity is bucket groups.
+OUTPUT is bucketed by url hash (one bucket per task, sorted within,
+under data/p_bucket=<b>/) — pay the shuffle only when downstream
+consumers need url-co-located / bucket-joinable output. The manifest
+key is the bucket id; groups are ``commit_group_size`` buckets.
 
 Shared scale design
 -------------------
-- One fused vectorized stage: all kernels inside one mapInPandas (the
-  single JVM→Python Arrow boundary, where the reference had worker
-  postMessage). 128-row Arrow batches bound worker memory for MB docs.
+- One fused vectorized stage (``extract_stage``): all kernels inside
+  one mapInPandas (the single JVM→Python Arrow boundary, where the
+  reference had worker postMessage). 128-row Arrow batches bound worker
+  memory for MB docs.
 - Incremental commit: one Spark action per group, atomic manifest
-  commit after each; a rerun does only uncommitted groups. Writes are
+  commit after each; a rerun does only uncommitted keys. Writes are
   idempotent (per-group dir overwrite / dynamic partition overwrite),
   so a crash between write and commit never duplicates rows.
 - Straggler cap: payloads over ``max_doc_bytes`` are quarantined
@@ -35,7 +42,7 @@ Shared scale design
 - Deterministic output: sortWithinPartitions(url) so reruns are
   byte-comparable (SURVEY.md §4.3).
 - Lineage from a column-pruned re-scan of written output (never caches
-  MB-size text columns).
+  MB-size text columns), overwritten per group at lineage/group-<g>/.
 """
 
 from __future__ import annotations
@@ -55,18 +62,6 @@ from .kernels.extract import extract_document, MAX_DOC_BYTES
 from .manifest import Manifest
 from .schemas import EXTRACTION_SCHEMA
 
-# extraction-stage output: the contract schema + input size (+ layout-
-# specific passthrough column)
-_STAGE_COMMON = EXTRACTION_SCHEMA.fields + [
-    T.StructField("bytes_in", T.LongType(), nullable=False),
-]
-STAGE_SCHEMA = T.StructType(_STAGE_COMMON + [
-    T.StructField("p_bucket", T.IntegerType(), nullable=False),
-])
-STAGE_SCHEMA_SCAN = T.StructType(_STAGE_COMMON + [
-    T.StructField("src_file", T.StringType(), nullable=False),
-])
-
 DEFAULT_TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 
 
@@ -83,11 +78,18 @@ def _group_checksum() -> F.Column:
         ":", F.col("url"), F.crc32("extracted_text")))).cast("string")
 
 
-def _make_extract_batch(profile: str, max_doc_bytes: int,
-                        passthrough: str) -> Callable:
-    """Build the mapInPandas function; ``passthrough`` is the layout
-    column echoed to the output (p_bucket / src_file). The closure holds
-    only small config scalars, so it pickles with the task."""
+def extract_stage(pages: DataFrame, profile: str, max_doc_bytes: int,
+                  passthrough: str) -> DataFrame:
+    """The fused extraction stage over (url, warc_ts, html,
+    ``passthrough``): one mapInPandas whose output is the contract
+    schema + input size + the layout column ``passthrough`` (p_bucket /
+    src_file), echoed with its input type. The closure holds only small
+    config scalars, so it pickles with the task."""
+    schema = T.StructType(EXTRACTION_SCHEMA.fields + [
+        T.StructField("bytes_in", T.LongType(), nullable=False),
+        T.StructField(passthrough, pages.schema[passthrough].dataType,
+                      nullable=False),
+    ])
 
     def extract_batch(batches: Iterator[pd.DataFrame]) \
             -> Iterator[pd.DataFrame]:
@@ -121,7 +123,7 @@ def _make_extract_batch(profile: str, max_doc_bytes: int,
                 out_rows.append(res)
             yield pd.DataFrame(out_rows)
 
-    return extract_batch
+    return pages.mapInPandas(extract_batch, schema=schema)
 
 
 def plan_partition_count(df: DataFrame,
@@ -152,6 +154,95 @@ def read_pages(spark: SparkSession, input_path: str,
     return spark.read.parquet(input_path).select("url", "warc_ts", "html")
 
 
+def _run_groups(spark: SparkSession, manifest: Manifest,
+                groups: list[list[int]],
+                frame_for_group: Callable[[int, list[int]], DataFrame],
+                part_col: str, passthrough: str, profile: str,
+                max_doc_bytes: int, resume: bool,
+                fail_after_groups: int | None,
+                fail_before_commit_group: int | None) -> dict:
+    """The job loop of both layouts. ``groups[gid]`` is the fixed list
+    of manifest keys (= ``part_col`` values) of group ``gid``; for each
+    group with uncommitted keys: extract ``frame_for_group(gid, todo)``,
+    write it idempotently, aggregate lineage per ``passthrough`` value
+    over the whole group from the written rows, overwrite
+    lineage/group-<gid>, and commit every key of the group. Returns the
+    summary fields both layouts share.
+
+    Test hooks: ``fail_after_groups`` raises after k committed groups;
+    ``fail_before_commit_group`` raises after group k's DATA write but
+    before its manifest commit (the crash window where idempotent
+    re-writes matter)."""
+    data_dir = os.path.join(manifest.output_dir, "data")
+    lineage_dir = os.path.join(manifest.output_dir, "lineage")
+    done = manifest.committed_buckets() if resume else set()
+    n_done_groups = 0
+
+    for gid, keys in enumerate(groups):
+        todo = [k for k in keys if k not in done]
+        if not todo:
+            continue
+        extracted = extract_stage(frame_for_group(gid, todo), profile,
+                                  max_doc_bytes, passthrough)
+        writer = (extracted.sortWithinPartitions("url")
+                  .write.mode("overwrite"))
+        if part_col == "group":
+            # the group is one partition: its own dir, plain overwrite
+            writer.parquet(os.path.join(data_dir, f"group={gid}"))
+        else:
+            # dynamic partition OVERWRITE (not append): a crash between
+            # write and commit leaves orphan partitions that the resume
+            # run simply replaces
+            (writer.option("partitionOverwriteMode", "dynamic")
+             .partitionBy(part_col).parquet(data_dir))
+        if fail_before_commit_group is not None \
+                and gid == fail_before_commit_group:
+            raise RuntimeError(
+                f"test hook: killed before commit of group {gid}")
+
+        lineage = (
+            spark.read.parquet(data_dir)
+            .where(F.col(part_col).isin(keys))
+            .groupBy(passthrough)
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.sum(F.when(F.col("status") == "ok", 1)
+                       .otherwise(0)).alias("n_ok"),
+                 F.sum(F.when(F.col("status") != "ok", 1)
+                       .otherwise(0)).alias("n_failed"),
+                 F.sum("bytes_in").alias("bytes_in"),
+                 _group_checksum().alias("checksum"))
+            .withColumn("job_id", F.lit(manifest.job_id))
+            .withColumn("group_id", F.lit(gid)))
+        rows = lineage.collect()
+        (lineage.write.mode("overwrite")
+         .parquet(os.path.join(lineage_dir, f"group-{gid}")))
+
+        # a lineage row is its own key when it is per partition
+        # (bucketed), else it belongs to the group's one key (scan)
+        by_key: dict = {k: [] for k in keys}
+        for r in rows:
+            by_key[r[part_col] if part_col == passthrough else gid] \
+                .append(r)
+        manifest.commit(
+            {k: {**{c: int(sum(r[c] for r in rs))
+                    for c in ("n_rows", "n_ok", "n_failed", "bytes_in")},
+                 "checksum": "|".join(sorted(r["checksum"] for r in rs))}
+             for k, rs in by_key.items()},
+            sum(map(len, groups)))
+        n_done_groups += 1
+        if fail_after_groups is not None \
+                and n_done_groups >= fail_after_groups:
+            raise RuntimeError(
+                f"test hook: killed after {n_done_groups} groups")
+
+    committed = manifest.load()["committed"].values()
+    return {"n_groups_run": n_done_groups,
+            "n_rows": sum(v["n_rows"] for v in committed),
+            "n_ok": sum(v["n_ok"] for v in committed),
+            "complete": manifest.is_complete(),
+            "output": data_dir}
+
+
 def run_extraction_bucketed(spark: SparkSession,
                             input_path: str,
                             output_dir: str,
@@ -169,21 +260,16 @@ def run_extraction_bucketed(spark: SparkSession,
                             ) -> dict:
     """Run (or resume) the extraction job with url-hash-BUCKETED output
     (pays one payload shuffle; use run_extraction_scan unless downstream
-    needs bucket-co-located output). Returns a summary dict.
-
-    Test hooks: ``fail_after_groups`` raises after k committed groups;
-    ``fail_before_commit_group`` raises after group k's DATA write but
-    before its manifest commit (the crash window where idempotent
-    re-writes matter).
-    """
+    needs bucket-co-located output). Group g is buckets
+    [g*commit_group_size, (g+1)*commit_group_size); it runs only its
+    uncommitted buckets, so a resume at another ``commit_group_size``
+    still finishes exactly. Returns a summary dict; test hooks as in
+    ``_run_groups``."""
     job_id = job_id or f"extract-{uuid.uuid4().hex[:8]}"
-    manifest = Manifest(output_dir, job_id)
-
     pages = read_pages(spark, input_path, input_format)
     if n_buckets is None:
-        n_parts, total_bytes = plan_partition_count(
+        n_buckets, total_bytes = plan_partition_count(
             pages, target_partition_bytes)
-        n_buckets = n_parts
     else:
         total_bytes = -1
 
@@ -193,84 +279,21 @@ def run_extraction_bucketed(spark: SparkSession,
         "p_bucket",
         F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
-    done = manifest.committed_buckets() if resume else set()
-    todo = sorted(set(range(n_buckets)) - done)
-    groups = [todo[i:i + commit_group_size]
-              for i in range(0, len(todo), commit_group_size)]
+    def frame_for_group(gid: int, todo: list[int]) -> DataFrame:
+        # bucket predicate prunes the shuffle input (partition pruning
+        # on a bucket-partitioned Iceberg table); one task per bucket
+        return (bucketed.where(F.col("p_bucket").isin(todo))
+                .repartition(len(todo), "p_bucket"))
 
-    extract_batch = _make_extract_batch(profile, max_doc_bytes,
-                                        "p_bucket")
-    data_dir = os.path.join(output_dir, "data")
-    lineage_dir = os.path.join(output_dir, "lineage")
-    n_done_groups = 0
-
-    for gi, group in enumerate(groups):
-        # bucket predicate prunes the shuffle input; on a bucket-
-        # partitioned Iceberg table this becomes partition pruning
-        part = bucketed.where(F.col("p_bucket").isin([int(b)
-                                                      for b in group]))
-        # one task per bucket in the group: repartition on the bucket id
-        shuffled = part.repartition(len(group), "p_bucket")
-        extracted = shuffled.mapInPandas(extract_batch,
-                                         schema=STAGE_SCHEMA)
-        # deterministic output file contents: sort within partition.
-        # dynamic partition OVERWRITE (not append) makes the group write
-        # idempotent: a crash between write and manifest-commit leaves
-        # orphan bucket data that the resume run simply replaces.
-        (extracted.sortWithinPartitions("url")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("p_bucket").parquet(data_dir))
-        if fail_before_commit_group is not None \
-                and gi == fail_before_commit_group:
-            raise RuntimeError(
-                f"test hook: killed before commit of group {gi}")
-
-        # lineage from the written columns (cheap column-pruned re-scan,
-        # avoids caching MB-size text)
-        lineage = (
-            spark.read.parquet(data_dir)
-            .where(F.col("p_bucket").isin([int(b) for b in group]))
-            .groupBy("p_bucket")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.when(F.col("status") == "ok", 1)
-                       .otherwise(0)).alias("n_ok"),
-                 F.sum(F.when(F.col("status") != "ok", 1)
-                       .otherwise(0)).alias("n_failed"),
-                 F.sum("bytes_in").alias("bytes_in"),
-                 _group_checksum().alias("checksum"))
-            .withColumn("job_id", F.lit(job_id)))
-        lineage_rows = lineage.collect()
-        (lineage.write.mode("append")
-         .parquet(os.path.join(lineage_dir, f"group-{gi}")))
-
-        manifest.commit(
-            {int(r["p_bucket"]): {
-                "n_rows": int(r["n_rows"]), "n_ok": int(r["n_ok"]),
-                "n_failed": int(r["n_failed"]),
-                "bytes_in": int(r["bytes_in"]),
-                "checksum": r["checksum"]}
-             for r in lineage_rows},
-            n_buckets)
-        n_done_groups += 1
-        if fail_after_groups is not None \
-                and n_done_groups >= fail_after_groups:
-            raise RuntimeError(
-                f"test hook: killed after {n_done_groups} groups")
-
-    state = manifest.load()
-    n_rows = sum(v["n_rows"] for v in state["committed"].values())
-    n_ok = sum(v["n_ok"] for v in state["committed"].values())
-    return {
-        "job_id": job_id,
-        "n_buckets": n_buckets,
-        "n_groups_run": n_done_groups,
-        "n_rows": n_rows,
-        "n_ok": n_ok,
-        "total_bytes_planned": total_bytes,
-        "complete": manifest.is_complete(),
-        "output": data_dir,
-    }
+    manifest = Manifest(output_dir, job_id)
+    keys = list(range(n_buckets))
+    groups = [keys[i:i + commit_group_size]
+              for i in range(0, n_buckets, commit_group_size)]
+    run = _run_groups(spark, manifest, groups, frame_for_group,
+                      "p_bucket", "p_bucket", profile, max_doc_bytes,
+                      resume, fail_after_groups, fail_before_commit_group)
+    return {"job_id": job_id, "n_buckets": n_buckets, **run,
+            "total_bytes_planned": total_bytes}
 
 
 def run_extraction_scan(spark: SparkSession,
@@ -291,17 +314,13 @@ def run_extraction_scan(spark: SparkSession,
     (spark.sql.files.maxPartitionBytes), so payload bytes cross the
     wire exactly once (scan) and once more on write.
 
-    Resume: the manifest records committed group ids (each a fixed,
-    deterministic slice of the sorted input-file list); each group's
-    output lives in its own data/group=<gi>/ dir written with overwrite
-    — idempotent under any crash point.
-
-    input_format="warc" runs the same file-group protocol over a
+    Group g is a fixed slice of the sorted input-file list and its own
+    manifest key; its output lives in data/group=<g>/, lineage per
+    src_file. input_format="warc" runs the same protocol over a
     directory of .warc.gz archives (one scan task per archive file).
+    Returns a summary dict; test hooks as in ``_run_groups``.
     """
     job_id = job_id or f"extract-{uuid.uuid4().hex[:8]}"
-    manifest = Manifest(output_dir, job_id)
-
     if input_format == "warc":
         import glob as _glob
         # recursive: must agree with the CLI's input validation
@@ -316,88 +335,27 @@ def run_extraction_scan(spark: SparkSession,
         all_files = sorted(spark.read.parquet(input_path).inputFiles())
     n_groups = min(n_groups, len(all_files)) or 1
     per = -(-len(all_files) // n_groups)  # ceil
-    groups = [all_files[i:i + per] for i in range(0, len(all_files), per)]
+    file_groups = [all_files[i:i + per]
+                   for i in range(0, len(all_files), per)]
 
-    done = manifest.committed_buckets() if resume else set()
-    extract_batch = _make_extract_batch(profile, max_doc_bytes,
-                                        "src_file")
-    data_dir = os.path.join(output_dir, "data")
-    lineage_dir = os.path.join(output_dir, "lineage")
-    n_done_groups = 0
-
-    for gi, files in enumerate(groups):
-        if gi in done:
-            continue
+    def frame_for_group(gid: int, _todo: list[int]) -> DataFrame:
+        files = file_groups[gid]
         if input_format == "warc":
             from .warc import read_warc
-            pages = read_warc(spark, files).select(
+            return read_warc(spark, files).select(
                 "url", "warc_ts", F.col("payload").alias("html"),
                 F.col("warc_file").alias("src_file"))
-        else:
-            pages = (spark.read.parquet(*files)
-                     .select("url", "warc_ts", "html")
-                     .withColumn("src_file", F.input_file_name()))
-        extracted = pages.mapInPandas(extract_batch,
-                                      schema=STAGE_SCHEMA_SCAN)
-        group_dir = os.path.join(data_dir, f"group={gi}")
-        # per-group dir + overwrite ⇒ idempotent rerun of this group
-        (extracted.sortWithinPartitions("url")
-         .write.mode("overwrite").parquet(group_dir))
-        if fail_before_commit_group is not None \
-                and gi == fail_before_commit_group:
-            raise RuntimeError(
-                f"test hook: killed before commit of group {gi}")
+        return (spark.read.parquet(*files)
+                .select("url", "warc_ts", "html")
+                .withColumn("src_file", F.input_file_name()))
 
-        lineage = (
-            spark.read.parquet(group_dir)
-            .groupBy("src_file")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.when(F.col("status") == "ok", 1)
-                       .otherwise(0)).alias("n_ok"),
-                 F.sum(F.when(F.col("status") != "ok", 1)
-                       .otherwise(0)).alias("n_failed"),
-                 F.sum("bytes_in").alias("bytes_in"),
-                 _group_checksum().alias("checksum"))
-            .withColumn("job_id", F.lit(job_id))
-            .withColumn("group_id", F.lit(gi)))
-        rows = lineage.collect()
-        (lineage.write.mode("overwrite")
-         .parquet(os.path.join(lineage_dir, f"group-{gi}")))
-
-        manifest.commit(
-            {gi: {
-                "n_rows": int(sum(r["n_rows"] for r in rows)),
-                "n_ok": int(sum(r["n_ok"] for r in rows)),
-                "n_failed": int(sum(r["n_failed"] for r in rows)),
-                "bytes_in": int(sum(r["bytes_in"] for r in rows)),
-                "n_files": len(files),
-                "checksum": "|".join(sorted(r["checksum"]
-                                            for r in rows))}},
-            len(groups))
-        n_done_groups += 1
-        if fail_after_groups is not None \
-                and n_done_groups >= fail_after_groups:
-            raise RuntimeError(
-                f"test hook: killed after {n_done_groups} groups")
-
-    state = manifest.load()
-    n_rows = sum(v["n_rows"] for v in state["committed"].values())
-    n_ok = sum(v["n_ok"] for v in state["committed"].values())
-    return {
-        "job_id": job_id,
-        "n_groups": len(groups),
-        "n_groups_run": n_done_groups,
-        "n_rows": n_rows,
-        "n_ok": n_ok,
-        "complete": manifest.is_complete(),
-        "output": data_dir,
-    }
-
-
-# Back-compat alias for tests. NOTE: this binds the BUCKETED layout
-# (hash-shuffle on url before extraction) — the flagship no-shuffle
-# plan is run_extraction_scan, which the CLI defaults to (run.py).
-run_extraction = run_extraction_bucketed
+    manifest = Manifest(output_dir, job_id)
+    run = _run_groups(spark, manifest,
+                      [[g] for g in range(len(file_groups))],
+                      frame_for_group, "group", "src_file", profile,
+                      max_doc_bytes, resume, fail_after_groups,
+                      fail_before_commit_group)
+    return {"job_id": job_id, "n_groups": len(file_groups), **run}
 
 
 def read_extractions(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -406,7 +364,8 @@ def read_extractions(spark: SparkSession, output_dir: str) -> DataFrame:
 
 def _replay_pages(spark: SparkSession, input_path: str,
                   bad_keys: DataFrame, n_bad: int,
-                  broadcast_max_keys: int) -> DataFrame:
+                  broadcast_max_keys: int,
+                  input_format: str = "parquet") -> DataFrame:
     """The replay scan: filter the pages table to the quarantined urls
     via an EXPLICIT broadcast of the key-set (up to
     ``broadcast_max_keys`` keys — above that, shuffled join, AQE
@@ -419,9 +378,7 @@ def _replay_pages(spark: SparkSession, input_path: str,
     src_file) ride along so the batch kernel sees them."""
     keys = (F.broadcast(bad_keys) if n_bad <= broadcast_max_keys
             else bad_keys)
-    pages = (spark.read.parquet(input_path)
-             .select("url", "warc_ts", "html")
-             .join(keys, "url"))
+    pages = read_pages(spark, input_path, input_format).join(keys, "url")
     w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
     return (pages.withColumn("__rn", F.row_number().over(w))
             .where("__rn = 1").drop("__rn"))
@@ -430,7 +387,8 @@ def _replay_pages(spark: SparkSession, input_path: str,
 def reprocess_quarantined(spark: SparkSession, input_path: str,
                           output_dir: str, profile: str = "auto",
                           max_doc_bytes: int = MAX_DOC_BYTES,
-                          broadcast_max_keys: int = 2_000_000) -> dict:
+                          broadcast_max_keys: int = 2_000_000,
+                          input_format: str = "parquet") -> dict:
     """Quarantine replay: after a kernel upgrade or config fix (larger
     byte cap, new format support), re-extract ONLY the quarantined rows
     and merge the results back into the output table in place.
@@ -456,7 +414,8 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
     original quarantined row is carried forward unchanged and counted
     in ``missing`` rather than silently vanishing; a url appearing in
     multiple input rows is de-duplicated (max warc_ts wins,
-    deterministic) so replay can't inflate the output.
+    deterministic) so replay can't inflate the output. The pages table
+    is read by ``read_pages`` (``input_format`` parquet or warc).
     Returns {reprocessed, partitions, now_ok, missing}."""
     out = read_extractions(spark, output_dir)
     scan = "src_file" in out.columns
@@ -470,11 +429,9 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
                 "missing": 0}
     parts = [r[0] for r in bad_keys.select(pcol).distinct().collect()]
     pages = _replay_pages(spark, input_path, bad_keys, n_bad,
-                          broadcast_max_keys)
-    batch = _make_extract_batch(profile, max_doc_bytes,
-                                "src_file" if scan else "p_bucket")
-    fixed = pages.mapInPandas(
-        batch, schema=STAGE_SCHEMA_SCAN if scan else STAGE_SCHEMA)
+                          broadcast_max_keys, input_format)
+    fixed = extract_stage(pages, profile, max_doc_bytes,
+                          "src_file" if scan else "p_bucket")
     if scan:  # reattach the partition value from the old row
         fixed = fixed.join(F.broadcast(bad_keys.select("url", pcol)),
                            "url")
@@ -562,7 +519,6 @@ def curate_extracted(spark: SparkSession, output_dir: str,
     a 64-bit collision at web scale is ~n²/2^65 — negligible, and
     detected here by a distinct-count check that fails loudly rather
     than silently merging two urls)."""
-    import os
     data = os.path.join(output_dir, "data")
     docs = (spark.read.parquet(data)
             .where(F.col("status") == "ok")
@@ -604,7 +560,6 @@ def manifest_extracted(spark: SparkSession, output_dir: str,
     as curate_extracted; the manifest output is constant-size in the
     corpus (|domains|x|langs|x3), so the write is a driver-light
     single-stage job at any scale."""
-    import os
     data = os.path.join(output_dir, "data")
     docs = (spark.read.parquet(data)
             .where(F.col("status") == "ok")

@@ -257,7 +257,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.reprocess_quarantined:
             summary = reprocess_quarantined(
                 spark, args.input, args.output, profile=args.profile,
-                max_doc_bytes=args.max_doc_bytes)
+                max_doc_bytes=args.max_doc_bytes,
+                input_format=args.input_format)
             print(json.dumps(summary), flush=True)
             return 0
         if args.layout == "scan":

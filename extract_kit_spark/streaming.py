@@ -47,7 +47,7 @@ def run_extraction_stream(spark: SparkSession, input_dir: str,
     checkpoint, writes parquet to <output_dir>/data, and stops
     (availableNow). Returns the StreamingQuery (already terminated when
     ``await_termination``)."""
-    from .pipeline import _make_extract_batch, STAGE_SCHEMA_SCAN
+    from .pipeline import extract_stage
     from pyspark.sql import functions as F
     from .kernels.extract import MAX_DOC_BYTES
 
@@ -60,10 +60,7 @@ def run_extraction_stream(spark: SparkSession, input_dir: str,
              .select("url", "warc_ts", "html")
              .withColumn("src_file", F.lit("stream")))
 
-    extract_batch = _make_extract_batch(profile, MAX_DOC_BYTES,
-                                        "src_file")
-    extracted = pages.mapInPandas(extract_batch,
-                                  schema=STAGE_SCHEMA_SCAN)
+    extracted = extract_stage(pages, profile, MAX_DOC_BYTES, "src_file")
 
     query = (extracted.writeStream
              .format("parquet")

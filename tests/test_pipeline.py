@@ -12,7 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from extract_kit_spark.fixtures import write_pages_parquet, gen_pages
-from extract_kit_spark.pipeline import (read_extractions, run_extraction,
+from extract_kit_spark.pipeline import (read_extractions,
+                                        run_extraction_bucketed,
                                         run_extraction_scan)
 
 N_ROWS = 400
@@ -31,8 +32,8 @@ def pages_path(tmp_path_factory):
 @pytest.fixture(scope="module")
 def extracted(spark, pages_path, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("out") / "extractions")
-    summary = run_extraction(spark, pages_path, out, job_id="e2e",
-                             n_buckets=8, commit_group_size=4)
+    summary = run_extraction_bucketed(spark, pages_path, out, job_id="e2e",
+                                      n_buckets=8, commit_group_size=4)
     return out, summary
 
 
@@ -99,17 +100,18 @@ def test_lineage_counts_match(spark, extracted):
 def test_exact_resume_after_kill(spark, pages_path, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("resume") / "extractions")
     with pytest.raises(RuntimeError, match="test hook"):
-        run_extraction(spark, pages_path, out, job_id="resume-job",
-                       n_buckets=8, commit_group_size=2,
-                       fail_after_groups=2)
+        run_extraction_bucketed(spark, pages_path, out, job_id="resume-job",
+                                n_buckets=8, commit_group_size=2,
+                                fail_after_groups=2)
     # partial state: some buckets committed, not all
     from extract_kit_spark.manifest import Manifest
     m = Manifest(out, "resume-job")
     done_before = m.committed_buckets()
     assert 0 < len(done_before) < 8
     # resume: same job_id → only remaining buckets run
-    summary = run_extraction(spark, pages_path, out, job_id="resume-job",
-                             n_buckets=8, commit_group_size=2)
+    summary = run_extraction_bucketed(spark, pages_path, out,
+                                      job_id="resume-job", n_buckets=8,
+                                      commit_group_size=2)
     assert summary["complete"]
     df = read_extractions(spark, out)
     assert df.count() == N_ROWS               # no loss
@@ -123,11 +125,31 @@ def test_resume_after_crash_before_commit(spark, pages_path,
     duplicate it."""
     out = str(tmp_path_factory.mktemp("crashwin") / "x")
     with pytest.raises(RuntimeError, match="before commit"):
-        run_extraction(spark, pages_path, out, job_id="crash-win",
-                       n_buckets=8, commit_group_size=2,
-                       fail_before_commit_group=1)
-    summary = run_extraction(spark, pages_path, out, job_id="crash-win",
-                             n_buckets=8, commit_group_size=2)
+        run_extraction_bucketed(spark, pages_path, out, job_id="crash-win",
+                                n_buckets=8, commit_group_size=2,
+                                fail_before_commit_group=1)
+    summary = run_extraction_bucketed(spark, pages_path, out,
+                                      job_id="crash-win", n_buckets=8,
+                                      commit_group_size=2)
+    assert summary["complete"]
+    df = read_extractions(spark, out)
+    assert df.count() == N_ROWS
+    assert df.select("url").distinct().count() == N_ROWS
+
+
+def test_resume_with_changed_commit_group_size(spark, pages_path,
+                                               tmp_path_factory):
+    """Group ids are fixed slices of the bucket range and a group runs
+    only its uncommitted buckets: a job cut after one group of 2 and
+    resumed with groups of 4 finishes with every url exactly once."""
+    out = str(tmp_path_factory.mktemp("regroup") / "x")
+    with pytest.raises(RuntimeError, match="after 1 groups"):
+        run_extraction_bucketed(spark, pages_path, out, job_id="regroup",
+                                n_buckets=8, commit_group_size=2,
+                                fail_after_groups=1)
+    summary = run_extraction_bucketed(spark, pages_path, out,
+                                      job_id="regroup", n_buckets=8,
+                                      commit_group_size=4)
     assert summary["complete"]
     df = read_extractions(spark, out)
     assert df.count() == N_ROWS
@@ -140,10 +162,10 @@ def test_results_independent_of_parallelism(spark, pages_path,
     This is the single-machine proxy for N vs 4N cluster equivalence."""
     out_a = str(tmp_path_factory.mktemp("pa") / "x")
     out_b = str(tmp_path_factory.mktemp("pb") / "x")
-    run_extraction(spark, pages_path, out_a, job_id="a", n_buckets=2,
-                   commit_group_size=2)
-    run_extraction(spark, pages_path, out_b, job_id="b", n_buckets=13,
-                   commit_group_size=13)
+    run_extraction_bucketed(spark, pages_path, out_a, job_id="a", n_buckets=2,
+                            commit_group_size=2)
+    run_extraction_bucketed(spark, pages_path, out_b, job_id="b", n_buckets=13,
+                            commit_group_size=13)
     ha = (read_extractions(spark, out_a)
           .select(F.md5(F.concat_ws("\x00", "url", "extracted_text"))
                   .alias("h")))
@@ -180,6 +202,37 @@ def test_scan_layout_end_to_end(spark, pages_multi, tmp_path_factory):
     assert "src_file" in df.columns
 
 
+def test_group_plans_shuffle_only_in_bucketed_layout(
+        spark, tmp_path, monkeypatch):
+    """Both layouts run through the one group loop; the scan layout's
+    extraction plan has no Exchange (payload never shuffled), the
+    bucketed one has its url-hash repartition."""
+    import contextlib
+    import io
+    from extract_kit_spark import pipeline
+    from extract_kit_spark.fixtures import write_pages_dir
+    stages = []
+    real = pipeline.extract_stage
+
+    def spy(*args, **kwargs):
+        stages.append(real(*args, **kwargs))
+        return stages[-1]
+
+    monkeypatch.setattr(pipeline, "extract_stage", spy)
+    pages = str(tmp_path / "pages")
+    write_pages_dir(pages, 20, n_files=2)
+    run_extraction_scan(spark, pages, str(tmp_path / "s"), n_groups=2)
+    run_extraction_bucketed(spark, pages, str(tmp_path / "b"),
+                            n_buckets=2, commit_group_size=2)
+    has_exchange = []
+    for df in stages:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()
+        has_exchange.append("Exchange" in buf.getvalue())
+    assert has_exchange == [False, False, True]
+
+
 def test_scan_layout_resume_both_crash_windows(spark, pages_multi,
                                                tmp_path_factory):
     out = str(tmp_path_factory.mktemp("scanres") / "x")
@@ -195,6 +248,30 @@ def test_scan_layout_resume_both_crash_windows(spark, pages_multi,
     df = read_extractions(spark, out)
     assert df.count() == N_ROWS
     assert df.select("url").distinct().count() == N_ROWS
+
+
+@pytest.mark.parametrize("layout", ["scan", "bucketed"])
+def test_rerun_without_resume_keeps_lineage_exact(spark, tmp_path, layout):
+    """A rerun with resume=False (CLI --no-resume) redoes every group;
+    lineage is overwritten per fixed group id, so it still sums to the
+    data rows instead of counting them twice."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    write_pages_dir(pages, 80, n_files=4)
+    for resume in (True, False):
+        if layout == "scan":
+            s = run_extraction_scan(spark, pages, out, job_id="ln",
+                                    n_groups=2, resume=resume)
+        else:
+            s = run_extraction_bucketed(spark, pages, out, job_id="ln",
+                                        n_buckets=8, commit_group_size=2,
+                                        resume=resume)
+        assert s["complete"] and s["n_groups_run"] >= 2
+    n_data = read_extractions(spark, out).count()
+    assert n_data == 80
+    lineage = spark.read.parquet(os.path.join(out, "lineage", "*"))
+    assert lineage.agg(F.sum("n_rows")).first()[0] == n_data
 
 
 def test_scan_layout_matches_bucketed_results(spark, pages_multi,
@@ -231,8 +308,8 @@ def test_oversize_cap_quarantines_without_parse(spark, tmp_path_factory):
     p = tmp_path_factory.mktemp("big") / "pages.parquet"
     write_pages_parquet(str(p), 60, oversize_every=7)  # kind 'broken'
     out = str(tmp_path_factory.mktemp("bigout") / "x")
-    run_extraction(spark, str(p), out, job_id="cap", n_buckets=2,
-                   max_doc_bytes=1024 * 1024)
+    run_extraction_bucketed(spark, str(p), out, job_id="cap", n_buckets=2,
+                            max_doc_bytes=1024 * 1024)
     df = read_extractions(spark, out)
     too_large = df.where(F.col("status") == "FILE_TOO_LARGE")
     assert too_large.count() >= 1
@@ -252,8 +329,8 @@ def test_compact_output_merges_small_files_preserving_bytes(
     from extract_kit_spark.compact import compact_output
 
     out = str(tmp_path_factory.mktemp("compact") / "x")
-    run_extraction(spark, pages_path, out, job_id="cmp",
-                   n_buckets=4, commit_group_size=4)
+    run_extraction_bucketed(spark, pages_path, out, job_id="cmp",
+                            n_buckets=4, commit_group_size=4)
     data = os.path.join(out, "data")
     con = duckdb.connect()
     q = (f"select url, md5(coalesce(extracted_text,'')) h, status "
@@ -335,8 +412,8 @@ def test_reprocess_quarantined_bucketed_layout(
     from extract_kit_spark.pipeline import reprocess_quarantined
 
     out = str(tmp_path_factory.mktemp("replayb") / "x")
-    run_extraction(spark, pages_path, out, job_id="rpb", n_buckets=4,
-                   commit_group_size=4, max_doc_bytes=2000)
+    run_extraction_bucketed(spark, pages_path, out, job_id="rpb", n_buckets=4,
+                            commit_group_size=4, max_doc_bytes=2000)
     df0 = read_extractions(spark, out)
     n_bad = df0.where(F.col("status") != "ok").count()
     assert n_bad > N_ROWS * 0.3

@@ -370,6 +370,33 @@ def test_scan_pipeline_finds_nested_archives(spark, tmp_path):
     assert stats["n_rows"] == 10
 
 
+def test_reprocess_quarantined_over_warc_input(spark, tmp_path):
+    """Quarantine replay reads the pages through the same input format
+    as the job: a WARC-input scan run with a tiny byte cap, replayed
+    from the archives, ends byte-identical (url -> md5(text), status)
+    to a fresh full run."""
+    import duckdb
+    from extract_kit_spark import pipeline
+    src = str(tmp_path / "warc")
+    warc.write_warc_local(_pages_rows(60), src, records_per_file=15)
+    out, ref = str(tmp_path / "out"), str(tmp_path / "ref")
+    pipeline.run_extraction_scan(spark, src, out, job_id="wq",
+                                 n_groups=2, max_doc_bytes=2000,
+                                 input_format="warc")
+    summary = pipeline.reprocess_quarantined(spark, src, out,
+                                             input_format="warc")
+    assert summary["reprocessed"] > 10 and summary["now_ok"] > 0
+    assert summary["missing"] == 0
+    pipeline.run_extraction_scan(spark, src, ref, job_id="wqref",
+                                 n_groups=2, input_format="warc")
+    con = duckdb.connect()
+    q = ("select url, md5(coalesce(extracted_text,'')) h, status "
+         "from read_parquet('%s/data/*/*.parquet') order by url")
+    got = con.sql(q % out).fetchall()
+    assert len(got) == 60
+    assert got == con.sql(q % ref).fetchall()
+
+
 def test_read_warc_nested_dirs_and_null_want_ts(spark, tmp_path):
     """read_warc on a DIRECTORY must list archives recursively (the
     CLI validation and the scan pipeline both accept nested layouts),
