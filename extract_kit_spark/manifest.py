@@ -14,7 +14,8 @@ Layout under <output_dir>/ (pipeline._run_groups writes it):
                                        rerun: one row per src_file (scan)
                                        or per bucket (bucketed)
     _manifest.json                     commit log: job_id, n_buckets (the
-                                       key count) and, per committed key
+                                       key count), key_plan (what the
+                                       keys mean) and, per committed key
                                        (group id / bucket id), n_rows,
                                        n_ok, n_failed, bytes_in, checksum
 """
@@ -25,6 +26,10 @@ import json
 import os
 import tempfile
 import time
+
+
+class KeyPlanMismatch(ValueError):
+    """A run's key plan differs from the one its job recorded."""
 
 
 class Manifest:
@@ -48,16 +53,31 @@ class Manifest:
             return set()
         return {int(b) for b in state["committed"]}
 
+    def check_plan(self, key_plan: str) -> None:
+        """Raise if this job recorded another key plan: a key (bucket
+        or file-group id) then names other rows, so resuming would
+        duplicate and lose rows, and a rerun would leave stale data
+        dirs of the old plan behind."""
+        state = self.load()
+        old = state.get("key_plan")
+        if state.get("job_id") == self.job_id and old not in (None,
+                                                              key_plan):
+            raise KeyPlanMismatch(
+                f"job {self.job_id!r} in {self.output_dir} was planned "
+                f"as {old}, this run plans {key_plan}; use a new job id "
+                f"or output dir")
+
     # -- write (atomic: temp + rename; idempotent per bucket) -----------------
-    def commit(self, buckets: dict[int, dict], n_buckets: int) -> None:
+    def commit(self, buckets: dict[int, dict], n_buckets: int,
+               key_plan: str) -> None:
         """Record buckets as done. bucket → {n_rows, n_ok, n_failed,
         bytes_in, checksum}. Re-committing a bucket overwrites its entry
         (idempotent for resume-after-partial-write)."""
         state = self.load()
         if state.get("job_id") != self.job_id:
-            state = {"job_id": self.job_id, "n_buckets": n_buckets,
-                     "committed": {}}
+            state = {"job_id": self.job_id, "committed": {}}
         state["n_buckets"] = n_buckets
+        state["key_plan"] = key_plan
         for b, info in buckets.items():
             state["committed"][str(b)] = {**info,
                                           "committed_at": time.time()}

@@ -31,9 +31,12 @@ Shared scale design
 - One fused vectorized stage (``extract_stage``): all kernels inside
   one mapInPandas (the single JVM→Python Arrow boundary, where the
   reference had worker postMessage). 128-row Arrow batches bound worker
-  memory for MB docs.
+  memory for MB docs. The registry's extraction queries
+  (queries.q_ext_*) run this same stage and only project its output
+  with Spark column expressions.
 - Incremental commit: one Spark action per group, atomic manifest
-  commit after each; a rerun does only uncommitted keys. Writes are
+  commit after each; a rerun does only uncommitted keys, and is
+  refused if its key plan differs from the recorded one. Writes are
   idempotent (per-group dir overwrite / dynamic partition overwrite),
   so a crash between write and commit never duplicates rows.
 - Straggler cap: payloads over ``max_doc_bytes`` are quarantined
@@ -47,6 +50,8 @@ Shared scale design
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import uuid
 from collections.abc import Iterator
@@ -78,18 +83,22 @@ def _group_checksum() -> F.Column:
         ":", F.col("url"), F.crc32("extracted_text")))).cast("string")
 
 
-def extract_stage(pages: DataFrame, profile: str, max_doc_bytes: int,
-                  passthrough: str) -> DataFrame:
-    """The fused extraction stage over (url, warc_ts, html,
-    ``passthrough``): one mapInPandas whose output is the contract
-    schema + input size + the layout column ``passthrough`` (p_bucket /
-    src_file), echoed with its input type. The closure holds only small
-    config scalars, so it pickles with the task."""
+def extract_stage(pages: DataFrame, profile: str,
+                  max_doc_bytes: int) -> DataFrame:
+    """The fused extraction stage, the one Python boundary of the job
+    and of the registry's extraction queries: one mapInPandas over
+    (url, warc_ts, html, ...) whose output is the contract schema +
+    input size + every other input column (p_bucket / src_file /
+    group), echoed in input order with its input type. Echoed columns
+    are row keys and are declared non-null, as the layouts write them.
+    Callers project the output with Spark column expressions. The
+    closure holds only small config scalars, so it pickles with the
+    task."""
+    names = [c for c in pages.columns if c not in ("url", "warc_ts", "html")]
     schema = T.StructType(EXTRACTION_SCHEMA.fields + [
-        T.StructField("bytes_in", T.LongType(), nullable=False),
-        T.StructField(passthrough, pages.schema[passthrough].dataType,
-                      nullable=False),
-    ])
+        T.StructField("bytes_in", T.LongType(), nullable=False)] + [
+        T.StructField(c, pages.schema[c].dataType, nullable=False)
+        for c in names])
 
     def extract_batch(batches: Iterator[pd.DataFrame]) \
             -> Iterator[pd.DataFrame]:
@@ -101,9 +110,9 @@ def extract_stage(pages: DataFrame, profile: str, max_doc_bytes: int,
             urls = pdf["url"].tolist()
             payloads = pdf["html"].tolist()
             stamps = pdf["warc_ts"].tolist()
-            extra = pdf[passthrough].tolist()
-            for url, ts, payload, ex in zip(urls, stamps, payloads,
-                                            extra):
+            echoed = [pdf[c].tolist() for c in names]
+            for i, (url, ts, payload) in enumerate(
+                    zip(urls, stamps, payloads)):
                 size = len(payload) if payload is not None else 0
                 if size > max_doc_bytes:
                     # straggler cap: quarantine without parsing (I2
@@ -118,8 +127,9 @@ def extract_stage(pages: DataFrame, profile: str, max_doc_bytes: int,
                     res = extract_document(url, payload, profile)
                 res["warc_ts"] = ts
                 res["partition_id"] = pid
-                res[passthrough] = ex
                 res["bytes_in"] = size
+                for c, values in zip(names, echoed):
+                    res[c] = values[i]
                 out_rows.append(res)
             yield pd.DataFrame(out_rows)
 
@@ -157,17 +167,22 @@ def read_pages(spark: SparkSession, input_path: str,
 def _run_groups(spark: SparkSession, manifest: Manifest,
                 groups: list[list[int]],
                 frame_for_group: Callable[[int, list[int]], DataFrame],
-                part_col: str, passthrough: str, profile: str,
-                max_doc_bytes: int, resume: bool,
+                part_col: str, lineage_col: str, key_plan: str,
+                profile: str, max_doc_bytes: int, resume: bool,
                 fail_after_groups: int | None,
                 fail_before_commit_group: int | None) -> dict:
     """The job loop of both layouts. ``groups[gid]`` is the fixed list
     of manifest keys (= ``part_col`` values) of group ``gid``; for each
     group with uncommitted keys: extract ``frame_for_group(gid, todo)``,
-    write it idempotently, aggregate lineage per ``passthrough`` value
+    write it idempotently, aggregate lineage per ``lineage_col`` value
     over the whole group from the written rows, overwrite
     lineage/group-<gid>, and commit every key of the group. Returns the
     summary fields both layouts share.
+
+    ``key_plan`` names what the keys mean (the bucket count, or a
+    digest of the file groups). The manifest records it on first
+    commit, and a run of the same job whose plan differs raises before
+    any work: its keys would name other rows.
 
     Test hooks: ``fail_after_groups`` raises after k committed groups;
     ``fail_before_commit_group`` raises after group k's DATA write but
@@ -175,6 +190,7 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
     re-writes matter)."""
     data_dir = os.path.join(manifest.output_dir, "data")
     lineage_dir = os.path.join(manifest.output_dir, "lineage")
+    manifest.check_plan(key_plan)
     done = manifest.committed_buckets() if resume else set()
     n_done_groups = 0
 
@@ -183,7 +199,7 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
         if not todo:
             continue
         extracted = extract_stage(frame_for_group(gid, todo), profile,
-                                  max_doc_bytes, passthrough)
+                                  max_doc_bytes)
         writer = (extracted.sortWithinPartitions("url")
                   .write.mode("overwrite"))
         if part_col == "group":
@@ -203,7 +219,7 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
         lineage = (
             spark.read.parquet(data_dir)
             .where(F.col(part_col).isin(keys))
-            .groupBy(passthrough)
+            .groupBy(lineage_col)
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum(F.when(F.col("status") == "ok", 1)
                        .otherwise(0)).alias("n_ok"),
@@ -221,14 +237,14 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
         # (bucketed), else it belongs to the group's one key (scan)
         by_key: dict = {k: [] for k in keys}
         for r in rows:
-            by_key[r[part_col] if part_col == passthrough else gid] \
+            by_key[r[part_col] if part_col == lineage_col else gid] \
                 .append(r)
         manifest.commit(
             {k: {**{c: int(sum(r[c] for r in rs))
                     for c in ("n_rows", "n_ok", "n_failed", "bytes_in")},
                  "checksum": "|".join(sorted(r["checksum"] for r in rs))}
              for k, rs in by_key.items()},
-            sum(map(len, groups)))
+            sum(map(len, groups)), key_plan)
         n_done_groups += 1
         if fail_after_groups is not None \
                 and n_done_groups >= fail_after_groups:
@@ -290,8 +306,9 @@ def run_extraction_bucketed(spark: SparkSession,
     groups = [keys[i:i + commit_group_size]
               for i in range(0, n_buckets, commit_group_size)]
     run = _run_groups(spark, manifest, groups, frame_for_group,
-                      "p_bucket", "p_bucket", profile, max_doc_bytes,
-                      resume, fail_after_groups, fail_before_commit_group)
+                      "p_bucket", "p_bucket", f"n_buckets={n_buckets}",
+                      profile, max_doc_bytes, resume, fail_after_groups,
+                      fail_before_commit_group)
     return {"job_id": job_id, "n_buckets": n_buckets, **run,
             "total_bytes_planned": total_bytes}
 
@@ -349,11 +366,14 @@ def run_extraction_scan(spark: SparkSession,
                 .select("url", "warc_ts", "html")
                 .withColumn("src_file", F.input_file_name()))
 
+    digest = hashlib.sha256(
+        json.dumps(file_groups).encode("utf-8")).hexdigest()[:16]
+    plan = f"file_groups={len(file_groups)}:{digest}"
     manifest = Manifest(output_dir, job_id)
     run = _run_groups(spark, manifest,
                       [[g] for g in range(len(file_groups))],
-                      frame_for_group, "group", "src_file", profile,
-                      max_doc_bytes, resume, fail_after_groups,
+                      frame_for_group, "group", "src_file", plan,
+                      profile, max_doc_bytes, resume, fail_after_groups,
                       fail_before_commit_group)
     return {"job_id": job_id, "n_groups": len(file_groups), **run}
 
@@ -375,7 +395,7 @@ def _replay_pages(spark: SparkSession, input_path: str,
     shuffles — picking the max warc_ts row per url so a url appearing
     in multiple input rows can't inflate the replay output. The key
     frame's extra skinny columns (partition carrier: group/p_bucket,
-    src_file) ride along so the batch kernel sees them."""
+    src_file) ride along, and the extraction stage echoes them."""
     keys = (F.broadcast(bad_keys) if n_bad <= broadcast_max_keys
             else bad_keys)
     pages = read_pages(spark, input_path, input_format).join(keys, "url")
@@ -430,12 +450,9 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
     parts = [r[0] for r in bad_keys.select(pcol).distinct().collect()]
     pages = _replay_pages(spark, input_path, bad_keys, n_bad,
                           broadcast_max_keys, input_format)
-    fixed = extract_stage(pages, profile, max_doc_bytes,
-                          "src_file" if scan else "p_bucket")
-    if scan:  # reattach the partition value from the old row
-        fixed = fixed.join(F.broadcast(bad_keys.select("url", pcol)),
-                           "url")
-    fixed = fixed.localCheckpoint()  # used by write + counts + anti
+    # the stage echoes the partition columns of the old row; the
+    # checkpoint serves the write, the counts and the anti join
+    fixed = extract_stage(pages, profile, max_doc_bytes).localCheckpoint()
     n_fixed = fixed.count()
     # quarantined urls with no input row: carry the original row
     # forward (and report), don't drop it from the table

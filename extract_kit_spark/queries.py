@@ -19,12 +19,13 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql import types as T
 
 from .fixtures import write_pages_dir
+from .kernels.extract import MAX_DOC_BYTES
 from .ops import lm as lm_ops
 from .ops import (corpus, contamination, dedup, multimodal, pii,
                   similarity, textstats, weburl)
+from .pipeline import extract_stage
 
 # -- shared pages table (a DIRECTORY of part files so the no-shuffle
 # scan parallelizes; the DuckDB oracle reads the same files via glob) --------
@@ -216,53 +217,33 @@ _HEX_HTML = b"<!DO".hex().upper()
 
 # -- extraction queries -------------------------------------------------------
 
-_FLAGSHIP_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("doc_kind", T.StringType()),
-    T.StructField("status", T.StringType()),
-    T.StructField("title", T.StringType()),
-    T.StructField("text_len", T.LongType()),
-    T.StructField("n_spans", T.LongType()),
-    T.StructField("ok", T.BooleanType()),
-    T.StructField("text_sha256", T.StringType()),
-])
+def _extract(pages: DataFrame, profile: str = "auto") -> DataFrame:
+    """(url, warc_ts, html) of ``pages`` through the job's extraction
+    stage (pipeline.extract_stage); the queries below only project its
+    output with Spark column expressions."""
+    return extract_stage(pages.select("url", "warc_ts", "html"), profile,
+                         MAX_DOC_BYTES)
 
 
-def _extract_flagship_batches(batches: Iterator[pd.DataFrame]) \
-        -> Iterator[pd.DataFrame]:
-    import hashlib
-    from .kernels.extract import extract_document
-    for pdf in batches:
-        rows = []
-        for url, payload in zip(pdf["url"].tolist(),
-                                pdf["html"].tolist()):
-            r = extract_document(url, payload)
-            rows.append({
-                "url": url,
-                "doc_kind": r["doc_kind"],
-                "status": r["status"],
-                "title": r["title"],
-                "text_len": len(r["extracted_text"]),
-                "n_spans": len(r["spans"]),
-                "ok": r["validation"]["success"],
-                # the north-rule invariant (byte-identical extracted
-                # text per url), carried as a checkable column
-                "text_sha256": hashlib.sha256(
-                    r["extracted_text"].encode("utf-8")).hexdigest(),
-            })
-        yield pd.DataFrame(rows)
+def _flagship_rows(pages: DataFrame) -> DataFrame:
+    return _extract(pages).select(
+        "url", "doc_kind", "status", "title",
+        F.length("extracted_text").cast("long").alias("text_len"),
+        F.size("spans").cast("long").alias("n_spans"),
+        F.col("validation.success").alias("ok"),
+        # the north-rule invariant (byte-identical extracted text per
+        # url), carried as a checkable column
+        F.sha2("extracted_text", 256).alias("text_sha256"))
 
 
 def q_ext_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full extraction pipeline (detect → parse → boilerplate →
     serialize → validate) over the synthetic pages table — the
-    no-shuffle scan plan (scan → mapInPandas), same dataflow as
-    pipeline.run_extraction_scan."""
+    no-shuffle scan plan (scan → mapInPandas), the same
+    pipeline.extract_stage that run_extraction_scan runs."""
     _ensure_importable(spark)
     ensure_pages()
-    pages = spark.read.parquet(PAGES_PATH).select("url", "html")
-    return pages.mapInPandas(_extract_flagship_batches,
-                             schema=_FLAGSHIP_SCHEMA)
+    return _flagship_rows(spark.read.parquet(PAGES_PATH))
 
 
 # Flagship oracle: the committed kernel-computed golden registry for all
@@ -300,24 +281,6 @@ _HANDPINNED_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "tests", "golden", "handpinned")
 
-_HANDPINNED_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("extracted_text", T.StringType()),
-])
-
-
-def _extract_text_batches(batches: Iterator[pd.DataFrame]) \
-        -> Iterator[pd.DataFrame]:
-    from .kernels.extract import extract_document
-    for pdf in batches:
-        yield pd.DataFrame({
-            "url": pdf["url"],
-            "extracted_text": [
-                extract_document(u, p)["extracted_text"]
-                for u, p in zip(pdf["url"].tolist(),
-                                pdf["html"].tolist())]})
-
-
 def q_ext_flagship_handpinned(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Full extraction restricted to the hand-pinned urls, returning
@@ -328,11 +291,8 @@ def q_ext_flagship_handpinned(spark: SparkSession,
     ensure_pages()
     with open(os.path.join(_HANDPINNED_DIR, "urls.json")) as fh:
         urls = [m["url"] for m in _json.load(fh)]
-    pages = (spark.read.parquet(PAGES_PATH)
-             .where(F.col("url").isin(urls))
-             .select("url", "html"))
-    return pages.mapInPandas(_extract_text_batches,
-                             schema=_HANDPINNED_SCHEMA)
+    pages = spark.read.parquet(PAGES_PATH).where(F.col("url").isin(urls))
+    return _extract(pages).select("url", "extracted_text")
 
 
 _ORACLE_HANDPINNED = f"""
@@ -431,42 +391,27 @@ def q_ext_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum(F.col("text_len")).alias("total_text_chars")))
 
 
-_INVOICE_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("invoice_number", T.StringType()),
-    T.StructField("invoice_date", T.StringType()),
-    T.StructField("currency", T.StringType()),
-    T.StructField("total_amount", T.DoubleType()),
-    T.StructField("n_line_items", T.IntegerType()),
-    T.StructField("sum_line_totals", T.DoubleType()),
-    T.StructField("coherent", T.BooleanType()),
-])
+def _item_sums(items: str, amount: str, n_name: str,
+               sum_name: str) -> list:
+    """Item count, item-amount sum rounded to cents, and the V4
+    coherence check (the items add up to total_amount within a cent)
+    over the array column ``items``."""
+    arr = F.coalesce(F.col(items), F.array())
+    s = F.round(F.aggregate(arr, F.lit(0.0), lambda acc, x:
+                            acc + F.coalesce(x[amount], F.lit(0.0))), 2)
+    total = F.col("total_amount")
+    return [F.size(arr).alias(n_name), s.alias(sum_name),
+            (total.isNotNull() & (F.abs(s - total) <= 0.01))
+            .alias("coherent")]
 
 
-def _extract_invoice_batches(batches: Iterator[pd.DataFrame]) \
-        -> Iterator[pd.DataFrame]:
-    from .kernels.extract import extract_document
-    for pdf in batches:
-        rows = []
-        for url, payload in zip(pdf["url"].tolist(),
-                                pdf["html"].tolist()):
-            r = extract_document(url, payload, profile="invoice")
-            inv = r["fields"]["invoice"] or {}
-            items = inv.get("line_items") or []
-            s = round(sum(li["line_total"] or 0.0 for li in items), 2)
-            total = inv.get("total_amount")
-            rows.append({
-                "url": url,
-                "invoice_number": inv.get("invoice_number"),
-                "invoice_date": inv.get("invoice_date"),
-                "currency": inv.get("currency"),
-                "total_amount": total,
-                "n_line_items": len(items),
-                "sum_line_totals": s,
-                "coherent": (total is not None
-                             and abs(s - total) <= 0.01),
-            })
-        yield pd.DataFrame(rows)
+def _invoice_rows(pages: DataFrame) -> DataFrame:
+    return (_extract(pages, "invoice")
+            .select("url", "fields.invoice.*")
+            .select("url", "invoice_number", "invoice_date", "currency",
+                    "total_amount",
+                    *_item_sums("line_items", "line_total",
+                                "n_line_items", "sum_line_totals")))
 
 
 def q_ext_invoice_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,12 +424,9 @@ def q_ext_invoice_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_pages()
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "UTF-8")
-    invoices = (_pages_with_kind(spark)
-                .where((F.col("kind") == "html")
-                       & s.contains("Invoice Number:"))
-                .select("url", "html"))
-    return invoices.mapInPandas(_extract_invoice_batches,
-                                schema=_INVOICE_SCHEMA)
+    return _invoice_rows(_pages_with_kind(spark)
+                         .where((F.col("kind") == "html")
+                                & s.contains("Invoice Number:")))
 
 
 _ORACLE_INVOICE = f"""
@@ -527,12 +469,9 @@ def q_ext_pdf_invoice_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_pages()
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "ISO-8859-1")
-    pdf_invoices = (pages
-                    .where(F.hex(F.substring("html", 1, 5)) == _HEX_PDF)
-                    .where(s.contains("(Invoice Number:"))
-                    .select("url", "html"))
-    return pdf_invoices.mapInPandas(_extract_invoice_batches,
-                                    schema=_INVOICE_SCHEMA)
+    return _invoice_rows(pages
+                         .where(F.hex(F.substring("html", 1, 5)) == _HEX_PDF)
+                         .where(s.contains("(Invoice Number:")))
 
 
 _ORACLE_PDF_INVOICE = f"""
@@ -581,12 +520,9 @@ def q_ext_pdf_invoice_fields_hex(spark: SparkSession,
     ensure_pages()
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "ISO-8859-1")
-    rows = (pages
-            .where(F.hex(F.substring("html", 1, 5)) == _HEX_PDF)
-            .where(s.contains(_HEX_INV_MARK))
-            .select("url", "html"))
-    return rows.mapInPandas(_extract_invoice_batches,
-                            schema=_INVOICE_SCHEMA)
+    return _invoice_rows(pages
+                         .where(F.hex(F.substring("html", 1, 5)) == _HEX_PDF)
+                         .where(s.contains(_HEX_INV_MARK)))
 
 
 _ORACLE_PDF_INVOICE_HEX = f"""
@@ -623,46 +559,6 @@ FROM f
 """
 
 
-_RECEIPT_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("merchant_name", T.StringType()),
-    T.StructField("receipt_date", T.StringType()),
-    T.StructField("payment_method", T.StringType()),
-    T.StructField("currency", T.StringType()),
-    T.StructField("total_amount", T.DoubleType()),
-    T.StructField("n_items", T.IntegerType()),
-    T.StructField("sum_item_totals", T.DoubleType()),
-    T.StructField("coherent", T.BooleanType()),
-])
-
-
-def _extract_receipt_batches(batches: Iterator[pd.DataFrame]) \
-        -> Iterator[pd.DataFrame]:
-    from .kernels.extract import extract_document
-    for pdf in batches:
-        rows = []
-        for url, payload in zip(pdf["url"].tolist(),
-                                pdf["html"].tolist()):
-            r = extract_document(url, payload, profile="receipt")
-            rec = r["fields"]["receipt"] or {}
-            items = rec.get("items") or []
-            s = round(sum(it["total"] or 0.0 for it in items), 2)
-            total = rec.get("total_amount")
-            rows.append({
-                "url": url,
-                "merchant_name": rec.get("merchant_name"),
-                "receipt_date": rec.get("date"),
-                "payment_method": rec.get("payment_method"),
-                "currency": rec.get("currency"),
-                "total_amount": total,
-                "n_items": len(items),
-                "sum_item_totals": s,
-                "coherent": (total is not None
-                             and abs(s - total) <= 0.01),
-            })
-        yield pd.DataFrame(rows)
-
-
 def q_ext_pdf_receipt_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Receipt extraction on the PDF branch (extractReceiptPdf analogue;
     the reference's strongest test asserts exactly these fields from a
@@ -671,13 +567,17 @@ def q_ext_pdf_receipt_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_pages()
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "ISO-8859-1")
-    pdf_receipts = (pages
-                    .where(F.hex(F.substring("html", 1, 5)) == _HEX_PDF)
-                    .where(s.contains("(Payment:")
-                           & ~s.contains("(Invoice Number:"))
-                    .select("url", "html"))
-    return pdf_receipts.mapInPandas(_extract_receipt_batches,
-                                    schema=_RECEIPT_SCHEMA)
+    receipts = (pages
+                .where(F.hex(F.substring("html", 1, 5)) == _HEX_PDF)
+                .where(s.contains("(Payment:")
+                       & ~s.contains("(Invoice Number:")))
+    return (_extract(receipts, "receipt")
+            .select("url", "fields.receipt.*")
+            .select("url", "merchant_name",
+                    F.col("date").alias("receipt_date"),
+                    "payment_method", "currency", "total_amount",
+                    *_item_sums("items", "total", "n_items",
+                                "sum_item_totals")))
 
 
 _ORACLE_PDF_RECEIPT = f"""
@@ -2960,9 +2860,7 @@ def q_ext_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected answer that never saw the ciphertext."""
     _ensure_importable(spark)
     ensure_pages_enc()
-    pages = _read_parallel(spark, PAGES_ENC_GLOB)
-    return pages.select("url", "html").mapInPandas(
-        _extract_flagship_batches, schema=_FLAGSHIP_SCHEMA)
+    return _flagship_rows(_read_parallel(spark, PAGES_ENC_GLOB))
 
 
 _ORACLE_PDF_ENCRYPTED = f"""
@@ -3057,33 +2955,6 @@ FROM n
 
 # -- span-structure digest (r4) -------------------------------------------------
 
-_SPANS_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("n_spans", T.LongType()),
-    T.StructField("spans_sha256", T.StringType()),
-    T.StructField("span_cover", T.LongType()),
-])
-
-
-def _spans_digest_batches(batches: Iterator[pd.DataFrame]) \
-        -> Iterator[pd.DataFrame]:
-    from .kernels.extract import extract_document, span_digest
-    for pdf in batches:
-        rows = []
-        for url, payload in zip(pdf["url"].tolist(),
-                                pdf["html"].tolist()):
-            spans = extract_document(url, payload)["spans"]
-            rows.append({
-                "url": url,
-                "n_spans": len(spans),
-                "spans_sha256": span_digest(spans),
-                "span_cover": sum(s["end"] - s["start"]
-                                  for s in spans),
-            })
-        yield pd.DataFrame(rows, columns=[f.name
-                                          for f in _SPANS_SCHEMA.fields])
-
-
 def q_ext_spans_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The span half of the byte-identity invariant: every page's FULL
     (start, end, kind) span sequence as a canonical sha256 + coverage
@@ -3091,9 +2962,17 @@ def q_ext_spans_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_spans alone can't catch a shifted offset; this can."""
     _ensure_importable(spark)
     ensure_pages()
-    pages = spark.read.parquet(PAGES_PATH).select("url", "html")
-    return pages.mapInPandas(_spans_digest_batches,
-                             schema=_SPANS_SCHEMA)
+    # kernels.extract.span_digest ('start:end:kind|...' sha256) redone
+    # in SQL: an independent twin of the golden generator's digest
+    digest = F.concat_ws("|", F.transform("spans", lambda sp: F.concat_ws(
+        ":", sp["start"].cast("string"), sp["end"].cast("string"),
+        sp["kind"])))
+    return _extract(spark.read.parquet(PAGES_PATH)).select(
+        "url", F.size("spans").cast("long").alias("n_spans"),
+        F.sha2(digest, 256).alias("spans_sha256"),
+        F.aggregate("spans", F.lit(0).cast("long"),
+                    lambda acc, sp: acc + sp["end"] - sp["start"])
+        .alias("span_cover"))
 
 
 _ORACLE_SPANS_DIGEST = f"""

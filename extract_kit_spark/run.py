@@ -250,6 +250,7 @@ def main(argv: list[str] | None = None) -> int:
         finally:
             if owns:
                 spark.stop()
+    from .manifest import KeyPlanMismatch
     from .pipeline import (reprocess_quarantined,
                            run_extraction_bucketed, run_extraction_scan)
     spark, owns = _cli_spark("extract-kit-run", args.master)
@@ -281,6 +282,9 @@ def main(argv: list[str] | None = None) -> int:
                 input_format=args.input_format)
         print(json.dumps(summary), flush=True)
         return 0
+    except KeyPlanMismatch as exc:
+        print(f"extract_kit_spark: error: {exc}", file=sys.stderr)
+        return 2
     finally:
         if owns:
             spark.stop()

@@ -60,7 +60,7 @@ def run_extraction_stream(spark: SparkSession, input_dir: str,
              .select("url", "warc_ts", "html")
              .withColumn("src_file", F.lit("stream")))
 
-    extracted = extract_stage(pages, profile, MAX_DOC_BYTES, "src_file")
+    extracted = extract_stage(pages, profile, MAX_DOC_BYTES)
 
     query = (extracted.writeStream
              .format("parquet")

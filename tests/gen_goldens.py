@@ -57,7 +57,7 @@ with open(out_path, "w") as f:
 print(f"wrote {len(goldens)} goldens to {out_path}")
 
 # -- flagship oracle registry: ALL fixture pages, exactly the flagship
-# query's columns (queries._FLAGSHIP_SCHEMA) + text_sha256, computed by
+# query's columns (queries._flagship_rows) + text_sha256, computed by
 # this single-process non-Spark loop. DuckDB reads this file as the
 # ext_flagship / ext_status_counts oracle, giving the driver a hard
 # byte-identity signal on the full extraction pipeline.

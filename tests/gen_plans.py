@@ -17,9 +17,10 @@ SF_DIR = "/root/testdata/sf0.001"
 # (query name, the property this plan is evidence for)
 SECTIONS = [
     ("ext_flagship",
-     "NO Exchange anywhere: payload bytes flow scan → MapInPandas → "
-     "sink untouched; ReadSchema carries only url+html (text/lang "
-     "pruned at the parquet scan)."),
+     "NO Exchange anywhere: payload bytes flow scan → MapInPandas "
+     "(pipeline.extract_stage, the job's own stage) → Project; "
+     "ReadSchema carries only url+warc_ts+html (text/lang pruned at "
+     "the parquet scan)."),
     ("ts_stats",
      "No Python node (no MapInPandas/EvalPython): every derived "
      "column is a whole-stage-codegen JVM expression."),

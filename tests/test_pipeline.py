@@ -274,6 +274,73 @@ def test_rerun_without_resume_keeps_lineage_exact(spark, tmp_path, layout):
     assert lineage.agg(F.sum("n_rows")).first()[0] == n_data
 
 
+@pytest.mark.parametrize("layout", ["scan", "bucketed"])
+def test_rerun_with_another_key_plan_is_refused(spark, tmp_path, layout):
+    """A manifest key (file-group or bucket id) only means something
+    under the plan that committed it. A job cut after one group and
+    rerun with another --n-groups/--n-buckets must raise, with or
+    without resume, instead of duplicating and losing rows; the rerun
+    under the recorded plan, at another commit_group_size, finishes
+    exactly."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    write_pages_dir(pages, 40, n_files=4)
+    # ``group`` is the bucketed layout's commit_group_size; the scan
+    # layout commits one file group at a time
+    if layout == "scan":
+        def run(size, group=2, **kw):
+            return run_extraction_scan(spark, pages, out, job_id="kp",
+                                       n_groups=size, **kw)
+        first, other, old, new = 2, 4, "file_groups=2:", "file_groups=4:"
+    else:
+        def run(size, group=2, **kw):
+            return run_extraction_bucketed(spark, pages, out, job_id="kp",
+                                           n_buckets=size,
+                                           commit_group_size=group, **kw)
+        first, other, old, new = 4, 6, "n_buckets=4", "n_buckets=6"
+    with pytest.raises(RuntimeError, match="after 1 groups"):
+        run(first, fail_after_groups=1)
+    for resume in (True, False):
+        with pytest.raises(ValueError) as err:
+            run(other, resume=resume)
+        assert old in str(err.value) and new in str(err.value)
+    summary = run(first, group=4)
+    assert summary["complete"] and summary["n_rows"] == 40
+    df = read_extractions(spark, out)
+    assert df.count() == 40
+    assert df.select("url").distinct().count() == 40
+
+
+def test_extract_stage_echoes_extra_columns(spark):
+    """The stage's contract: EXTRACTION_SCHEMA + bytes_in + every input
+    column other than url/warc_ts/html, in input order, with its input
+    type and values; with no extra column, just the first two."""
+    from pyspark.sql import types as T
+    from extract_kit_spark.pipeline import extract_stage
+    from extract_kit_spark.schemas import EXTRACTION_SCHEMA
+    rows = gen_pages(6)
+    for i, r in enumerate(rows):
+        r.pop("_kind")
+        r["n"], r["tag"] = i, f"t{i}"
+    pages = spark.createDataFrame(rows).select(
+        "url", "warc_ts", "html", F.col("n").cast("int"), "tag")
+    head = [(f.name, f.dataType) for f in EXTRACTION_SCHEMA.fields] \
+        + [("bytes_in", T.LongType())]
+    for extra in ([("n", T.IntegerType()), ("tag", T.StringType())], []):
+        out = extract_stage(pages.select("url", "warc_ts", "html",
+                                         *[c for c, _ in extra]),
+                            "auto", 1 << 20)
+        assert [(f.name, f.dataType) for f in out.schema.fields] \
+            == head + extra
+        got = out.collect()
+        assert sorted(r["url"] for r in got) \
+            == sorted(r["url"] for r in rows)
+        if extra:
+            assert {(r["url"], r["n"], r["tag"]) for r in got} \
+                == {(r["url"], r["n"], r["tag"]) for r in rows}
+
+
 def test_scan_layout_matches_bucketed_results(spark, pages_multi,
                                               extracted):
     """Both layouts produce the identical (url, extracted_text) set."""

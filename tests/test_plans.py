@@ -81,14 +81,7 @@ def test_mm_decode_and_audio_plans_have_no_shuffle(spark):
 def test_scan_extraction_plan_has_no_shuffle(spark):
     """The flagship dataflow (scan → mapInPandas) must not shuffle the
     payload bytes."""
-    from pyspark.sql import functions as F
-    from extract_kit_spark.queries import (_extract_flagship_batches,
-                                           _FLAGSHIP_SCHEMA)
-    ensure_pages()
-    pages = spark.read.parquet(PAGES_PATH).select("url", "html")
-    df = pages.mapInPandas(_extract_flagship_batches,
-                           schema=_FLAGSHIP_SCHEMA)
-    plan = _plan(df)
+    plan = _plan(QUERIES["ext_flagship"](spark, SF_DIR))
     assert "Exchange" not in plan
     assert "MapInPandas" in plan
 
