@@ -18,17 +18,14 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from extract_kit_spark.queries import (  # noqa: E402
-    QUERIES, ORACLES, ensure_pages, ensure_zipf_docs, ensure_url_log,
-    ensure_rep_docs, ensure_pii_docs, ensure_line_docs,
-    ensure_bench_items, ensure_pages_v2, ensure_pages_enc,
-    ensure_unicode_docs)
+    FIXTURES, QUERIES, ORACLES, fixture)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full extraction pipeline (detect → parse →
     boilerplate-strip → markdown-serialize → validate) over the
     deterministic synthetic Common-Crawl-style pages table."""
-    ensure_pages()
+    fixture("pages")
     return QUERIES["ext_flagship"](spark, "/root/testdata/sf0.001")
 
 
@@ -37,18 +34,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    # several oracles read shared fixture parquet directly (pages,
-    # zipf corpus, url log, repetition corpus) — materialize them
+    # oracles read the shared fixtures directly — materialize every one
     # here so the oracle side never depends on the Spark side having
     # run first
-    ensure_pages()
-    ensure_zipf_docs()
-    ensure_url_log()
-    ensure_rep_docs()
-    ensure_pii_docs()
-    ensure_line_docs()
-    ensure_bench_items()
-    ensure_pages_v2()
-    ensure_pages_enc()
-    ensure_unicode_docs()
+    for name in FIXTURES:
+        fixture(name)
     return dict(ORACLES)

@@ -31,20 +31,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "40000"))
-# cache key: bump when fixtures.py changes page bytes (v10: LZW/RLE
-# PDF filter variants — gen_page stays byte-deterministic)
-BENCH_PAGES_PATH = f"/tmp/ekspark_bench_pages_v10_{N_BENCH_PAGES}.parquet"
 
 
 def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
-def ensure_bench_pages(spark) -> str:
+def write_bench_pages(spark, path: str) -> None:
     """Generate the bench pages table distributed (gen_page is a pure
     function of (seed, i), so executors generate independently)."""
-    if os.path.exists(BENCH_PAGES_PATH):
-        return BENCH_PAGES_PATH
     from pyspark.sql import types as T
     from extract_kit_spark.fixtures import gen_page
 
@@ -67,12 +62,9 @@ def ensure_bench_pages(spark) -> str:
             yield pd.DataFrame(rows)
 
     log(f"generating {N_BENCH_PAGES} bench pages …")
-    tmp = BENCH_PAGES_PATH + ".tmpdir"
     (spark.range(N_BENCH_PAGES).repartition(64)
      .mapInPandas(gen, schema=schema)
-     .write.mode("overwrite").parquet(tmp))
-    os.replace(tmp, BENCH_PAGES_PATH)
-    return BENCH_PAGES_PATH
+     .write.parquet(path))
 
 
 def per_kind_microbench(n: int = 3000) -> list[tuple]:
@@ -100,9 +92,10 @@ def run_extraction_bench(spark, n_partitions: int | None = None) -> dict:
     """The scaling job: full kernel extraction over the bench pages via
     the no-shuffle scan plan (scan → mapInPandas → agg), exactly the
     run_extraction_scan dataflow. Returns docs/sec + elapsed."""
-    from extract_kit_spark.queries import _flagship_rows
-    ensure_bench_pages(spark)
-    pages = spark.read.parquet(BENCH_PAGES_PATH)
+    from extract_kit_spark.queries import _flagship_rows, materialize
+    pages = spark.read.parquet(materialize(
+        f"bench_pages_{N_BENCH_PAGES}",
+        lambda tmp: write_bench_pages(spark, tmp)))
     # warmup touches EVERY python worker (full plan over a sample) so
     # the timed run measures steady-state, not import cost
     _flagship_rows(pages.sample(0.05, seed=1)).count()

@@ -396,14 +396,15 @@ ENVELOPE_BUCKETS = 16
 def _pcm_ints(snd: dict) -> list[int]:
     """Channel-0 samples of a decoded WAV as plain ints on a common
     signed-16-bit-ish scale: 8-bit unsigned is centered (-128..127),
-    16-bit passes through, 32-bit float is clamped to [-1, 1] and
-    scaled by 32767 with truncation toward zero (NaN → 0) — every
+    16-bit passes through, 32- or 64-bit float is clamped to [-1, 1]
+    and scaled by 32767 with truncation toward zero (NaN → 0) — every
     step integer-or-IEEE-exact, so features are bit-deterministic."""
     import struct as _struct
     data, ch, bits = snd["samples"], snd["channels"], snd["bit_depth"]
     if snd["fmt_tag"] == "float":
-        n = len(data) // 4
-        vals = _struct.unpack(f"<{n}f", data)[::ch]
+        n = len(data) // (bits // 8)
+        code = "d" if bits == 64 else "f"
+        vals = _struct.unpack(f"<{n}{code}", data)[::ch]
         out = []
         for v in vals:
             if v != v:  # NaN

@@ -13,133 +13,178 @@ driver-provided documents/embeddings/events/TPC-H-ish tables.
 
 from __future__ import annotations
 
+import hashlib
 import os
-from collections.abc import Iterator
+import shutil
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .fixtures import write_pages_dir
+from . import fixtures as fx
 from .kernels.extract import MAX_DOC_BYTES
 from .ops import lm as lm_ops
 from .ops import (corpus, contamination, dedup, multimodal, pii,
                   similarity, textstats, weburl)
 from .pipeline import extract_stage
 
-# -- shared pages table (a DIRECTORY of part files so the no-shuffle
-# scan parallelizes; the DuckDB oracle reads the same files via glob) --------
+# -- fixture cache --------------------------------------------------------
+# Every cache entry (the fixtures below, the bench pages, the pyfiles
+# zip) lives at /tmp/ekspark_<name>_<digest>, where <digest> covers
+# every .py of this package: an edit to a writer, or to anything a
+# writer imports, lands under a new path with no tag to bump. Entries
+# of other digests are left alone; other checkouts may still read them.
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def _package_sources(pkg_dir: str) -> list[str]:
+    return sorted(os.path.join(root, fn)
+                  for root, _dirs, files in os.walk(pkg_dir)
+                  for fn in files if fn.endswith(".py"))
+
+
+def source_digest(pkg_dir: str) -> str:
+    """12-hex md5 over every .py under ``pkg_dir``: its relative path,
+    then its bytes — a module renamed without byte changes gets a new
+    digest too."""
+    digest = hashlib.md5()
+    for full in _package_sources(pkg_dir):
+        digest.update(os.path.relpath(full, pkg_dir).encode())
+        with open(full, "rb") as fh:
+            digest.update(fh.read())
+    return digest.hexdigest()[:12]
+
+
+SOURCE_DIGEST = source_digest(_PKG_DIR)
+
+
+def cache_path(name: str) -> str:
+    """``/tmp/ekspark_<name>_<digest>``; an extension in ``name`` stays
+    last (``pkg.zip`` -> ``/tmp/ekspark_pkg_<digest>.zip``)."""
+    stem, ext = os.path.splitext(name)
+    return f"/tmp/ekspark_{stem}_{SOURCE_DIGEST}{ext}"
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.lexists(path):
+        os.remove(path)
+
+
+def materialize(name: str, write: Callable[[str], object]) -> str:
+    """``cache_path(name)``, built once by ``write(tmp)``. Each process
+    writes its own ``<path>.tmp-<pid>`` and renames it into place, so a
+    half-written entry is never visible. A directory writer that loses
+    the race to another process drops its copy and returns the
+    published one; a file entry is replaced by the same bytes."""
+    path = cache_path(name)
+    if os.path.exists(path):
+        return path
+    tmp = f"{path}.tmp-{os.getpid()}"
+    _remove(tmp)
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:  # a directory another process published first
+            if not os.path.isdir(path):
+                raise
+    finally:
+        _remove(tmp)
+    return path
+
 
 N_PAGES = 1200
-PAGES_PATH = f"/tmp/ekspark_pages_v8_{N_PAGES}"  # v8: +lzw85/rle filter variants
-PAGES_GLOB = f"{PAGES_PATH}/*.parquet"
-
-
-def ensure_pages(path: str = PAGES_PATH, n: int = N_PAGES) -> str:
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_pages_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
-# -- Zipf documents corpus (r4): open ~4000-word vocabulary with
-# power-law document frequencies, so text-analysis queries run at
-# PRODUCTION thresholds (tfidf max_df 0.5) and language-ID is a real
-# prediction. The driver's `documents` table (31-word closed
-# vocabulary, read-only) stays the input of the original ts_* queries.
 N_ZIPF_DOCS = 4000
-ZIPF_DOCS_PATH = f"/tmp/ekspark_zipfdocs_v1_{N_ZIPF_DOCS}"
-ZIPF_DOCS_GLOB = f"{ZIPF_DOCS_PATH}/*.parquet"
+N_URLLOG = 6000
+N_REP_DOCS = 3000
+N_PII_DOCS = 2000
+N_LINE_DOCS = 3000
+N_BENCH_ITEMS = 400
+N_UNI_DOCS = 1500
 
 
-def ensure_zipf_docs(path: str = ZIPF_DOCS_PATH,
-                     n: int = N_ZIPF_DOCS) -> str:
-    from .fixtures import write_zipf_docs_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_zipf_docs_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
-# -- WARC archive fixture (r4): the pages table re-materialized as a
-# directory of member-per-record .warc.gz files (ISO 28500 / the
-# Common Crawl layout) by the single-process writer in warc.py — so
-# the Spark WARC SOURCE is oracled against the parquet table the
-# archive was independently written from, not against itself.
-WARC_PATH = f"/tmp/ekspark_warc_v1_{N_PAGES}"
-
-
-def ensure_warc(path: str = WARC_PATH, n: int = N_PAGES) -> str:
+def _write_warc(path: str) -> None:
+    """The pages table as member-per-record .warc.gz files (the Common
+    Crawl layout), written by warc.py's single-process writer, so the
+    Spark WARC source is oracled against the parquet table the archive
+    was independently written from."""
     import datetime as _dt
     from . import warc as _warc
-    from .fixtures import gen_pages
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        epoch = _dt.datetime(1970, 1, 1)
-        rows = []
-        for r in gen_pages(n):
-            td = r["warc_ts"] - epoch
-            rows.append({
-                "url": r["url"],
-                # integer micros from timedelta components — no float
-                "ts_micros": (td.days * 86_400 + td.seconds) * 1_000_000
-                             + td.microseconds,
-                "payload": r["html"],
-            })
-        _warc.write_warc_local(rows, tmp, records_per_file=300)
-        os.replace(tmp, path)
-    return path
+    epoch = _dt.datetime(1970, 1, 1)
+    rows = []
+    for r in fx.gen_pages(N_PAGES):
+        td = r["warc_ts"] - epoch
+        rows.append({
+            "url": r["url"],
+            # integer micros from timedelta components — no float
+            "ts_micros": (td.days * 86_400 + td.seconds) * 1_000_000
+                         + td.microseconds,
+            "payload": r["html"],
+        })
+    _warc.write_warc_local(rows, path, records_per_file=300)
 
 
-# -- HTML-metadata twin corpus (r4): html pages with canonical /
-# og:title / robots-noindex head tags + "?ref=alt" duplicate-variant
-# rows (fixtures.gen_meta_pages) -----------------------------------
-META_PAGES_PATH = f"/tmp/ekspark_metapages_v1_{N_PAGES}"
+# name -> writer(tmp path). Every fixture is a pure function of the
+# seed (fixtures.py); parquet fixtures are directories of part files so
+# scans parallelize, and each DuckDB oracle reads the identical bytes.
+FIXTURES: dict[str, Callable[[str], object]] = {
+    "pages": lambda p: fx.write_pages_dir(p, N_PAGES, n_files=8),
+    # open ~4000-word vocabulary with power-law document frequencies:
+    # text analysis at production thresholds (tfidf max_df 0.5)
+    "zipf_docs": lambda p: fx.write_zipf_docs_dir(p, N_ZIPF_DOCS,
+                                                  n_files=8),
+    "warc": _write_warc,
+    "meta_pages": lambda p: fx.write_meta_pages_dir(p, N_PAGES, n_files=8),
+    "robots": fx.write_robots_parquet,
+    "sitemaps": lambda p: fx.write_sitemaps_parquet(p, N_PAGES),
+    "url_log": lambda p: fx.write_url_log_dir(p, N_URLLOG, n_files=8),
+    "rep_docs": lambda p: fx.write_rep_docs_dir(p, N_REP_DOCS, n_files=8),
+    "pii_docs": lambda p: fx.write_pii_docs_dir(p, N_PII_DOCS, n_files=8),
+    "line_docs": lambda p: fx.write_line_docs_dir(p, N_LINE_DOCS,
+                                                  n_files=8),
+    "bench_items": lambda p: fx.write_bench_items_dir(
+        p, N_BENCH_ITEMS, n_docs=N_ZIPF_DOCS, n_files=4),
+    "pages_v2snap": lambda p: fx.write_pages_v2_dir(p, N_PAGES, n_files=8),
+    "pages_enc": lambda p: fx.write_pages_enc_dir(p, N_PAGES, n_files=4),
+    "unicode_docs": lambda p: fx.write_unicode_docs_dir(p, N_UNI_DOCS,
+                                                        n_files=4),
+}
+
+
+def fixture(name: str) -> str:
+    """Path of fixture ``name`` (a FIXTURES key), written on first use."""
+    return materialize(name, FIXTURES[name])
+
+
+PAGES_PATH = cache_path("pages")
+PAGES_GLOB = f"{PAGES_PATH}/*.parquet"
+ZIPF_DOCS_PATH = cache_path("zipf_docs")
+ZIPF_DOCS_GLOB = f"{ZIPF_DOCS_PATH}/*.parquet"
+WARC_PATH = cache_path("warc")
+META_PAGES_PATH = cache_path("meta_pages")
 META_PAGES_GLOB = f"{META_PAGES_PATH}/*.parquet"
-
-
-def ensure_meta_pages(path: str = META_PAGES_PATH,
-                      n: int = N_PAGES) -> str:
-    from .fixtures import write_meta_pages_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_meta_pages_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
-# -- robots.txt fixture (r4): one deterministic robots.txt per corpus
-# domain (fixtures.gen_robots_row) ----------------------------------
-# v3: +RFC 9309 cases — wildcard/'$' rules, named-'EkBot' groups,
-# stacked UA headers, decoy groups for other crawlers
-# v4: +global Sitemap: directives (60% of domains, some with two)
-ROBOTS_PATH = "/tmp/ekspark_robots_v4.parquet"
-
-
-def ensure_robots(path: str = ROBOTS_PATH) -> str:
-    from .fixtures import write_robots_parquet
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        write_robots_parquet(tmp)
-        os.replace(tmp, path)
-    return path
-
-
-# -- sitemap fixture (r4): one urlset per domain — ≤5 real page urls
-# + 2 novel ones; lastmod months cycle through 12 so known-but-stale
-# rows exist (fixtures.gen_sitemaps) -------------------------------
-SITEMAPS_PATH = "/tmp/ekspark_sitemaps_v1.parquet"
-
-
-def ensure_sitemaps(path: str = SITEMAPS_PATH) -> str:
-    from .fixtures import write_sitemaps_parquet
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        write_sitemaps_parquet(tmp, N_PAGES)
-        os.replace(tmp, path)
-    return path
+ROBOTS_PATH = cache_path("robots")
+SITEMAPS_PATH = cache_path("sitemaps")
+URLLOG_PATH = cache_path("url_log")
+URLLOG_GLOB = f"{URLLOG_PATH}/*.parquet"
+REP_DOCS_PATH = cache_path("rep_docs")
+REP_DOCS_GLOB = f"{REP_DOCS_PATH}/*.parquet"
+PII_DOCS_PATH = cache_path("pii_docs")
+PII_DOCS_GLOB = f"{PII_DOCS_PATH}/*.parquet"
+LINE_DOCS_PATH = cache_path("line_docs")
+LINE_DOCS_GLOB = f"{LINE_DOCS_PATH}/*.parquet"
+BENCH_ITEMS_PATH = cache_path("bench_items")
+BENCH_ITEMS_GLOB = f"{BENCH_ITEMS_PATH}/*.parquet"
+PAGES_V2_PATH = cache_path("pages_v2snap")
+PAGES_V2_GLOB = f"{PAGES_V2_PATH}/*.parquet"
+PAGES_ENC_PATH = cache_path("pages_enc")
+PAGES_ENC_GLOB = f"{PAGES_ENC_PATH}/*.parquet"
+UNI_DOCS_PATH = cache_path("unicode_docs")
+UNI_DOCS_GLOB = f"{UNI_DOCS_PATH}/*.parquet"
 
 
 def _t(sf_dir: str, name: str) -> str:
@@ -177,33 +222,15 @@ def _ensure_importable(spark: SparkSession) -> None:
         return
     except Exception:
         pass
-    import hashlib
-    import zipfile
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        for fn in sorted(files):
-            if fn.endswith(".py"):
-                sources.append(os.path.join(root, fn))
-    digest = hashlib.md5()
-    for full in sorted(sources):
-        # hash the repo-relative path too: a module renamed/moved
-        # without byte changes must produce a new digest, or a stale
-        # cached zip with the old layout would be reused
-        digest.update(os.path.relpath(full, pkg_dir).encode())
-        with open(full, "rb") as fh:
-            digest.update(fh.read())
-    # content-addressed zip name: edited source never collides with a
-    # stale cached archive from an earlier run
-    zip_path = f"/tmp/ekspark_pkg_{digest.hexdigest()[:12]}.zip"
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
+
+    def write_zip(tmp: str) -> None:
+        import zipfile
         with zipfile.ZipFile(tmp, "w") as z:
-            for full in sources:
-                rel = os.path.join("extract_kit_spark",
-                                   os.path.relpath(full, pkg_dir))
-                z.write(full, rel)
-        os.replace(tmp, zip_path)
+            for full in _package_sources(_PKG_DIR):
+                z.write(full, os.path.join(
+                    "extract_kit_spark", os.path.relpath(full, _PKG_DIR)))
+
+    zip_path = materialize("pkg.zip", write_zip)
     spark.sparkContext.addPyFile(zip_path)
     spark._ekspark_pyfiles = True
 
@@ -242,7 +269,7 @@ def q_ext_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-shuffle scan plan (scan → mapInPandas), the same
     pipeline.extract_stage that run_extraction_scan runs."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     return _flagship_rows(spark.read.parquet(PAGES_PATH))
 
 
@@ -288,7 +315,7 @@ def q_ext_flagship_handpinned(spark: SparkSession,
     expected files (one per fixture kind / PDF writer variant)."""
     import json as _json
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     with open(os.path.join(_HANDPINNED_DIR, "urls.json")) as fh:
         urls = [m["url"] for m in _json.load(fh)]
     pages = spark.read.parquet(PAGES_PATH).where(F.col("url").isin(urls))
@@ -304,7 +331,7 @@ JOIN read_text('{_HANDPINNED_DIR}/*.md') t
 
 
 def _pages_with_kind(spark: SparkSession) -> DataFrame:
-    ensure_pages()
+    fixture("pages")
     pages = spark.read.parquet(PAGES_PATH)
     h5 = F.hex(F.substring("html", 1, 5))
     kind = (F.when(F.length("html") == 0, "empty")
@@ -421,7 +448,7 @@ def q_ext_invoice_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexes over the raw html — a true dual implementation of the
     extraction semantics, incl. the V4 coherence check."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "UTF-8")
     return _invoice_rows(_pages_with_kind(spark)
@@ -466,7 +493,7 @@ def q_ext_pdf_invoice_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw content-stream literals — agreement proves the interpreter
     recovered the text."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "ISO-8859-1")
     return _invoice_rows(pages
@@ -517,7 +544,7 @@ def q_ext_pdf_invoice_fields_hex(spark: SparkSession,
     SQL, so agreement proves the interpreter's hex-string decode
     independently of the kernel."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "ISO-8859-1")
     return _invoice_rows(pages
@@ -564,7 +591,7 @@ def q_ext_pdf_receipt_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's strongest test asserts exactly these fields from a
     PDF — `pdf-processor/tests/receipt.test.ts:41-85`)."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     pages = spark.read.parquet(PAGES_PATH)
     s = F.decode(F.col("html"), "ISO-8859-1")
     receipts = (pages
@@ -711,7 +738,7 @@ def q_ts_stats_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~34% density, sentence punctuation — so stopword_ratio,
     punct_ratio, and lang_pred all carry real signal (the lang-ID
     accuracy floor is pinned in test_ops)."""
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     docs = _read_parallel(spark, ZIPF_DOCS_GLOB)
     return textstats.with_text_stats(docs).select(
         "doc_id", "n_tokens", "punct_ratio", "stopword_ratio",
@@ -726,7 +753,7 @@ def q_ts_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle interpolates the LITERAL same pattern strings into
     DuckDB (the pattern is restricted to the RE2 ∩ Java subset:
     no lookarounds, explicit whitespace class)."""
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     docs = _read_parallel(spark, ZIPF_DOCS_GLOB)
     return textstats.token_pieces(docs)
 
@@ -767,7 +794,7 @@ def q_ts_tfidf_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the ~4000-word tail scores normally. The original
     ts_tfidf_topk keeps the driver's documents table and its relaxed
     0.95 cut; this query is the threshold the op ships with."""
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     docs = _read_parallel(spark, ZIPF_DOCS_GLOB)
     return textstats.tfidf_top_terms(docs, k=5, min_df=2,
                                      max_df_ratio=0.5)
@@ -796,7 +823,7 @@ def q_ts_lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (count desc, bigram asc) -> deterministic under any
     partitioning; Spark executes the orderBy().limit() as
     TakeOrderedAndProject (distributed top-k, no global sort)."""
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     docs = _read_parallel(spark, ZIPF_DOCS_GLOB)
     return lm_ops.train_bigram_lm(docs, min_count=_LM_MIN_COUNT,
                                   top_k=_LM_TOP_K)
@@ -810,7 +837,7 @@ def q_ts_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     via fixed-point costs. Scale shape: broadcast LM join on the
     narrow explode, partial-aggregated groupBy(doc_id); the corpus
     scan is never shuffled with payload."""
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     docs = _read_parallel(spark, ZIPF_DOCS_GLOB)
     lm = lm_ops.train_bigram_lm(docs, min_count=_LM_MIN_COUNT,
                                 top_k=_LM_TOP_K)
@@ -1739,7 +1766,7 @@ def q_web_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase SALTED aggregation (ops/webstats.py); the oracle is the
     naive group-by — identical results, different shuffle shape."""
     from .ops.webstats import domain_stats_salted
-    ensure_pages()
+    fixture("pages")
     pages = spark.read.parquet(PAGES_PATH).select("url", "html")
     return domain_stats_salted(pages)
 
@@ -1761,7 +1788,7 @@ def q_web_domain_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), then a per-tier rollup. Row-identical to the unsalted
     join — the oracle computes the same answer with a plain SQL join."""
     from .ops import webstats
-    ensure_pages()
+    fixture("pages")
     pages = (spark.read.parquet(PAGES_PATH)
              .select("url",
                      F.length("html").cast("long").alias("n_bytes")))
@@ -1787,7 +1814,7 @@ def q_web_domain_join_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the session defaults; tests/test_plans.py asserts the final
     adaptive plan actually carries the skew=true split."""
     from .ops import webstats
-    ensure_pages()
+    fixture("pages")
     pages = (spark.read.parquet(PAGES_PATH)
              .select("url",
                      F.length("html").cast("long").alias("n_bytes")))
@@ -2211,34 +2238,6 @@ SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
 # pages-table contract (directory of parquet parts, DuckDB reads the
 # identical bytes via glob).
 
-N_URLLOG = 6000
-URLLOG_PATH = f"/tmp/ekspark_urllog_v1_{N_URLLOG}"
-URLLOG_GLOB = f"{URLLOG_PATH}/*.parquet"
-
-N_REP_DOCS = 3000
-REP_DOCS_PATH = f"/tmp/ekspark_repdocs_v1_{N_REP_DOCS}"
-REP_DOCS_GLOB = f"{REP_DOCS_PATH}/*.parquet"
-
-
-def ensure_url_log(path: str = URLLOG_PATH, n: int = N_URLLOG) -> str:
-    from .fixtures import write_url_log_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_url_log_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
-def ensure_rep_docs(path: str = REP_DOCS_PATH,
-                    n: int = N_REP_DOCS) -> str:
-    from .fixtures import write_rep_docs_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_rep_docs_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
 def q_web_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Url-level dedup over the variant crawl log: canonicalize
     (pure-expression regex chain, WholeStageCodegen) then group — one
@@ -2246,7 +2245,7 @@ def q_web_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle runs the LITERAL same regex chain in DuckDB (every pattern
     is RE2-safe by construction), so canonicalization semantics are
     pinned cross-engine, not just the grouping."""
-    ensure_url_log()
+    fixture("url_log")
     log = _read_parallel(spark, URLLOG_GLOB)
     return weburl.url_dedup(log)
 
@@ -2291,7 +2290,7 @@ def q_web_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reducers, then the global rank sees ≤ 16k rows/domain); the
     oracle is the naive single window, proving the salted plan is
     output-identical."""
-    ensure_url_log()
+    fixture("url_log")
     log = _read_parallel(spark, URLLOG_GLOB)
     canon = weburl.url_dedup(log).select(
         F.col("canonical_url").alias("url"),
@@ -2321,7 +2320,7 @@ def q_ts_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only tell). Sentence stats are pure row expressions; the
     bigram share is explode → two partial-agg groupBys — the hot path
     shuffles per-doc partial counts, never token streams."""
-    ensure_rep_docs()
+    fixture("rep_docs")
     docs = _read_parallel(spark, REP_DOCS_GLOB)
     return textstats.repetition_stats(docs)
 
@@ -2401,7 +2400,7 @@ def q_corpus_curate_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataflow. Scale shape: union of the pieces' shapes — trainer
     aggregations + broadcast-LM scoring join + one per-doc stats/gate
     projection; the corpus text crosses no Exchange."""
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     docs = _read_parallel(spark, ZIPF_DOCS_GLOB)
     model = lm_ops.train_bigram_lm(docs, min_count=_LM_MIN_COUNT,
                                    top_k=_LM_TOP_K)
@@ -2479,49 +2478,6 @@ FROM o
 
 # -- PII / line-dedup / decontamination (r4) ---------------------------------
 
-N_PII_DOCS = 2000
-PII_DOCS_PATH = f"/tmp/ekspark_piidocs_v1_{N_PII_DOCS}"
-PII_DOCS_GLOB = f"{PII_DOCS_PATH}/*.parquet"
-
-N_LINE_DOCS = 3000
-LINE_DOCS_PATH = f"/tmp/ekspark_linedocs_v1_{N_LINE_DOCS}"
-LINE_DOCS_GLOB = f"{LINE_DOCS_PATH}/*.parquet"
-
-N_BENCH_ITEMS = 400
-BENCH_ITEMS_PATH = f"/tmp/ekspark_benchitems_v2_{N_BENCH_ITEMS}"
-BENCH_ITEMS_GLOB = f"{BENCH_ITEMS_PATH}/*.parquet"
-
-
-def ensure_pii_docs(path: str = PII_DOCS_PATH,
-                    n: int = N_PII_DOCS) -> str:
-    from .fixtures import write_pii_docs_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_pii_docs_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
-def ensure_line_docs(path: str = LINE_DOCS_PATH,
-                     n: int = N_LINE_DOCS) -> str:
-    from .fixtures import write_line_docs_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_line_docs_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
-def ensure_bench_items(path: str = BENCH_ITEMS_PATH,
-                       n: int = N_BENCH_ITEMS) -> str:
-    from .fixtures import write_bench_items_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_bench_items_dir(tmp, n, n_docs=N_ZIPF_DOCS, n_files=4)
-        os.replace(tmp, path)
-    return path
-
-
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub over the injected-PII corpus: redacted text + staged
     per-class counts, pure regexp expressions (ops/pii.py). The
@@ -2529,7 +2485,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the redaction bytes — not just counts — are pinned cross-engine;
     recall vs the fixture's known injection counts is pinned in
     test_ops."""
-    ensure_pii_docs()
+    fixture("pii_docs")
     docs = _read_parallel(spark, PII_DOCS_GLOB)
     return pii.scrub(docs)
 
@@ -2570,7 +2526,7 @@ def q_ts_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing the duplicate-text ladder below line level. Runs over
     the line corpus, whose cross-doc boilerplate pool is the planted
     ground truth."""
-    ensure_line_docs()
+    fixture("line_docs")
     docs = _read_parallel(spark, LINE_DOCS_GLOB.rsplit("/", 1)[0])
     return textstats.dup_span_coverage(docs, n=DUP_SPAN_N,
                                        min_df=DUP_SPAN_MIN_DF)
@@ -2620,7 +2576,7 @@ def q_ts_dup_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilds the text independently (NOT EXISTS interval
     containment + ordered string_agg), so the rewrite is pinned
     byte-identically, not just counted."""
-    ensure_line_docs()
+    fixture("line_docs")
     docs = _read_parallel(spark, LINE_DOCS_GLOB.rsplit("/", 1)[0])
     return textstats.dup_span_strip(docs, n=DUP_SPAN_N,
                                     min_df=DUP_SPAN_MIN_DF)
@@ -2680,7 +2636,7 @@ def q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique suffixes): lines in > LINE_MAX_DF distinct docs are
     removed everywhere, survivors reassembled in order. Oracle
     recomputes hot lines in SQL and filters each doc's line array."""
-    ensure_line_docs()
+    fixture("line_docs")
     docs = _read_parallel(spark, LINE_DOCS_GLOB)
     return dedup.line_dedup(docs, max_doc_freq=LINE_MAX_DF)
 
@@ -2716,8 +2672,8 @@ def q_contamination_8gram(spark: SparkSession,
     sf; the driver documents table differs between sf dirs and can't
     anchor cross-sf goldens). Recovery of exactly the planted pairs is
     pinned in test_ops."""
-    ensure_zipf_docs()
-    ensure_bench_items()
+    fixture("zipf_docs")
+    fixture("bench_items")
     docs = _read_parallel(spark, ZIPF_DOCS_GLOB)
     bench = _read_parallel(spark, BENCH_ITEMS_GLOB)
     return contamination.ngram_overlap(docs, bench, n=CONTAM_N)
@@ -2752,28 +2708,14 @@ FROM h JOIN sz USING (bench_id)
 """
 
 
-PAGES_V2_PATH = f"/tmp/ekspark_pages_v2snap_{N_PAGES}"
-PAGES_V2_GLOB = f"{PAGES_V2_PATH}/*.parquet"
-
-
-def ensure_pages_v2(path: str = PAGES_V2_PATH,
-                    n: int = N_PAGES) -> str:
-    from .fixtures import write_pages_v2_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_pages_v2_dir(tmp, n, n_files=8)
-        os.replace(tmp, path)
-    return path
-
-
 def q_web_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-crawl snapshot diff over the pages table and its
     one-cycle-later twin (deterministic per-url fates: 5% gone, ~9%
     changed, 5% added): the pass that shrinks a 10^12-url recrawl to
     re-extracting only the changed slice. Payloads are digested
     map-side; the full-outer join moves (url, digest, ts) only."""
-    ensure_pages()
-    ensure_pages_v2()
+    fixture("pages")
+    fixture("pages_v2snap")
     old = _read_parallel(spark, PAGES_GLOB)
     new = _read_parallel(spark, PAGES_V2_GLOB)
     return weburl.crawl_diff(old, new)
@@ -2835,21 +2777,6 @@ WHERE t.bucket < r.keep_rate * 10000
 """
 
 
-# v2: +AESV2 variant in the RC4-40/RC4-128/AES cycle
-PAGES_ENC_PATH = f"/tmp/ekspark_pages_enc_v2_{N_PAGES}"
-PAGES_ENC_GLOB = f"{PAGES_ENC_PATH}/*.parquet"
-
-
-def ensure_pages_enc(path: str = PAGES_ENC_PATH,
-                     n: int = N_PAGES) -> str:
-    from .fixtures import write_pages_enc_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_pages_enc_dir(tmp, n, n_files=4)
-        os.replace(tmp, path)
-    return path
-
-
 def q_ext_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full extraction over the ENCRYPTED-PDF twins (standard
     security handler, cycling RC4-40 R2 / RC4-128 R3 / AES-128 AESV2,
@@ -2859,7 +2786,7 @@ def q_ext_pdf_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical text (sha256), spans, title and status, against an
     expected answer that never saw the ciphertext."""
     _ensure_importable(spark)
-    ensure_pages_enc()
+    fixture("pages_enc")
     return _flagship_rows(_read_parallel(spark, PAGES_ENC_GLOB))
 
 
@@ -2881,7 +2808,7 @@ def q_web_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     host rule blocks one hot domain exactly, and hot-portal traffic
     passes — suffix-chain explode → broadcast equality join, never a
     regex scan per rule."""
-    ensure_pages()
+    fixture("pages")
     pages = _read_parallel(spark, PAGES_GLOB).select("url")
     blocked = spark.createDataFrame([(r,) for r in BLOCK_RULES],
                                     "suffix string")
@@ -2910,21 +2837,6 @@ FROM p LEFT JOIN h USING (url)
 """
 
 
-N_UNI_DOCS = 1500
-UNI_DOCS_PATH = f"/tmp/ekspark_unidocs_v1_{N_UNI_DOCS}"
-UNI_DOCS_GLOB = f"{UNI_DOCS_PATH}/*.parquet"
-
-
-def ensure_unicode_docs(path: str = UNI_DOCS_PATH,
-                        n: int = N_UNI_DOCS) -> str:
-    from .fixtures import write_unicode_docs_dir
-    if not os.path.isdir(path):
-        tmp = path + ".tmp"
-        write_unicode_docs_dir(tmp, n, n_files=4)
-        os.replace(tmp, path)
-    return path
-
-
 def q_ts_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode canonicalization over the unicode-mess corpus (NFD
     accents, C0 controls, tab/doubled whitespace; 1/4 of docs already
@@ -2932,7 +2844,7 @@ def q_ts_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization exists — oracled against DuckDB's native
     nfc_normalize plus the literal same ASCII-class regexes."""
     _ensure_importable(spark)
-    ensure_unicode_docs()
+    fixture("unicode_docs")
     docs = _read_parallel(spark, UNI_DOCS_GLOB)
     return textstats.normalize_text(docs)
 
@@ -2961,7 +2873,7 @@ def q_ext_spans_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, matched against the committed non-Spark golden registry —
     n_spans alone can't catch a shifted offset; this can."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     # kernels.extract.span_digest ('start:end:kind|...' sha256) redone
     # in SQL: an independent twin of the golden generator's digest
     digest = F.concat_ws("|", F.transform("spans", lambda sp: F.concat_ws(
@@ -2989,11 +2901,11 @@ def q_warc_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     member-per-record parse (warc.read_warc). url / timestamp / HTTP
     status / byte count / payload digest must all survive the format
     round trip vs the parquet table the archive was INDEPENDENTLY
-    written from (single-process writer, ensure_warc)."""
+    written from (single-process writer, fixture("warc"))."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     from . import warc as _warc
-    df = _warc.read_warc(spark, ensure_warc())
+    df = _warc.read_warc(spark, fixture("warc"))
     return df.select(
         "url", "warc_ts", "status",
         F.length("payload").cast("long").alias("n_bytes"),
@@ -3015,9 +2927,9 @@ def q_warc_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (warc.warc_fetch) — the re-pull-a-sample path that reads 0.01% of
     the bytes of a 100 TB crawl instead of scanning it."""
     _ensure_importable(spark)
-    ensure_pages()
+    fixture("pages")
     from . import warc as _warc
-    path = ensure_warc()
+    path = fixture("warc")
     cdx = _warc.warc_cdx(spark, path).where(F.col("url").endswith("00"))
     df = _warc.warc_fetch(spark, path, cdx)
     return df.select(
@@ -3117,7 +3029,7 @@ def q_web_html_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Head-metadata extraction (weburl.html_meta): canonical href,
     og:title, robots-noindex — plan-side regexps over the meta twin
     corpus."""
-    ensure_meta_pages()
+    fixture("meta_pages")
     df = _read_parallel(spark, META_PAGES_PATH)
     return weburl.html_meta(df)
 
@@ -3144,7 +3056,7 @@ def q_web_canonical_collapse(spark: SparkSession,
     dropped, one kept url per canonical target, variant counts — the
     head-metadata dedup pass that removes whole duplicate families
     before any body shingling."""
-    ensure_meta_pages()
+    fixture("meta_pages")
     df = _read_parallel(spark, META_PAGES_PATH)
     return weburl.canonical_collapse(df)
 
@@ -3172,7 +3084,7 @@ def q_web_robots_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     formation (stacked UA headers, directive-terminated blocks) and
     group selection (named 'ekbot' groups override '*') via
     posexplode + window forward-fill — all plan-side."""
-    ensure_robots()
+    fixture("robots")
     return weburl.robots_rules(spark.read.parquet(ROBOTS_PATH))
 
 
@@ -3265,7 +3177,7 @@ def q_web_robots_sitemaps(spark: SparkSession,
     so the parse is one regexp over the exploded lines, distinct per
     domain. Feeds sitemap_urls/sitemap_frontier without out-of-band
     sitemap location config."""
-    ensure_robots()
+    fixture("robots")
     return weburl.robots_sitemaps(spark.read.parquet(ROBOTS_PATH))
 
 
@@ -3286,8 +3198,8 @@ def q_web_politeness_schedule(spark: SparkSession,
     the domain's delay (default 1 s) — politeness is a per-domain
     serial order by definition, so the window partition IS the unit of
     work."""
-    ensure_pages()
-    ensure_robots()
+    fixture("pages")
+    fixture("robots")
     pages = _read_parallel(spark, PAGES_PATH).select("url", "warc_ts")
     return weburl.politeness_schedule(
         pages, spark.read.parquet(ROBOTS_PATH))
@@ -3320,8 +3232,8 @@ def q_web_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     patterns compiled once per rule, per-domain (regex, length) arrays
     broadcast onto the pages scan, evaluated map-side with
     higher-order functions — zero exchange on the page table."""
-    ensure_pages()
-    ensure_robots()
+    fixture("pages")
+    fixture("robots")
     pages = _read_parallel(spark, PAGES_PATH).select("url")
     return weburl.robots_gate(pages,
                               spark.read.parquet(ROBOTS_PATH))
@@ -3354,7 +3266,7 @@ FROM ev
 def q_web_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sitemap urlset parser (weburl.sitemap_urls): positional
     loc/lastmod zip, plan-side."""
-    ensure_sitemaps()
+    fixture("sitemaps")
     return weburl.sitemap_urls(spark.read.parquet(SITEMAPS_PATH))
 
 
@@ -3373,8 +3285,8 @@ def q_web_sitemap_frontier(spark: SparkSession,
     """Fetch frontier from sitemaps (weburl.sitemap_frontier): never-
     crawled urls ('new') + known urls whose lastmod postdates their
     crawl date ('stale'); skinny equality join, payload never read."""
-    ensure_pages()
-    ensure_sitemaps()
+    fixture("pages")
+    fixture("sitemaps")
     pages = _read_parallel(spark, PAGES_PATH).select("url", "warc_ts")
     return weburl.sitemap_frontier(
         spark.read.parquet(SITEMAPS_PATH), pages)
@@ -3405,9 +3317,9 @@ def q_web_crawl_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     sitemap frontier → robots gate → politeness schedule, oracled as
     ONE chained SQL statement — proof the operators compose without
     semantic drift."""
-    ensure_pages()
-    ensure_robots()
-    ensure_sitemaps()
+    fixture("pages")
+    fixture("robots")
+    fixture("sitemaps")
     pages = _read_parallel(spark, PAGES_PATH).select("url", "warc_ts")
     return weburl.crawl_plan(
         spark.read.parquet(SITEMAPS_PATH), pages,

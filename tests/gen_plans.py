@@ -166,9 +166,8 @@ def main() -> None:
     # final plan rather than the static explain.
     from pyspark.sql import functions as F
     from extract_kit_spark.ops import webstats
-    from extract_kit_spark.queries import ensure_pages, PAGES_PATH
-    ensure_pages()
-    pages = (spark.read.parquet(PAGES_PATH)
+    from extract_kit_spark.queries import fixture
+    pages = (spark.read.parquet(fixture("pages"))
              .select("url",
                      F.length("html").cast("long").alias("n_bytes")))
     facts = pages.withColumn("domain", webstats.domain_of(F.col("url")))

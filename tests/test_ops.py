@@ -556,9 +556,9 @@ def test_zipf_corpus_statistics_and_langid(spark):
     from extract_kit_spark.fixtures import gen_zipf_doc
     from extract_kit_spark.ops.textstats import with_text_stats
     from extract_kit_spark.queries import (ZIPF_DOCS_GLOB, N_ZIPF_DOCS,
-                                           ensure_zipf_docs)
+                                           fixture)
     assert gen_zipf_doc(123) == gen_zipf_doc(123)
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     docs = spark.read.parquet(ZIPF_DOCS_GLOB)
     assert docs.count() == N_ZIPF_DOCS
     df_counts = (docs
@@ -684,8 +684,8 @@ def test_rep_corpus_separates_template_docs(spark):
     dup_sent_frac, natural zipf docs near zero — so a gate at 0.3
     classifies ≥95% of both sides correctly."""
     from extract_kit_spark.ops.textstats import repetition_stats
-    from extract_kit_spark.queries import (REP_DOCS_GLOB, ensure_rep_docs)
-    ensure_rep_docs()
+    from extract_kit_spark.queries import (REP_DOCS_GLOB, fixture)
+    fixture("rep_docs")
     docs = spark.read.parquet(REP_DOCS_GLOB)
     j = (repetition_stats(docs)
          .join(docs.select("doc_id", "source"), "doc_id"))
@@ -730,9 +730,8 @@ def test_pii_scrub_finds_exactly_the_injections(spark):
     accidental digits/addresses), and the clean text must contain no
     residual matches (idempotence: scrub(scrub(x)) == scrub(x))."""
     from extract_kit_spark.ops.pii import scrub
-    from extract_kit_spark.queries import (PII_DOCS_GLOB,
-                                           ensure_pii_docs)
-    ensure_pii_docs()
+    from extract_kit_spark.queries import (PII_DOCS_GLOB, fixture)
+    fixture("pii_docs")
     docs = spark.read.parquet(PII_DOCS_GLOB)
     got = scrub(docs).join(
         docs.select("doc_id", "n_emails_true", "n_phones_true",
@@ -765,8 +764,8 @@ def test_line_dedup_removes_exactly_boilerplate(spark):
                                             _boiler_line)
     from extract_kit_spark.ops.dedup import line_dedup
     from extract_kit_spark.queries import (LINE_DOCS_GLOB, N_LINE_DOCS,
-                                           ensure_line_docs)
-    ensure_line_docs()
+                                           fixture)
+    fixture("line_docs")
     pool = {_boiler_line(k) for k in range(N_BOILER_LINES)}
     docs = spark.read.parquet(LINE_DOCS_GLOB)
     got = {r["doc_id"]: r for r in
@@ -791,12 +790,10 @@ def test_contamination_recovers_planted_spans(spark):
     reach overlap_frac 1.0. The hash_grams production path returns
     the identical pair set."""
     from extract_kit_spark.ops.contamination import ngram_overlap
-    from extract_kit_spark.queries import (BENCH_ITEMS_GLOB,
-                                           ZIPF_DOCS_GLOB,
-                                           ensure_bench_items,
-                                           ensure_zipf_docs)
-    ensure_zipf_docs()
-    ensure_bench_items()
+    from extract_kit_spark.queries import (BENCH_ITEMS_GLOB, ZIPF_DOCS_GLOB,
+                                           fixture)
+    fixture("zipf_docs")
+    fixture("bench_items")
     docs = spark.read.parquet(ZIPF_DOCS_GLOB)
     bench = spark.read.parquet(BENCH_ITEMS_GLOB)
     out = ngram_overlap(docs, bench, n=8).collect()
@@ -820,13 +817,12 @@ def test_crawl_diff_statuses_match_planted_fates(spark):
     """The v2 snapshot plants deterministic per-url fates; crawl_diff
     must label every url exactly: i%20==7 gone, else i%10==3 changed,
     i>=N added, rest unchanged — and cardinality is |v1 ∪ v2| urls."""
-    from extract_kit_spark.queries import (PAGES_GLOB, PAGES_V2_GLOB,
-                                           N_PAGES, ensure_pages,
-                                           ensure_pages_v2)
+    from extract_kit_spark.queries import (PAGES_GLOB, PAGES_V2_GLOB, N_PAGES,
+                                           fixture)
     from extract_kit_spark.ops.weburl import crawl_diff
     from extract_kit_spark.fixtures import gen_page
-    ensure_pages()
-    ensure_pages_v2()
+    fixture("pages")
+    fixture("pages_v2snap")
     old = spark.read.parquet(PAGES_GLOB)
     new = spark.read.parquet(PAGES_V2_GLOB)
     got = {r["url"]: r for r in crawl_diff(old, new).collect()}
@@ -944,9 +940,8 @@ def test_unicode_corpus_normalize_separates_dirty_docs(spark):
     """On the unicode-mess fixture, every i%4==0 doc is clean
     (changed=false) and the dirty majority actually changes."""
     from extract_kit_spark.ops.textstats import normalize_text
-    from extract_kit_spark.queries import (UNI_DOCS_GLOB, N_UNI_DOCS,
-                                           ensure_unicode_docs)
-    ensure_unicode_docs()
+    from extract_kit_spark.queries import (UNI_DOCS_GLOB, N_UNI_DOCS, fixture)
+    fixture("unicode_docs")
     docs = spark.read.parquet(UNI_DOCS_GLOB)
     got = {r["doc_id"]: r["changed"]
            for r in normalize_text(docs).collect()}
@@ -1308,14 +1303,12 @@ def test_curate_lm_gate_is_binding_and_subset(spark):
     """The composed LM curation: output is a subset of the plain
     quality gate, the LM cut removes a non-empty set, and every
     survivor satisfies both thresholds."""
-    from extract_kit_spark.queries import (LM_MAX_AVG_COST_MICRO,
-                                           MIN_QUALITY, QUERIES,
-                                           ensure_zipf_docs,
-                                           ZIPF_DOCS_GLOB)
+    from extract_kit_spark.queries import (LM_MAX_AVG_COST_MICRO, MIN_QUALITY,
+                                           QUERIES, fixture, ZIPF_DOCS_GLOB)
     from extract_kit_spark.ops.textstats import with_text_stats
     from pyspark.sql import functions as F
 
-    ensure_zipf_docs()
+    fixture("zipf_docs")
     out = QUERIES["corpus_curate_lm"](spark, "/root/testdata/sf0.001")
     rows = out.collect()
     assert rows, "gate must not be empty"
@@ -1362,9 +1355,8 @@ def test_dup_span_coverage_separates_boiler_docs(spark):
     without score (almost always) 0 — the filterable signal."""
     from pyspark.sql import functions as F
     from extract_kit_spark.ops.textstats import dup_span_coverage
-    from extract_kit_spark.queries import (LINE_DOCS_GLOB,
-                                           ensure_line_docs)
-    ensure_line_docs()
+    from extract_kit_spark.queries import (LINE_DOCS_GLOB, fixture)
+    fixture("line_docs")
     docs = spark.read.parquet(LINE_DOCS_GLOB.rsplit("/", 1)[0])
     cov = dup_span_coverage(docs, n=5, min_df=2)
     j = docs.select("doc_id",
@@ -1409,9 +1401,8 @@ def test_dup_span_hash_key_path_identical(spark):
     per-doc coverage exactly on the line corpus."""
     from pyspark.sql import functions as F
     from extract_kit_spark.ops.textstats import dup_span_coverage
-    from extract_kit_spark.queries import (LINE_DOCS_GLOB,
-                                           ensure_line_docs)
-    ensure_line_docs()
+    from extract_kit_spark.queries import (LINE_DOCS_GLOB, fixture)
+    fixture("line_docs")
     docs = spark.read.parquet(LINE_DOCS_GLOB.rsplit("/", 1)[0])
     n, min_df = 5, 2
     want = {r["doc_id"]: (r["n_dup_grams"], r["dup_tokens"])
@@ -1622,9 +1613,8 @@ def test_curate_strip_dup_spans_stage(spark):
     signals."""
     from extract_kit_spark.ops import corpus, textstats
     from extract_kit_spark.queries import (DUP_SPAN_MIN_DF, DUP_SPAN_N,
-                                           LINE_DOCS_GLOB,
-                                           ensure_line_docs)
-    ensure_line_docs()
+                                           LINE_DOCS_GLOB, fixture)
+    fixture("line_docs")
     docs = spark.read.parquet(LINE_DOCS_GLOB.rsplit("/", 1)[0])
 
     fused = corpus.curate(docs, strip_dup_spans=True,
@@ -1803,6 +1793,26 @@ def test_thumbnail_resize_hand_cases(spark):
                                       for c in range(3)]
     assert out[2].decode_status == "unsupported"
     assert out[3].decode_status.startswith("corrupt")
+
+
+def test_pcm_ints_float64_matches_float32():
+    """64-bit float WAVs decode with their own sample width: samples
+    that float32 holds exactly give the same channel-0 ints whether
+    stored as 32- or 64-bit floats (stereo, so the stride counts)."""
+    import struct
+    from extract_kit_spark.kernels import wav
+    from extract_kit_spark.ops.multimodal import _pcm_ints
+
+    samples = [0.0, 0.5, -0.5, 0.25, -1.0, 1.0, 2.0, -3.0, 0.125,
+               -0.0625, 0.75, -0.875]
+    n = len(samples)
+    f32 = wav.decode_wav(wav.encode_wav(8000, 2, 32, struct.pack(
+        f"<{n}f", *samples), float_fmt=True))
+    f64 = wav.decode_wav(wav.encode_wav(8000, 2, 64, struct.pack(
+        f"<{n}d", *samples), float_fmt=True))
+    assert f64["n_samples"] == f32["n_samples"] == n // 2
+    assert _pcm_ints(f64) == _pcm_ints(f32) == \
+        [0, -16383, -32767, 32767, 4095, 24575]
 
 
 def test_audio_features_hand_case_and_query(spark):

@@ -6,7 +6,7 @@ no Python stage, and no shuffle in the scan-layout extraction plan."""
 import pytest
 
 from extract_kit_spark.pipeline import read_pages
-from extract_kit_spark.queries import (PAGES_PATH, QUERIES, ensure_pages)
+from extract_kit_spark.queries import (PAGES_PATH, QUERIES, fixture)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -21,7 +21,7 @@ def _plan(df) -> str:
 
 
 def test_pages_scan_prunes_columns(spark):
-    ensure_pages()
+    fixture("pages")
     plan = _plan(read_pages(spark, PAGES_PATH))
     # ReadSchema must not include the unused text/lang columns
     read_schema = [ln for ln in plan.splitlines()
@@ -121,8 +121,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
     import pyspark.sql.functions as F
     from extract_kit_spark.pipeline import (co_located_join,
                                             write_bucketed_table)
-    from extract_kit_spark.queries import PAGES_PATH, ensure_pages
-    ensure_pages()
+    from extract_kit_spark.queries import PAGES_PATH, fixture
+    fixture("pages")
     base = tmp_path_factory.mktemp("buck")
     pages = spark.read.parquet(PAGES_PATH)
     meta = pages.select("url", F.length("html").alias("n_bytes"))
@@ -150,7 +150,7 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     must equal the explicit-salt twin row-for-row."""
     from extract_kit_spark.ops import webstats
     from pyspark.sql import functions as F
-    ensure_pages()
+    fixture("pages")
     pages = (spark.read.parquet(PAGES_PATH)
              .select("url", F.length("html").cast("long")
                      .alias("n_bytes")))
@@ -205,7 +205,7 @@ def test_replay_pages_broadcasts_quarantine_keys(spark):
     post-filter per-url window over the already-filtered 1-2% slice."""
     from pyspark.sql import functions as F
     from extract_kit_spark.pipeline import _replay_pages
-    ensure_pages()
+    fixture("pages")
     bad = (spark.read.parquet(PAGES_PATH).select("url").limit(5)
            .localCheckpoint())
     df = _replay_pages(spark, PAGES_PATH, bad, n_bad=5,
@@ -223,8 +223,8 @@ def test_url_dedup_shuffles_skinny_only(spark):
     """Url dedup: no Python node, and exactly ONE hash Exchange — the
     groupBy(canonical_url) — so at scale the only shuffled bytes are
     (canonical, url, ts)."""
-    from extract_kit_spark.queries import ensure_url_log
-    ensure_url_log()
+    from extract_kit_spark.queries import fixture
+    fixture("url_log")
     plan = _plan(QUERIES["web_url_dedup"](spark, SF_DIR))
     assert "InPandas" not in plan and "EvalPython" not in plan
     # formatted explain lists each Exchange's partitioning in its
@@ -234,8 +234,8 @@ def test_url_dedup_shuffles_skinny_only(spark):
 
 def test_pii_scrub_is_single_pass_jvm(spark):
     """PII scrub: a pure projection — zero Exchange, zero Python."""
-    from extract_kit_spark.queries import ensure_pii_docs
-    ensure_pii_docs()
+    from extract_kit_spark.queries import fixture
+    fixture("pii_docs")
     plan = _plan(QUERIES["pii_scrub"](spark, SF_DIR))
     assert "InPandas" not in plan and "EvalPython" not in plan
     assert "hashpartitioning(" not in plan
@@ -254,8 +254,8 @@ def test_contamination_broadcasts_eval_side(spark):
     """Decontamination: the eval-item gram side and the per-item gram
     counts meet the corpus through BroadcastHashJoins — the training
     gram stream is never sort-merge shuffled."""
-    from extract_kit_spark.queries import ensure_bench_items
-    ensure_bench_items()
+    from extract_kit_spark.queries import fixture
+    fixture("bench_items")
     plan = _plan(QUERIES["contamination_8gram"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert plan.count("Join type: Inner") == 2
@@ -265,8 +265,8 @@ def test_contamination_broadcasts_eval_side(spark):
 def test_dedup_lines_anti_join_no_python(spark):
     """Line dedup: boilerplate removal is a LEFT ANTI equality join;
     no Python node anywhere."""
-    from extract_kit_spark.queries import ensure_line_docs
-    ensure_line_docs()
+    from extract_kit_spark.queries import fixture
+    fixture("line_docs")
     plan = _plan(QUERIES["dedup_lines"](spark, SF_DIR))
     assert "LeftAnti" in plan
     assert "InPandas" not in plan and "EvalPython" not in plan
@@ -276,8 +276,8 @@ def test_domain_cap_salted_window_first(spark):
     """Per-domain cap: the first (heavy) rank runs over
     (domain, __salt) so a hot domain is spread across reducers; the
     global rank only sees the pruned superset."""
-    from extract_kit_spark.queries import ensure_url_log
-    ensure_url_log()
+    from extract_kit_spark.queries import fixture
+    fixture("url_log")
     plan = _plan(QUERIES["web_domain_cap"](spark, SF_DIR))
     assert "__salt" in plan
     assert "InPandas" not in plan and "EvalPython" not in plan
@@ -288,9 +288,9 @@ def test_crawl_diff_digests_before_join(spark):
     (url, digest, ts) projections before any Exchange — and no
     Python node. The html payload column appears only inside scan
     ReadSchema / pre-shuffle projections, never past the join."""
-    from extract_kit_spark.queries import ensure_pages, ensure_pages_v2
-    ensure_pages()
-    ensure_pages_v2()
+    from extract_kit_spark.queries import fixture
+    fixture("pages")
+    fixture("pages_v2snap")
     plan = _plan(QUERIES["web_crawl_diff"](spark, SF_DIR))
     assert "FullOuter" in plan
     assert "InPandas" not in plan and "EvalPython" not in plan
@@ -355,8 +355,8 @@ def test_lm_score_broadcasts_model_no_payload_shuffle(spark):
     would shuffle per-bigram rows), and the per-doc fold is a 2-phase
     HashAggregate — the only hash Exchange carries (doc_id, partial
     sums)."""
-    from extract_kit_spark.queries import ensure_zipf_docs
-    ensure_zipf_docs()
+    from extract_kit_spark.queries import fixture
+    fixture("zipf_docs")
     plan = _plan(QUERIES["ts_lm_score"](spark, SF_DIR))
     assert "InPandas" not in plan and "EvalPython" not in plan
     assert "BroadcastHashJoin" in plan
@@ -372,8 +372,8 @@ def test_lm_train_topk_is_take_ordered_not_global_sort(spark):
     (per-partition top-k + driver merge), NOT a single-partition
     global Sort — the difference between a bounded trainer and a
     straggler at 100 TB vocab."""
-    from extract_kit_spark.queries import ensure_zipf_docs
-    ensure_zipf_docs()
+    from extract_kit_spark.queries import fixture
+    fixture("zipf_docs")
     plan = _plan(QUERIES["ts_lm_bigrams"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan
@@ -409,8 +409,8 @@ def test_manifest_single_skinny_aggregate(spark):
 def test_curate_lm_broadcasts_model(spark):
     """LM-gated curation keeps the scoring join broadcast — composing
     the gate must not demote the LM join to a payload shuffle."""
-    from extract_kit_spark.queries import ensure_zipf_docs
-    ensure_zipf_docs()
+    from extract_kit_spark.queries import fixture
+    fixture("zipf_docs")
     plan = _plan(QUERIES["corpus_curate_lm"](spark, SF_DIR))
     assert "InPandas" not in plan and "EvalPython" not in plan
     assert "BroadcastHashJoin" in plan
@@ -420,8 +420,8 @@ def test_dup_spans_jvm_only_skinny_shuffles(spark):
     """Dup-span coverage: no Python node; gram building rides the
     scan and every Exchange carries (gram) / (doc_id, pos) strings,
     never document text."""
-    from extract_kit_spark.queries import ensure_line_docs
-    ensure_line_docs()
+    from extract_kit_spark.queries import fixture
+    fixture("line_docs")
     plan = _plan(QUERIES["ts_dup_spans"](spark, SF_DIR))
     assert "InPandas" not in plan and "EvalPython" not in plan
     assert "Window" in plan
