@@ -1,36 +1,40 @@
 #!/usr/bin/env python
 """Bench harness.
 
-Main mode: runs the headline queries on local[$SPARK_GRAFT_CPUS] over
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) plus the extraction
-pipeline over a deterministic synthetic pages table, then prints ONE
-JSON line:
-    {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., "extraction": {...}, "scaling": {...}}
+Runs the extraction pipeline over a deterministic synthetic pages table
+and the HEADLINE registry queries over $SPARK_GRAFT_SF_DIR, all in one
+Spark session at local[$SPARK_GRAFT_CPUS]. Each query's time is the
+median of $SPARK_GRAFT_QUERY_REPS (default 3) interleaved reps.
 
-Scaling mode (the north rule's two-cluster-size evidence, run by
-default; skip with SPARK_GRAFT_SKIP_SCALING=1): re-runs the SAME
-extraction job in child processes at several core counts on the SAME
-input and reports docs/sec at N and 4N cores plus efficiency =
-(dps@4N / dps@N) / 4, for the pairs (2,8) and (8,32).
-Also refreshes BENCH.md with the scaling table.
+The per-query table goes to stderr and BENCH.md; the last stdout line
+is the compact JSON headline built by ``headline``:
+    {"metric": ..., "value": <sum of query medians, sec>, "unit": "sec",
+     "sf": ..., "cores": ..., "nproc": ..., "extraction_docs_per_sec": ...,
+     "query_median_s": ...}
 
-All diagnostics go to stderr; stdout carries exactly one JSON line.
+N→4N scaling (``scaling_eff``) and per-kind kernel times
+(``kernels.doc_ms.<kind>.p50``) are measured by ``perfbench/run.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.common import NPROC  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "40000"))
+QUERY_REPS = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "3"))
+BENCH_MD = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "BENCH.md")
+METRIC = "extract_kit_spark headline queries + extraction pipeline wall time"
 
 
 def log(msg: str) -> None:
@@ -67,30 +71,9 @@ def write_bench_pages(spark, path: str) -> None:
      .write.parquet(path))
 
 
-def per_kind_microbench(n: int = 3000) -> list[tuple]:
-    """Single-core per-document-kind kernel timings (pure Python, no
-    Spark) — directly comparable to the reference's published
-    per-document numbers (~80 ms/DOCX doc, ~2-5 s/PDF page)."""
-    from extract_kit_spark.fixtures import gen_page
-    from extract_kit_spark.kernels.extract import extract_document
-    pages = [gen_page(i) for i in range(n)]
-    by_kind: dict = {}
-    for p in pages:  # warmup + measure in one pass, best of 2 passes
-        extract_document(p["url"], p["html"])
-    for p in pages:
-        t0 = time.perf_counter()
-        extract_document(p["url"], p["html"])
-        dt = time.perf_counter() - t0
-        s, c = by_kind.get(p["_kind"], (0.0, 0))
-        by_kind[p["_kind"]] = (s + dt, c + 1)
-    return sorted(
-        ((k, 1000.0 * s / c, c / s) for k, (s, c) in by_kind.items()
-         if k != "broken"), key=lambda r: -r[1])
-
-
-def run_extraction_bench(spark, n_partitions: int | None = None) -> dict:
-    """The scaling job: full kernel extraction over the bench pages via
-    the no-shuffle scan plan (scan → mapInPandas → agg), exactly the
+def run_extraction_bench(spark) -> dict:
+    """Full kernel extraction over the bench pages via the no-shuffle
+    scan plan (scan → mapInPandas → agg), exactly the
     run_extraction_scan dataflow. Returns docs/sec + elapsed."""
     from extract_kit_spark.queries import _flagship_rows, materialize
     pages = spark.read.parquet(materialize(
@@ -109,261 +92,71 @@ def run_extraction_bench(spark, n_partitions: int | None = None) -> dict:
             "total_text_chars": int(agg["sum(text_len)"])}
 
 
-def scaling_child(cores: int) -> dict:
-    """Run the extraction bench in a child process at local[cores]."""
-    env = dict(os.environ)
-    env["SPARK_GRAFT_BENCH_PAGES"] = str(N_BENCH_PAGES)
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--scaling-run",
-         str(cores)],
-        capture_output=True, text=True, env=env, timeout=1800)
-    if proc.returncode != 0:
-        log(proc.stderr[-2000:])
-        raise RuntimeError(f"scaling child local[{cores}] failed")
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+def medians(times: dict[str, list[float]]) -> dict[str, float]:
+    return {name: round(statistics.median(ts), 3)
+            for name, ts in times.items()}
 
 
-def do_scaling_run(cores: int) -> None:
-    from extract_kit_spark.session import get_spark
-    spark = get_spark(master=f"local[{cores}]",
-                      app_name=f"ek-bench-scale-{cores}",
-                      shuffle_partitions=max(cores, 8))
-    res = run_extraction_bench(spark)
-    res["cores"] = cores
-    print(json.dumps(res), flush=True)
-    spark.stop()
+def headline(times: dict[str, list[float]], extraction: dict, sf: str,
+             cores: int, nproc: int) -> str:
+    """The last stdout line: ``value`` is the sum of the per-query
+    medians (ext_flagship included); the per-query table itself stays
+    out of it so the line remains a few hundred bytes."""
+    med = medians(times)
+    return json.dumps({
+        "metric": METRIC,
+        "value": round(sum(med.values()), 3),
+        "unit": "sec",
+        "sf": sf,
+        "cores": cores,
+        "nproc": nproc,
+        "extraction_docs_per_sec": extraction["docs_per_sec"],
+        "query_median_s": round(statistics.median(med.values()), 3),
+    })
 
 
-HISTORY_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH_HISTORY.json")
-
-
-def merge_history(extraction: dict, scaling: dict, queries: dict,
-                  per_kind: list) -> dict:
-    """Fold this run into the committed best-known steady state.
-
-    This box's throughput swings ~2-5x in multi-minute bursts
-    (hypervisor neighbors; BENCH.md documents the evidence), so any
-    single bench invocation samples the weather as much as the code.
-    The history keeps, per corpus signature (page count + total
-    extracted chars + sf dir — any fixture change invalidates it), the
-    BEST observed value of every metric across runs: the
-    least-interference estimate of the machine, which is the
-    reproducible quantity. BENCH.md reports both this run and the
-    best-known; the JSON line carries the current run as primary."""
-    sig = {"pages": N_BENCH_PAGES,
-           "chars": extraction["total_text_chars"], "sf": SF_DIR}
-    hist = {"sig": sig, "n_runs": 0, "extraction": None, "scaling": {},
-            "queries": {}, "per_kind": {}}
-    if os.path.exists(HISTORY_PATH):
-        try:
-            with open(HISTORY_PATH) as f:
-                old = json.load(f)
-            if old.get("sig") == sig:
-                hist = old
-        except (OSError, ValueError):
-            pass
-    hist["n_runs"] = hist.get("n_runs", 0) + 1
-    if (hist["extraction"] is None
-            or extraction["docs_per_sec"]
-            > hist["extraction"]["docs_per_sec"]):
-        hist["extraction"] = extraction
-    for key, run in scaling.get("runs", {}).items():
-        best = hist["scaling"].get(key)
-        if best is None or run["docs_per_sec"] > best["docs_per_sec"]:
-            hist["scaling"][key] = run
-    for name, sec in queries.items():
-        prev = hist["queries"].get(name)
-        if prev is None or sec < prev:
-            hist["queries"][name] = sec
-    for k, ms, dps in per_kind:
-        prev = hist["per_kind"].get(k)
-        if prev is None or ms < prev[0]:
-            hist["per_kind"][k] = [round(ms, 3), round(dps, 1)]
-    tmp = HISTORY_PATH + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(hist, f, indent=1, sort_keys=True)
-    os.replace(tmp, HISTORY_PATH)
-    return hist
-
-
-def best_scaling(hist: dict) -> dict:
-    """Scaling pairs recomputed from the best-known per-core runs."""
-    runs = hist.get("scaling", {})
-    out: dict = {"runs": runs}
-    if all(f"local{c}" in runs for c in (2, 8, 32)):
-        out["pairs"] = {
-            "2_to_8": round((runs["local8"]["docs_per_sec"]
-                             / runs["local2"]["docs_per_sec"]) / 4.0, 3),
-            "8_to_32": round((runs["local32"]["docs_per_sec"]
-                              / runs["local8"]["docs_per_sec"]) / 4.0, 3),
-        }
-    return out
-
-
-def write_bench_md(extraction: dict, scaling: dict,
-                   queries: dict, per_kind: list | None = None,
-                   hist: dict | None = None) -> None:
+def write_bench_md(path: str, times: dict[str, list[float]],
+                   extraction: dict, cores: int, nproc: int) -> None:
+    """BENCH.md from one run: every number in it was measured by the
+    run that wrote it."""
+    med = medians(times)
     lines = [
         "# BENCH — extract_kit_spark measured performance",
         "",
-        "Generated by `python bench.py`. The scaling table is the "
-        "north rule's two-cluster-size evidence: the same no-shuffle "
-        "extraction job on identical input at N vs 4N cores "
-        "(child processes, fresh JVMs, full-worker warmup); "
-        "efficiency = (docs/sec@4N / docs/sec@N) / 4. Because this "
-        "box's available throughput swings ~2-5x in multi-minute "
-        "hypervisor-noise bursts, every table also reports the BEST "
-        "value observed across all bench runs on the current corpus "
-        "(BENCH_HISTORY.json%s) — the least-interference estimate, "
-        "which is the reproducible quantity."
-        % (f", {hist['n_runs']} runs" if hist else ""),
+        f"Generated by one `python bench.py` run at local[{cores}] on a "
+        f"host with nproc={nproc}. Every number below was measured in "
+        "that run; a rerun replaces the whole file.",
+        "",
+        "N→4N core scaling (`scaling_eff`) and per-kind kernel "
+        "times (`kernels.doc_ms.<kind>.p50`) are measured by "
+        "`python3 perfbench/run.py`, the repo benchmark declared in "
+        "`BENCHMARK.json`.",
         "",
         "## Extraction throughput (byte-identical text per url)",
         "",
-        f"- input: {N_BENCH_PAGES} synthetic Common-Crawl-style pages "
-        f"(seeded, deterministic)",
-        f"- this run (local[{CPUS}]): "
-        f"**{extraction['docs_per_sec']} docs/sec** "
-        f"({extraction['elapsed_s']} s)",
-    ]
-    best_ext = (hist or {}).get("extraction")
-    if best_ext:
-        lines.append(
-            f"- best across runs: **{best_ext['docs_per_sec']} "
-            f"docs/sec** ({best_ext['elapsed_s']} s)")
-    bscal = best_scaling(hist) if hist else scaling
-    lines += [
+        f"- input: {extraction['docs']} synthetic Common-Crawl-style "
+        f"pages (seeded, deterministic), "
+        f"{extraction['total_text_chars']} extracted chars",
+        f"- **{extraction['docs_per_sec']} docs/sec** "
+        f"({extraction['elapsed_s']} s, one timed pass after a warmup "
+        "over a 5% sample)",
         "",
-        "## Scaling efficiency (N → 4N; best run per core count)",
+        f"## Per-query seconds ({os.path.basename(SF_DIR.rstrip('/'))})",
         "",
-        "| parallelism | docs/sec | elapsed (s) |",
+        "Median of the interleaved reps (A,B,C,A,B,C, so a burst of "
+        "host noise does not hit every rep of one query). "
+        "`ext_flagship` is the extraction pass above.",
+        "",
+        "| query | median | reps |",
         "|---|---|---|",
     ]
-    for s in sorted(bscal.get("runs", {}).values(),
-                    key=lambda r: r["cores"]):
-        lines.append(
-            f"| local[{s['cores']}] | {s['docs_per_sec']} | "
-            f"{s['elapsed_s']} |")
-    if bscal.get("pairs"):
-        lines += [""]
-        for pair, eff in bscal["pairs"].items():
-            a, b = pair.split("_to_")
-            mark = " (the N→4N evidence; target ≥ 0.8)" \
-                if pair == "2_to_8" else ""
-            lines.append(f"- **{a} → {b} cores: efficiency "
-                         f"{eff}**{mark}")
-        lines.append(
-            "- (per-core bests come from different weather windows, "
-            "so a ratio can exceed 1.0 when the low-N best was "
-            "sampled in a worse window — the criterion is ≥ 0.8)")
-        lines += [
-            "",
-            "Machine context: `python probe_mp_scaling.py` measures "
-            "the same pairs with PURE multiprocessing of the same "
-            "kernels (no Spark, no shuffle, zero coordination); a "
-            "pair that reads low there is bound by the host, not by "
-            "the Spark plan, which is coordination-free (scan → "
-            "mapInPandas, no shuffle, no barrier).",
-        ]
-    rates: list = []
-    if per_kind:
-        lines += [
-            "",
-            "## Per-kind kernel speed (single core, no Spark — "
-            "comparable to the reference's per-document claims)",
-            "",
-            "| doc kind | ms/doc | docs/sec/core | reference claim |",
-            "|---|---|---|---|",
-        ]
-        ref = {"docx_doc": "~80 ms/doc (single-threaded Bun)",
-               "pdf_doc": "~2,000-5,000 ms/page (AI-vision path)"}
-        best_kind = (hist or {}).get("per_kind", {})
-        for k, ms, dps in per_kind:
-            b = best_kind.get(k)
-            if b:
-                ms, dps = b
-            rates.append(dps)
-            lines.append(f"| {k} | {ms:.2f} | {dps:.0f} | "
-                         f"{ref.get(k, '—')} |")
+    for name, ts in times.items():
+        reps = ", ".join(f"{t:.3f}" for t in ts)
+        lines.append(f"| {name} | {med[name]} | {reps} |")
     lines += [
         "",
-        "Reference context (`BASELINE.md`): the reference publishes "
-        "~2–5 s/page for its AI-vision PDF path and ~80 ms/doc "
-        "single-threaded DOCX→Markdown (~12.5 docs/sec)."
-        + (" This engine's deterministic kernels run %.0f–%.0f "
-           "docs/sec/core by document kind (table above)."
-           % (min(rates), max(rates)) if rates else ""),
-        "",
-        "## Per-query seconds (sf dir: %s; 'this run' is the median "
-        "of 3 INTERLEAVED reps — A,B,C,A,B,C so a hypervisor noise "
-        "burst can't contaminate all reps of one query; 'best' is "
-        "across all bench runs on this corpus)" % SF_DIR, "",
-        "| query | this run | best |", "|---|---|---|"]
-    best_q = (hist or {}).get("queries", {})
-    for name, sec in queries.items():
-        lines.append(f"| {name} | {sec} | {best_q.get(name, sec)} |")
-    stress_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "STRESS.json")
-    if os.path.exists(stress_path):
-        with open(stress_path) as f:
-            st = json.load(f)
-        cc, pd_, pf = (st.get("direct_cc", {}),
-                       st.get("pipeline_distributed", {}),
-                       st.get("pipeline_driver_finish", {}))
-        sh = st.get("shuffle", {})
-        lines += [
-            "",
-            "## Scale/skew stress (STRESS.json — `python "
-            "stress_scale.py`, local[%s])" % st.get("cpus", "?"),
-            "",
-            "Adversarial 400k-doc corpus: a 10k-doc EXACT-duplicate "
-            "mega-cluster (one hot fingerprint key), 7,500 4-doc "
-            "near-dup star clusters (the Jaccard pair graph + "
-            "connected components), mixed-quality/lang unique tail. "
-            "Survivor accounting is asserted EXACTLY (1 hot survivor, "
-            "7,500 near survivors) so a silent wrong answer can't "
-            "pass as a perf number.",
-            "",
-            "| experiment | wall (s) | CC path | CC rounds | edges |",
-            "|---|---|---|---|---|",
-            "| curate_near 400k (driver-finish CC) | %s | %s | %s | %s |"
-            % (pf.get("wall_s"), pf.get("cc", {}).get("path"),
-               pf.get("cc", {}).get("rounds"),
-               pf.get("cc", {}).get("n_edges")),
-            "| curate_near 400k (forced distributed CC) | %s | %s | %s "
-            "| %s |"
-            % (pd_.get("wall_s"), pd_.get("cc", {}).get("path"),
-               pd_.get("cc", {}).get("rounds"),
-               pd_.get("cc", {}).get("n_edges")),
-            "| direct CC: 10k-diameter chain + 1M 2-cliques "
-            "(distributed, default bound) | %s | distributed | %s | %s |"
-            % (cc.get("distributed", {}).get("wall_s"),
-               cc.get("distributed", {}).get("rounds"),
-               cc.get("distributed", {}).get("n_edges")),
-            "| direct CC: same graph, driver union-find finish | %s | "
-            "local | — | %s |"
-            % (cc.get("driver_finish", {}).get("wall_s"),
-               cc.get("driver_finish", {}).get("n_edges")),
-            "",
-            "- pointer-jumping round bound holds at scale: %s rounds "
-            "on a diameter-10,000 chain ≤ log2(10^4)+2 ≈ 15.3 "
-            "(pinned in stress_scale.py and test_ops.py)"
-            % cc.get("distributed", {}).get("rounds"),
-            "- the bounded driver finish earns its place: %ss vs %ss "
-            "distributed on the same 2.02M-edge graph — and the "
-            "distributed loop remains correct and log-bounded when "
-            "the graph exceeds the driver bound"
-            % (cc.get("driver_finish", {}).get("wall_s"),
-               cc.get("distributed", {}).get("wall_s")),
-            "- shuffle footprint across the whole stress app: "
-            "%s MB written total, largest single stage %s MB — the "
-            "pair graph (90k edges) stays tiny relative to the corpus,"
-            " exactly the intended scale shape"
-            % (sh.get("shuffle_write_total_mb"),
-               sh.get("shuffle_write_max_stage_mb")),
-        ]
-    lines += [
+        f"- sum of medians: **{round(sum(med.values()), 3)} s**; "
+        f"median query: {round(statistics.median(med.values()), 3)} s",
         "",
         "## Plan hygiene (asserted by tests/test_plans.py)",
         "",
@@ -377,8 +170,7 @@ def write_bench_md(extraction: dict, scaling: dict,
         "(payload bytes are never shuffled)",
         "",
     ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH.md"), "w") as f:
+    with open(path, "w") as f:
         f.write("\n".join(lines))
 
 
@@ -416,10 +208,6 @@ HEADLINE = ("ext_invoice_fields", "ext_pdf_invoice_fields",
 
 
 def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--scaling-run":
-        do_scaling_run(int(sys.argv[2]))
-        return
-
     from extract_kit_spark.session import get_spark
     from extract_kit_spark.queries import QUERIES
 
@@ -430,93 +218,28 @@ def main() -> None:
     log("== extraction bench ==")
     extraction = run_extraction_bench(spark)
     log(json.dumps(extraction))
-    log("== per-kind kernel microbench ==")
-    per_kind = per_kind_microbench()
-    for k, ms, dps in per_kind:
-        log(f"{k}: {ms:.2f} ms/doc ({dps:.0f} docs/s/core)")
 
-    queries: dict[str, float] = {}
-    queries["ext_flagship"] = extraction["elapsed_s"]
-    # INTERLEAVED reps (A,B,C,A,B,C — not A,A,B,B): hypervisor noise
-    # on this box arrives in multi-second bursts, so back-to-back reps
-    # of one query share the same burst and best-of-2 still reports a
-    # contaminated number. Interleaving decorrelates each query's reps;
-    # the median of 3 discards a single noisy rep without letting one
-    # lucky rep understate steady-state the way min() can.
-    import statistics
-    reps_q = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "3"))
-    times: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for rep in range(reps_q):
-        log(f"== query rep {rep + 1}/{reps_q} ==")
+    # INTERLEAVED reps (A,B,C,A,B,C — not A,A,B,B): host noise arrives
+    # in multi-second bursts, so back-to-back reps of one query share
+    # the same burst. Interleaving decorrelates each query's reps; the
+    # median discards a single noisy rep without letting one lucky rep
+    # understate steady state the way min() can.
+    times: dict[str, list[float]] = {"ext_flagship":
+                                     [extraction["elapsed_s"]]}
+    times.update({name: [] for name in HEADLINE})
+    for rep in range(QUERY_REPS):
+        log(f"== query rep {rep + 1}/{QUERY_REPS} ==")
         for name in HEADLINE:
-            q = QUERIES[name]
             t0 = time.perf_counter()
-            df = q(spark, SF_DIR)
+            df = QUERIES[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             times[name].append(time.perf_counter() - t0)
-    for name in HEADLINE:
-        queries[name] = round(statistics.median(times[name]), 3)
-        log(f"{name}: {queries[name]}s (reps: "
-            f"{[round(t, 3) for t in times[name]]})")
     spark.stop()
 
-    scaling: dict = {}
-    if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        # this sandbox's throughput varies ~2x run-to-run (hypervisor
-        # neighbors): take BEST of R interleaved repetitions per core
-        # count — max ≈ the least-interference estimate of the machine
-        reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
-        log(f"== scaling runs (N vs 4N cores, best of {reps}) ==")
-        runs: dict = {}
-        for rep in range(reps):
-            # the N→4N evidence pair is (2, 8); local[32] is only the
-            # documented frequency-ceiling datapoint — one fewer rep
-            for cores in (2, 8) if rep == reps - 1 else (2, 8, 32):
-                r = scaling_child(cores)
-                if cores not in runs or r["docs_per_sec"] > \
-                        runs[cores]["docs_per_sec"]:
-                    runs[cores] = r
-                log(f"rep{rep} local[{cores}]: "
-                    f"{r['docs_per_sec']} docs/s")
-        scaling = {
-            "runs": {f"local{c}": r for c, r in runs.items()},
-            "pairs": {
-                "2_to_8": round((runs[8]["docs_per_sec"]
-                                 / runs[2]["docs_per_sec"]) / 4.0, 3),
-                "8_to_32": round((runs[32]["docs_per_sec"]
-                                  / runs[8]["docs_per_sec"]) / 4.0, 3),
-            },
-        }
-        scaling["efficiency"] = scaling["pairs"]["2_to_8"]
-        log(json.dumps(scaling))
-
-    hist = merge_history(extraction, scaling, queries, per_kind)
-    write_bench_md(extraction, scaling, queries, per_kind, hist)
-
-    total = round(sum(queries.values()), 3)
-    print(json.dumps({
-        "metric": "extract_kit_spark headline queries + extraction "
-                  "pipeline wall time",
-        "value": total,
-        "unit": "sec",
-        "queries": queries,
-        "sf": sf,
-        "extraction_docs_per_sec": extraction["docs_per_sec"],
-        "extraction": extraction,
-        "per_kind_ms_per_doc": {k: round(ms, 3)
-                                for k, ms, _ in per_kind},
-        "scaling": scaling,
-        # least-interference steady-state across all bench runs on
-        # this corpus (see BENCH.md methodology / BENCH_HISTORY.json)
-        "best": {
-            "bench_runs": hist["n_runs"],
-            "extraction_docs_per_sec":
-                hist["extraction"]["docs_per_sec"],
-            "queries": {n: hist["queries"].get(n, s)
-                        for n, s in queries.items()},
-            "scaling_pairs": best_scaling(hist).get("pairs", {}),
-        },
-    }), flush=True)
+    for name, sec in medians(times).items():
+        log(f"{name}: {sec}s (reps: {[round(t, 3) for t in times[name]]})")
+    write_bench_md(BENCH_MD, times, extraction, CPUS, NPROC)
+    print(headline(times, extraction, sf, CPUS, NPROC), flush=True)
 
 
 if __name__ == "__main__":

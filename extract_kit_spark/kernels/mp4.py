@@ -45,7 +45,7 @@ MAX_DEPTH = 16
 
 
 def _walk(payload: bytes, start: int, end: int, depth: int,
-          out: dict, budget: list[int]) -> None:
+          out: dict, budget: list[int], in_trak: bool = False) -> None:
     if depth > MAX_DEPTH:
         raise Mp4Error(f"container nesting beyond {MAX_DEPTH}")
     pos = start
@@ -98,9 +98,11 @@ def _walk(payload: bytes, start: int, end: int, depth: int,
         elif btype == b"trak":
             out.setdefault("tracks", []).append({})
             _walk(payload, pos + header, pos + size, depth + 1,
-                  out, budget)
+                  out, budget, in_trak=True)
         elif btype == b"tkhd":
-            if not out.get("tracks"):
+            # a tkhd outside any trak would overwrite the geometry of
+            # the last track walked
+            if not in_trak:
                 raise Mp4Error("tkhd outside trak")
             v = body[0] if body else 255
             # width/height are the LAST 8 bytes, 16.16 fixed point,
@@ -111,7 +113,7 @@ def _walk(payload: bytes, start: int, end: int, depth: int,
             out["tracks"][-1]["width"] = w >> 16
             out["tracks"][-1]["height"] = h >> 16
         elif btype == b"hdlr":
-            if out.get("tracks") and depth >= 2:
+            if in_trak:
                 if len(body) < 12:
                     raise Mp4Error("short hdlr")
                 out["tracks"][-1]["handler"] = \
@@ -120,7 +122,7 @@ def _walk(payload: bytes, start: int, end: int, depth: int,
             out["mdat_bytes"] = out.get("mdat_bytes", 0) + len(body)
         elif btype in _CONTAINERS:
             _walk(payload, pos + header, pos + size, depth + 1,
-                  out, budget)
+                  out, budget, in_trak)
         pos += size
 
 

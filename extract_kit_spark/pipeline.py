@@ -477,47 +477,6 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
             "now_ok": int(now_ok), "missing": int(n_missing)}
 
 
-def write_bucketed_table(df: DataFrame, table_name: str, path: str,
-                         n_buckets: int = 16, key: str = "url") -> None:
-    """Persist a DataFrame as a Spark BUCKETED+SORTED table: rows are
-    hash-partitioned into ``n_buckets`` files per write-partition and
-    sorted by ``key`` inside each bucket. The catalog records the
-    bucketing spec, so every later equi-join or aggregation on ``key``
-    between same-bucketed tables plans with ZERO Exchange (and zero
-    Sort) — the co-location amortizes one write-time shuffle across all
-    downstream joins. This is the 100 TB recipe for repeated
-    pages⋈extractions / pages⋈scores joins; on Iceberg the same spec is
-    a bucket partition transform."""
-    (df.write.format("parquet").mode("overwrite")
-       .bucketBy(n_buckets, key).sortBy(key)
-       .option("path", path)
-       .saveAsTable(table_name))
-
-
-def co_located_join(spark: SparkSession, left_table: str,
-                    right_table: str, key: str = "url",
-                    how: str = "inner") -> DataFrame:
-    """Equi-join two same-bucketed catalog tables. With matching bucket
-    specs Spark plans a SortMergeJoin whose children are bare bucketed
-    scans — no Exchange, no Sort (asserted by
-    test_bucketed_join_has_no_exchange). The merge hint only forbids
-    broadcasting the smaller side, which would mask the demonstration
-    (broadcast is the right plan when one side is tiny; bucketing is
-    the right plan when both sides are huge)."""
-    return (spark.table(left_table).hint("merge")
-            .join(spark.table(right_table), key, how))
-
-
-def filter_not_done(pages: DataFrame, done: DataFrame) -> DataFrame:
-    """URL-level resume filter (SURVEY.md §2.11 joins row): left_anti
-    join of the input against already-extracted urls. Used when the
-    completed set is NOT aligned to manifest groups (e.g. merging
-    outputs of a prior partial job from another layout). The done side
-    is a single pruned column; Spark broadcasts it when small, and AQE
-    picks SMJ when it isn't."""
-    return pages.join(done.select("url"), on="url", how="left_anti")
-
-
 def curate_extracted(spark: SparkSession, output_dir: str,
                      min_quality: float = 0.5,
                      langs: tuple[str, ...] = ("en",),

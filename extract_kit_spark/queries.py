@@ -1333,7 +1333,10 @@ def q_ann_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding arithmetic AND the all-pairs ranking in SQL, so the
     whole text→vector→neighbors path is hash-pinned."""
     docs = _read_parallel(spark, _t(sf_dir, "documents"))
-    emb = similarity.hash_embed(docs).where(F.col("n_grams") > 0)
+    # the oracle's sumsq > 0: n_grams > 0 is not the same test, since
+    # grams whose signed counts cancel give a zero vector
+    emb = similarity.hash_embed(docs).where(
+        F.exists("embedding", lambda x: x != 0))
     queries = emb.where(F.col("doc_id") < N_ANN_QUERIES)
     return similarity.cosine_topk(emb, queries, k=ANN_K,
                                   id_col="doc_id",

@@ -49,6 +49,7 @@ import gzip
 import hashlib
 import io
 import os
+import posixpath
 import re
 import uuid
 import zlib
@@ -339,6 +340,25 @@ MAX_ARCHIVE_BYTES = 2 << 30
 OVERSIZE_CONTENT_TYPE = "application/x-ek-oversize-archive"
 
 
+_URI_PREFIX = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?")
+
+
+def _uri_path(p: str) -> str:
+    """The path part of a URI ("file:/d", "file:///d", "hdfs://nn/d"
+    all give "/d"); a path without a scheme is returned unchanged."""
+    return _URI_PREFIX.sub("", p, count=1)
+
+
+def _scan_root(path: str) -> str:
+    """``path`` as binaryFile's ``path`` column spells it once the URI
+    prefix is stripped: a plain path is made absolute, a URI keeps only
+    its path part (os.path.abspath would glue the URI onto the cwd)."""
+    stripped = _uri_path(path)
+    if stripped == path:
+        return os.path.abspath(path)
+    return posixpath.normpath(stripped)
+
+
 def read_warc(spark: SparkSession, path: "str | list[str]",
               with_index: bool = True,
               max_archive_bytes: int = MAX_ARCHIVE_BYTES) -> DataFrame:
@@ -370,7 +390,7 @@ def read_warc(spark: SparkSession, path: "str | list[str]",
         # warc_file is the path RELATIVE to the scan root (equal to
         # the basename for flat layouts), so warc_fetch(root, cdx)
         # can reopen archives that live in subdirectories
-        root = os.path.abspath(path)
+        root = _scan_root(path)
         rel_expr = F.regexp_replace(
             F.col("path"),
             "^.*" + re.escape(root.rstrip("/")) + "/", "")
@@ -398,13 +418,9 @@ def read_warc(spark: SparkSession, path: "str | list[str]",
             rows = []
             for fpath, data in zip(pdf["path"].tolist(),
                                    pdf["content"].tolist()):
-                local = fpath
-                if local.startswith("file:"):
-                    local = local[5:]
-                    while local.startswith("//"):
-                        local = local[1:]
-                base = (os.path.relpath(local, root) if root
-                        else os.path.basename(local))
+                local = _uri_path(fpath)
+                base = (posixpath.relpath(local, root) if root
+                        else posixpath.basename(local))
                 for off, ln, rec in parse_warc_gz(bytes(data)):
                     if rec["warc_type"] != "response":
                         continue

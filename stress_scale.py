@@ -29,7 +29,8 @@ Shuffle totals come from the Spark UI REST API (local[32] driver at
 127.0.0.1:4040) — per-stage max and job total shuffle write bytes.
 
 Usage: python stress_scale.py [--docs 400000] [--cpus 32]
-Prints one JSON line; results are recorded in BENCH.md §scale-stress.
+Prints one JSON line; results are recorded in STRESS.json (that line,
+saved from a run).
 """
 
 from __future__ import annotations

@@ -1840,9 +1840,18 @@ def test_mp4_probe_roundtrip_and_typed_errors():
     # size==0 runs-to-end
     zero = p[:i] + struct.pack(">I", 0) + b"mdat" + bytes(500)
     assert mp4.probe_mp4(zero)["mdat_bytes"] == 500
-    # typed failures: no ftyp, truncation, missing moov, box-size lies
+    # a moov-level tkhd after the traks: would overwrite the last
+    # track's geometry
+    m = p.index(b"moov") - 4
+    moov_len, = struct.unpack(">I", p[m:m + 4])
+    stray_tkhd = mp4._box(b"tkhd", bytes(76) + struct.pack(">II", 7 << 16,
+                                                            7 << 16))
+    stray = (p[:m] + mp4._box(b"moov", p[m + 8:m + moov_len] + stray_tkhd)
+             + p[m + moov_len:])
+    # typed failures: no ftyp, truncation, missing moov, box-size lies,
+    # tkhd outside a trak
     for bad in (b"", b"\x00\x00\x00\x08free", p[:40],
-                p[:8] + b"\x00\x00\x00\x30moov"):
+                p[:8] + b"\x00\x00\x00\x30moov", stray):
         with pytest.raises(mp4.Mp4Error):
             mp4.probe_mp4(bad)
     rng = random.Random(5)

@@ -1680,6 +1680,44 @@ def test_hash_embed_properties(spark):
     assert a == b
 
 
+def test_ann_text_topk_drops_zero_vectors(spark, tmp_path):
+    """A text whose grams cancel in their shared bucket embeds as the
+    zero vector although n_grams > 0. ann_text_topk must drop such
+    rows, as the oracle's sumsq > 0 does: a batch holding k of them
+    scores k NaNs, which would crowd every real neighbor out of that
+    batch's partial top-k."""
+    import hashlib
+    import itertools
+    import string
+    from extract_kit_spark.ops import similarity
+    from extract_kit_spark.queries import QUERIES
+
+    def bucket_sign(g):
+        h = hashlib.md5(f"emb-v1:{g}".encode()).hexdigest()
+        return (int(h[:8], 16) % similarity.EMB_DIM,
+                1 - 2 * (int(h[8], 16) % 2))
+
+    n = similarity.EMB_NGRAM
+    text = next(
+        t for t in map("".join,
+                       itertools.product(string.ascii_lowercase,
+                                         repeat=n + 1))
+        if bucket_sign(t[:n])[0] == bucket_sign(t[1:])[0]
+        and bucket_sign(t[:n])[1] != bucket_sign(t[1:])[1])
+    docs = spark.createDataFrame(
+        [(100 + j, text) for j in range(20)]
+        + [(i, f"document number {i} about topic {i % 3}")
+           for i in range(8)], "doc_id long, text string")
+    zero = similarity.hash_embed(docs).where("doc_id = 100").first()
+    assert zero.n_grams == 2
+    assert all(x == 0.0 for x in zero.embedding)
+    docs.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    got = QUERIES["ann_text_topk"](spark, str(tmp_path)).collect()
+    assert sorted((r.query_id, r.rank) for r in got) == \
+        [(q, rank) for q in range(8) for rank in range(1, 6)]
+    assert all(r.neighbor_id < 8 for r in got)
+
+
 def test_curate_near_routes_converge(spark):
     """On the fixture documents corpus the embedding route (hash-embed
     cosine >= 0.95) recovers exactly the jaccard-0.8 pair set, so both

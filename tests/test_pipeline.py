@@ -359,18 +359,6 @@ def test_scan_layout_matches_bucketed_results(spark, pages_multi,
     assert hb.subtract(hs).count() == 0
 
 
-def test_url_level_anti_join_resume(spark, pages_path, extracted):
-    """filter_not_done removes exactly the already-extracted urls."""
-    from extract_kit_spark.pipeline import filter_not_done
-    out, _ = extracted
-    pages = spark.read.parquet(pages_path)
-    done = read_extractions(spark, out).limit(150).select("url").cache()
-    n_done = done.count()
-    remaining = filter_not_done(pages, done)
-    assert remaining.count() == N_ROWS - n_done
-    assert remaining.join(done, "url", "inner").count() == 0
-
-
 def test_oversize_cap_quarantines_without_parse(spark, tmp_path_factory):
     p = tmp_path_factory.mktemp("big") / "pages.parquet"
     write_pages_parquet(str(p), 60, oversize_every=7)  # kind 'broken'

@@ -114,34 +114,6 @@ def test_salted_join_plan_is_shuffle_join_on_salted_key(spark):
     assert "__salt" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
-    """Bucketed+sorted tables with matching specs join with ZERO
-    Exchange and ZERO Sort — write-time co-location replaces the
-    per-query shuffle (the repeated-join recipe at 100 TB)."""
-    import pyspark.sql.functions as F
-    from extract_kit_spark.pipeline import (co_located_join,
-                                            write_bucketed_table)
-    from extract_kit_spark.queries import PAGES_PATH, fixture
-    fixture("pages")
-    base = tmp_path_factory.mktemp("buck")
-    pages = spark.read.parquet(PAGES_PATH)
-    meta = pages.select("url", F.length("html").alias("n_bytes"))
-    langs = pages.select("url", "lang")
-    write_bucketed_table(meta, "t_meta_b", str(base / "meta"),
-                         n_buckets=8)
-    write_bucketed_table(langs, "t_langs_b", str(base / "langs"),
-                         n_buckets=8)
-    try:
-        joined = co_located_join(spark, "t_meta_b", "t_langs_b")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() == pages.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_meta_b")
-        spark.sql("DROP TABLE IF EXISTS t_langs_b")
-
-
 def test_aqe_skew_join_splits_hot_partition(spark):
     """The AQE-native skew twin: under AQE_SKEW_CONFS the Zipf join's
     final adaptive plan must carry the runtime skew split (the

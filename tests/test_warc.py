@@ -428,3 +428,29 @@ def test_read_warc_nested_dirs_and_null_want_ts(spark, tmp_path):
     assert len(rows) == 6
     assert rows["https://ex.com/p1"]["payload"] == \
         b"<html><body>doc 1</body></html>"
+
+
+def test_read_warc_uri_root_gives_relative_warc_file(spark, tmp_path):
+    """A scan root spelled as a file:// URI yields the same relative
+    warc_file values as the plain path, for parsed records and for
+    oversize quarantine rows alike."""
+    from extract_kit_spark import warc
+
+    rows = [{"url": f"https://ex.com/u{i}", "ts_micros": 0,
+             "payload": b"<html>x</html>", "content_type": "text/html",
+             "status": 200} for i in range(3)]
+    for seg in ("seg=0", "seg=1"):
+        nested = tmp_path / "archives" / "crawl=2025-08" / seg
+        nested.mkdir(parents=True)
+        warc.write_warc_local(rows, str(nested))
+    root = str(tmp_path / "archives")
+
+    def files(path, **kw):
+        df = warc.read_warc(spark, path, **kw)
+        return sorted(r.warc_file for r in df.select("warc_file").collect())
+
+    for kw in ({}, {"max_archive_bytes": 1}):
+        plain = files(root, **kw)
+        assert plain and all(f.startswith("crawl=2025-08/seg=")
+                             for f in plain), plain
+        assert files("file://" + root, **kw) == plain
