@@ -3,8 +3,9 @@
 
 Runs the extraction pipeline over a deterministic synthetic pages table
 and the HEADLINE registry queries over $SPARK_GRAFT_SF_DIR, all in one
-Spark session at local[$SPARK_GRAFT_CPUS]. Each query's time is the
-median of $SPARK_GRAFT_QUERY_REPS (default 3) interleaved reps.
+Spark session at local[$SPARK_GRAFT_CPUS] (default: the host's core
+count). Each query's time is the median of $SPARK_GRAFT_QUERY_REPS
+(default 3) interleaved reps.
 
 The per-query table goes to stderr and BENCH.md; the last stdout line
 is the compact JSON headline built by ``headline``:
@@ -29,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from perfbench.common import NPROC  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 N_BENCH_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "40000"))
 QUERY_REPS = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "3"))
 BENCH_MD = os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -1,4 +1,4 @@
-"""Checkpoint manifests + per-partition lineage (Iceberg-style, hand-rolled).
+"""Checkpoint manifest = per-partition lineage (Iceberg-style, hand-rolled).
 
 No Iceberg runtime jar is available in this sandbox (SURVEY.md §7.1), so
 the required commit-log semantics — exact resume, per-partition lineage,
@@ -10,14 +10,16 @@ real Iceberg catalog can be dropped in behind it unchanged.
 Layout under <output_dir>/ (pipeline._run_groups writes it):
     data/group=<g>/part-*.parquet      scan layout: one dir per file group
     data/p_bucket=<b>/part-*.parquet   bucketed layout: one dir per bucket
-    lineage/group-<g>/part-*.parquet   per commit group, overwritten on
-                                       rerun: one row per src_file (scan)
-                                       or per bucket (bucketed)
     _manifest.json                     commit log: job_id, n_buckets (the
                                        key count), key_plan (what the
                                        keys mean) and, per committed key
                                        (group id / bucket id), n_rows,
                                        n_ok, n_failed, bytes_in, checksum
+
+A key's entry IS its partition's lineage, aggregated from the written
+rows; there is no separate lineage/ table (Iceberg likewise keeps record
+counts in its manifests). Per-input-file provenance is the ``src_file``
+column of every scan-layout row.
 """
 
 from __future__ import annotations

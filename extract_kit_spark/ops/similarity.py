@@ -118,8 +118,8 @@ def hash_embed(df: DataFrame, id_col: str = "doc_id",
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                 id_col: str = "vec_id",
                 vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k by cosine for each query vector (self excluded).
-    Returns (query_id, neighbor_id, cosine, rank).
+    """Exact top-k by cosine for each query vector (self and zero-norm
+    vectors excluded). Returns (query_id, neighbor_id, cosine, rank).
 
     Scale shape: the query block (small by construction) is collected
     once and captured by a vectorized pandas scorer that runs over the
@@ -161,8 +161,13 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             S = np.zeros((C.shape[0], len(qids)))
             for j in range(C.shape[1]):
                 S = S + C[:, j][:, None] * Q[:, j][None, :]
-            S = S / (np.sqrt(_seq_sqnorm(C))[:, None] * qnorm[None, :])
-            S[nids[:, None] == qids[None, :]] = -np.inf  # self
+            cnorm = np.sqrt(_seq_sqnorm(C))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                S = S / (cnorm[:, None] * qnorm[None, :])
+            # self and zero-norm rows (either side) are never candidates:
+            # -inf sorts below every real score in the partial top-k
+            S[(nids[:, None] == qids[None, :]) | (cnorm[:, None] == 0)
+              | (qnorm[None, :] == 0)] = -np.inf
             keep_rows, keep_cols = [], []
             for qi in range(len(qids)):
                 col = S[:, qi]
@@ -174,7 +179,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             r = np.concatenate(keep_rows)
             c = np.concatenate(keep_cols)
             vals = S[r, c]
-            ok = np.isfinite(vals)  # drop masked self rows
+            ok = np.isfinite(vals)  # drop the masked rows
             yield pd.DataFrame({"qid": qids[c[ok]], "nid": nids[r[ok]],
                                 "cosine_raw": vals[ok]})
 

@@ -6,9 +6,9 @@ orchestrators (`core/vision/processor.ts:68-146` and
 
 One job loop (``_run_groups``), two layouts that only plan it. The
 manifest keys of a job are cut into fixed groups; for each group with
-uncommitted keys the loop runs plan → extract → write → lineage →
-commit over those keys only. Group ids are fixed slices of the full key
-range, so they never shift with what is already committed.
+uncommitted keys the loop runs plan → extract → write → commit over
+those keys only. Group ids are fixed slices of the full key range, so
+they never shift with what is already committed.
 
 ``run_extraction_scan`` (DEFAULT — the 100 TB path): NO shuffle. The
 extraction is a pure map, so the plan is scan → mapInPandas → write;
@@ -34,9 +34,10 @@ Shared scale design
   memory for MB docs. The registry's extraction queries
   (queries.q_ext_*) run this same stage and only project its output
   with Spark column expressions.
-- Incremental commit: one Spark action per group, atomic manifest
-  commit after each; a rerun does only uncommitted keys, and is
-  refused if its key plan differs from the recorded one. Writes are
+- Incremental commit: per group one data write and one aggregate
+  collect, then an atomic manifest commit; a rerun does only
+  uncommitted keys, and is refused if its key plan differs from the
+  recorded one. Writes are
   idempotent (per-group dir overwrite / dynamic partition overwrite),
   so a crash between write and commit never duplicates rows.
 - Straggler cap: payloads over ``max_doc_bytes`` are quarantined
@@ -44,8 +45,10 @@ Shared scale design
   reduction, `image-optimization.ts:117-147`).
 - Deterministic output: sortWithinPartitions(url) so reruns are
   byte-comparable (SURVEY.md §4.3).
-- Lineage from a column-pruned re-scan of written output (never caches
-  MB-size text columns), overwritten per group at lineage/group-<g>/.
+- Lineage is the manifest: one column-pruned aggregate over the written
+  rows of a group's keys (never caches MB-size text columns) gives each
+  key's entry (n_rows, n_ok, n_failed, bytes_in, checksum). Per-input-
+  file provenance stays on every data row as ``src_file``.
 """
 
 from __future__ import annotations
@@ -71,7 +74,7 @@ DEFAULT_TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 
 
 def _group_checksum() -> F.Column:
-    """Order-independent content checksum for a lineage group: XOR of
+    """Order-independent content checksum for a manifest key: XOR of
     per-row xxhash64("url:crc32(extracted_text)"). Commutative and
     associative → map-side partial aggregation, constant memory, any
     row order; equal row multisets ⇔ equal checksum (urls are unique
@@ -81,6 +84,30 @@ def _group_checksum() -> F.Column:
     10^12 rows."""
     return F.bit_xor(F.xxhash64(F.concat_ws(
         ":", F.col("url"), F.crc32("extracted_text")))).cast("string")
+
+
+def _commit_keys(spark: SparkSession, manifest: Manifest, part_col: str,
+                 keys: list[int], n_keys: int, key_plan: str) -> None:
+    """Commit one manifest entry per key of ``keys`` (= ``part_col``
+    values): one aggregate over the WRITTEN rows of those keys, one
+    collect. A key with no rows commits zeros and an empty checksum."""
+    rows = (spark.read.parquet(os.path.join(manifest.output_dir, "data"))
+            .where(F.col(part_col).isin(keys))
+            .groupBy(part_col)
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.sum(F.when(F.col("status") == "ok", 1)
+                       .otherwise(0)).alias("n_ok"),
+                 F.sum(F.when(F.col("status") != "ok", 1)
+                       .otherwise(0)).alias("n_failed"),
+                 F.sum("bytes_in").alias("bytes_in"),
+                 _group_checksum().alias("checksum"))
+            .collect())
+    empty = {"n_rows": 0, "n_ok": 0, "n_failed": 0, "bytes_in": 0,
+             "checksum": ""}
+    entries = {k: empty for k in keys}
+    for r in rows:
+        entries[r[part_col]] = {c: r[c] for c in empty}
+    manifest.commit(entries, n_keys, key_plan)
 
 
 def extract_stage(pages: DataFrame, profile: str,
@@ -167,16 +194,16 @@ def read_pages(spark: SparkSession, input_path: str,
 def _run_groups(spark: SparkSession, manifest: Manifest,
                 groups: list[list[int]],
                 frame_for_group: Callable[[int, list[int]], DataFrame],
-                part_col: str, lineage_col: str, key_plan: str,
+                part_col: str, key_plan: str,
                 profile: str, max_doc_bytes: int, resume: bool,
                 fail_after_groups: int | None,
                 fail_before_commit_group: int | None) -> dict:
     """The job loop of both layouts. ``groups[gid]`` is the fixed list
     of manifest keys (= ``part_col`` values) of group ``gid``; for each
     group with uncommitted keys: extract ``frame_for_group(gid, todo)``,
-    write it idempotently, aggregate lineage per ``lineage_col`` value
-    over the whole group from the written rows, overwrite
-    lineage/group-<gid>, and commit every key of the group. Returns the
+    write it idempotently, then commit every key of the group from one
+    aggregate over its written rows (``_commit_keys``). Two Spark
+    actions per group: the data write and one collect. Returns the
     summary fields both layouts share.
 
     ``key_plan`` names what the keys mean (the bucket count, or a
@@ -189,7 +216,6 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
     before its manifest commit (the crash window where idempotent
     re-writes matter)."""
     data_dir = os.path.join(manifest.output_dir, "data")
-    lineage_dir = os.path.join(manifest.output_dir, "lineage")
     manifest.check_plan(key_plan)
     done = manifest.committed_buckets() if resume else set()
     n_done_groups = 0
@@ -216,35 +242,8 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
             raise RuntimeError(
                 f"test hook: killed before commit of group {gid}")
 
-        lineage = (
-            spark.read.parquet(data_dir)
-            .where(F.col(part_col).isin(keys))
-            .groupBy(lineage_col)
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.when(F.col("status") == "ok", 1)
-                       .otherwise(0)).alias("n_ok"),
-                 F.sum(F.when(F.col("status") != "ok", 1)
-                       .otherwise(0)).alias("n_failed"),
-                 F.sum("bytes_in").alias("bytes_in"),
-                 _group_checksum().alias("checksum"))
-            .withColumn("job_id", F.lit(manifest.job_id))
-            .withColumn("group_id", F.lit(gid)))
-        rows = lineage.collect()
-        (lineage.write.mode("overwrite")
-         .parquet(os.path.join(lineage_dir, f"group-{gid}")))
-
-        # a lineage row is its own key when it is per partition
-        # (bucketed), else it belongs to the group's one key (scan)
-        by_key: dict = {k: [] for k in keys}
-        for r in rows:
-            by_key[r[part_col] if part_col == lineage_col else gid] \
-                .append(r)
-        manifest.commit(
-            {k: {**{c: int(sum(r[c] for r in rs))
-                    for c in ("n_rows", "n_ok", "n_failed", "bytes_in")},
-                 "checksum": "|".join(sorted(r["checksum"] for r in rs))}
-             for k, rs in by_key.items()},
-            sum(map(len, groups)), key_plan)
+        _commit_keys(spark, manifest, part_col, keys,
+                     sum(map(len, groups)), key_plan)
         n_done_groups += 1
         if fail_after_groups is not None \
                 and n_done_groups >= fail_after_groups:
@@ -306,7 +305,7 @@ def run_extraction_bucketed(spark: SparkSession,
     groups = [keys[i:i + commit_group_size]
               for i in range(0, n_buckets, commit_group_size)]
     run = _run_groups(spark, manifest, groups, frame_for_group,
-                      "p_bucket", "p_bucket", f"n_buckets={n_buckets}",
+                      "p_bucket", f"n_buckets={n_buckets}",
                       profile, max_doc_bytes, resume, fail_after_groups,
                       fail_before_commit_group)
     return {"job_id": job_id, "n_buckets": n_buckets, **run,
@@ -332,9 +331,10 @@ def run_extraction_scan(spark: SparkSession,
     wire exactly once (scan) and once more on write.
 
     Group g is a fixed slice of the sorted input-file list and its own
-    manifest key; its output lives in data/group=<g>/, lineage per
-    src_file. input_format="warc" runs the same protocol over a
-    directory of .warc.gz archives (one scan task per archive file).
+    manifest key; its output lives in data/group=<g>/, and every row
+    keeps its input file as ``src_file``. input_format="warc" runs the
+    same protocol over a directory of .warc.gz archives (one scan task
+    per archive file).
     Returns a summary dict; test hooks as in ``_run_groups``.
     """
     job_id = job_id or f"extract-{uuid.uuid4().hex[:8]}"
@@ -372,7 +372,7 @@ def run_extraction_scan(spark: SparkSession,
     manifest = Manifest(output_dir, job_id)
     run = _run_groups(spark, manifest,
                       [[g] for g in range(len(file_groups))],
-                      frame_for_group, "group", "src_file", plan,
+                      frame_for_group, "group", plan,
                       profile, max_doc_bytes, resume, fail_after_groups,
                       fail_before_commit_group)
     return {"job_id": job_id, "n_groups": len(file_groups), **run}
@@ -421,7 +421,9 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
     partition overwrite (surviving ok rows + replacement rows, same
     either-old-or-new crash semantics as the original write). Works on
     both layouts — rows keep their original partition (group /
-    p_bucket) so lineage dirs and resume state stay meaningful.
+    p_bucket), and the manifest entries of the rewritten keys are
+    re-committed from the new rows, so resume state and per-key counts
+    stay exact.
 
     Shuffle discipline: the quarantine key-set is tiny relative to the
     pages table (1-2% of urls, two skinny columns), so up to
@@ -472,6 +474,10 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
         raise RuntimeError(
             f"quarantine replay accounting mismatch: {n_bad} bad rows "
             f"but {n_fixed} replacements + {n_missing} carried")
+    state = Manifest(output_dir, None).load()
+    if state["job_id"] is not None:
+        _commit_keys(spark, Manifest(output_dir, state["job_id"]), pcol,
+                     parts, state["n_buckets"], state.get("key_plan"))
     now_ok = fixed.where(F.col("status") == "ok").count()
     return {"reprocessed": int(n_bad), "partitions": len(parts),
             "now_ok": int(now_ok), "missing": int(n_missing)}

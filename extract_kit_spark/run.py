@@ -83,7 +83,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         "n-gram-Jaccard inverted index (default) or "
                         "in-engine hash embeddings + cosine")
     p.add_argument("--output", required=True,
-                   help="output table dir (data/ + lineage/ + manifest)")
+                   help="output table dir (data/ + _manifest.json)")
     p.add_argument("--job-id", default=None,
                    help="stable id for resume (default: random)")
     p.add_argument("--profile", default="auto", choices=PROFILES)

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import types as T
 
@@ -35,6 +35,36 @@ PAGES_SCHEMA = T.StructType([
     T.StructField("text", T.StringType()),
     T.StructField("lang", T.StringType()),
 ])
+
+
+def _read(spark: SparkSession, schema: T.StructType, input_dir: str,
+          max_files_per_trigger: int | None):
+    """File-source parquet stream over ``input_dir``. Smaller
+    microbatches (``max_files_per_trigger``) also advance the watermark
+    WITHIN one availableNow run: it moves between batches, so a
+    single-batch drain would finalize no window until the next run."""
+    reader = spark.readStream.schema(schema).format("parquet")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger",
+                               str(max_files_per_trigger))
+    return reader.load(input_dir)
+
+
+def _drain(df: DataFrame, output_dir: str, await_termination: bool):
+    """Append ``df`` to <output_dir>/data with its checkpoint at
+    <output_dir>/_checkpoint, draining what is present and stopping
+    (availableNow). Returns the StreamingQuery."""
+    query = (df.writeStream
+             .format("parquet")
+             .option("path", os.path.join(output_dir, "data"))
+             .option("checkpointLocation",
+                     os.path.join(output_dir, "_checkpoint"))
+             .trigger(availableNow=True)
+             .outputMode("append")
+             .start())
+    if await_termination:
+        query.awaitTermination()
+    return query
 
 
 def run_extraction_stream(spark: SparkSession, input_dir: str,
@@ -51,28 +81,11 @@ def run_extraction_stream(spark: SparkSession, input_dir: str,
     from pyspark.sql import functions as F
     from .kernels.extract import MAX_DOC_BYTES
 
-    reader = (spark.readStream.schema(PAGES_SCHEMA)
-              .format("parquet"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    pages = (reader.load(input_dir)
+    pages = (_read(spark, PAGES_SCHEMA, input_dir, max_files_per_trigger)
              .select("url", "warc_ts", "html")
              .withColumn("src_file", F.lit("stream")))
-
-    extracted = extract_stage(pages, profile, MAX_DOC_BYTES)
-
-    query = (extracted.writeStream
-             .format("parquet")
-             .option("path", os.path.join(output_dir, "data"))
-             .option("checkpointLocation",
-                     os.path.join(output_dir, "_checkpoint"))
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    if await_termination:
-        query.awaitTermination()
-    return query
+    return _drain(extract_stage(pages, profile, MAX_DOC_BYTES),
+                  output_dir, await_termination)
 
 
 EVENTS_SCHEMA = T.StructType([
@@ -106,14 +119,7 @@ def run_event_window_stream(spark: SparkSession, input_dir: str,
     """
     from pyspark.sql import functions as F
 
-    reader = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        # smaller microbatches advance the watermark WITHIN one
-        # availableNow run (the watermark moves between batches, so a
-        # single-batch drain would finalize nothing until the next run)
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    ev = reader.load(input_dir)
+    ev = _read(spark, EVENTS_SCHEMA, input_dir, max_files_per_trigger)
     agg = (ev.withWatermark("ts", watermark_delay)
            .groupBy(F.window("ts", window_duration).alias("w"),
                     "event_type")
@@ -123,17 +129,7 @@ def run_event_window_stream(spark: SparkSession, input_dir: str,
                                  "yyyy-MM-dd HH:mm:ss")
                    .alias("window_start"),
                    "event_type", "n_events", "total_value"))
-    query = (agg.writeStream
-             .format("parquet")
-             .option("path", os.path.join(output_dir, "data"))
-             .option("checkpointLocation",
-                     os.path.join(output_dir, "_checkpoint"))
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    if await_termination:
-        query.awaitTermination()
-    return query
+    return _drain(agg, output_dir, await_termination)
 
 
 SESSION_OUT_SCHEMA = T.StructType([
@@ -248,11 +244,7 @@ def run_session_stream(spark: SparkSession, input_dir: str,
                  "n_events": [r[3] for r in out],
                  "total_value": [round(r[4], 6) for r in out]})
 
-    reader = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    ev = (reader.load(input_dir)
+    ev = (_read(spark, EVENTS_SCHEMA, input_dir, max_files_per_trigger)
           .withWatermark("ts", watermark_delay)
           .select("ts", "user_id", "value"))
     sessions = (ev.groupBy("user_id")
@@ -260,17 +252,7 @@ def run_session_stream(spark: SparkSession, input_dir: str,
                     sessionize, SESSION_OUT_SCHEMA,
                     _SESSION_STATE_SCHEMA, "append",
                     GroupStateTimeout.EventTimeTimeout))
-    query = (sessions.writeStream
-             .format("parquet")
-             .option("path", os.path.join(output_dir, "data"))
-             .option("checkpointLocation",
-                     os.path.join(output_dir, "_checkpoint"))
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    if await_termination:
-        query.awaitTermination()
-    return query
+    return _drain(sessions, output_dir, await_termination)
 
 
 def run_click_attribution_stream(spark: SparkSession, input_dir: str,
@@ -290,19 +272,14 @@ def run_click_attribution_stream(spark: SparkSession, input_dir: str,
     pairs — asserted in tests."""
     from pyspark.sql import functions as F
 
-    def reader():
-        r = spark.readStream.schema(EVENTS_SCHEMA).format("parquet")
-        if max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger",
-                         str(max_files_per_trigger))
-        return r.load(input_dir)
-
-    views = (reader().where(F.col("event_type") == "view")
+    views = (_read(spark, EVENTS_SCHEMA, input_dir, max_files_per_trigger)
+             .where(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
                      F.col("event_id").alias("view_id"),
                      F.col("ts").alias("view_ts"))
              .withWatermark("view_ts", watermark_delay))
-    clicks = (reader().where(F.col("event_type") == "click")
+    clicks = (_read(spark, EVENTS_SCHEMA, input_dir, max_files_per_trigger)
+              .where(F.col("event_type") == "click")
               .select("user_id",
                       F.col("event_id").alias("click_id"),
                       F.col("ts").alias("click_ts"),
@@ -316,17 +293,7 @@ def run_click_attribution_stream(spark: SparkSession, input_dir: str,
                 """), "inner")
         .select("user_id", "click_id", "click_ts", "view_id",
                 "view_ts", "value"))
-    query = (joined.writeStream
-             .format("parquet")
-             .option("path", os.path.join(output_dir, "data"))
-             .option("checkpointLocation",
-                     os.path.join(output_dir, "_checkpoint"))
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    if await_termination:
-        query.awaitTermination()
-    return query
+    return _drain(joined, output_dir, await_termination)
 
 
 def run_dedup_stream(spark: SparkSession, input_dir: str,
@@ -352,28 +319,13 @@ def run_dedup_stream(spark: SparkSession, input_dir: str,
     from pyspark.sql import functions as F
     from .ops.textstats import fingerprint
 
-    reader = (spark.readStream.schema(PAGES_SCHEMA)
-              .format("parquet"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    pages = (reader.load(input_dir)
+    pages = (_read(spark, PAGES_SCHEMA, input_dir, max_files_per_trigger)
              .withColumn("fingerprint",
                          fingerprint(F.decode("html", "UTF-8")))
              .withWatermark("warc_ts", watermark_delay)
              .dropDuplicatesWithinWatermark(["fingerprint"]))
-    query = (pages.select("url", "warc_ts", "fingerprint")
-             .writeStream
-             .format("parquet")
-             .option("path", os.path.join(output_dir, "data"))
-             .option("checkpointLocation",
-                     os.path.join(output_dir, "_checkpoint"))
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    if await_termination:
-        query.awaitTermination()
-    return query
+    return _drain(pages.select("url", "warc_ts", "fingerprint"),
+                  output_dir, await_termination)
 
 
 def run_url_dedup_stream(spark: SparkSession, input_dir: str,
@@ -398,24 +350,9 @@ def run_url_dedup_stream(spark: SparkSession, input_dir: str,
     from pyspark.sql import functions as F
     from .ops.weburl import canonical_url
 
-    reader = (spark.readStream.schema(PAGES_SCHEMA)
-              .format("parquet"))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    pages = (reader.load(input_dir)
+    pages = (_read(spark, PAGES_SCHEMA, input_dir, max_files_per_trigger)
              .withColumn("canonical_url", canonical_url(F.col("url")))
              .withWatermark("warc_ts", watermark_delay)
              .dropDuplicatesWithinWatermark(["canonical_url"]))
-    query = (pages.select("url", "canonical_url", "warc_ts")
-             .writeStream
-             .format("parquet")
-             .option("path", os.path.join(output_dir, "data"))
-             .option("checkpointLocation",
-                     os.path.join(output_dir, "_checkpoint"))
-             .trigger(availableNow=True)
-             .outputMode("append")
-             .start())
-    if await_termination:
-        query.awaitTermination()
-    return query
+    return _drain(pages.select("url", "canonical_url", "warc_ts"),
+                  output_dir, await_termination)

@@ -1,7 +1,9 @@
 """bench.py's outputs, checked without Spark: the headline line stays a
 compact JSON object, and BENCH.md carries only the run that wrote it."""
 
+import importlib
 import json
+import os
 
 import bench
 
@@ -42,3 +44,12 @@ def test_bench_md_holds_only_this_run(tmp_path):
                   "probe_mp_scaling", "stress"):
         assert stale not in lowered, stale
     assert "perfbench/run.py" in text
+
+
+def test_cpus_default_to_host_cores(monkeypatch):
+    with monkeypatch.context() as m:
+        m.delenv("SPARK_GRAFT_CPUS", raising=False)
+        assert importlib.reload(bench).CPUS == os.cpu_count()
+        m.setenv("SPARK_GRAFT_CPUS", "3")
+        assert importlib.reload(bench).CPUS == 3
+    importlib.reload(bench)

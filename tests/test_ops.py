@@ -104,6 +104,27 @@ def test_ann_ivf_recall_and_determinism(spark, emb):
     assert sorted(got1, key=key) == sorted(got2, key=key)
 
 
+def test_cosine_topk_ignores_zero_norm_vectors(spark):
+    """Zero vectors score NaN; were they candidates, np.partition would
+    sort them last and cut the real neighbours from the batch's
+    partial top-k. Among 20 zero vectors in one partition, the result
+    equals the one over the 8 real vectors alone."""
+    import random
+    rnd = random.Random(7)
+    real = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(8)]
+    zero = [(100 + i, [0.0] * 8) for i in range(20)]
+
+    def top(rows):
+        df = spark.createDataFrame(rows, "vec_id long, embedding "
+                                   "array<double>").coalesce(1)
+        return sorted(tuple(r) for r in similarity.cosine_topk(
+            df, df, k=5).collect())
+
+    want = top(real)
+    assert len(want) == 8 * 5
+    assert top(real + zero) == want
+
+
 def test_shingle_sets_match_plan_side_shingles(spark, docs):
     """The pandas shingle stage must produce exactly the shingle SETS
     of the plan-side shingles() expression (the executable spec the

@@ -1,7 +1,7 @@
 """End-to-end Spark pipeline tests: read → extract → write → verify,
 byte-identical text vs goldens THROUGH the distributed path, exact
-resume after a mid-job kill, lineage/manifest integrity, and
-parallelism-independence of results."""
+resume after a mid-job kill, manifest (= per-partition lineage)
+integrity, and parallelism-independence of results."""
 
 import hashlib
 import json
@@ -17,6 +17,23 @@ from extract_kit_spark.pipeline import (read_extractions,
                                         run_extraction_scan)
 
 N_ROWS = 400
+
+def manifest_entries(out):
+    """The committed per-key entries of ``out``'s _manifest.json."""
+    with open(os.path.join(out, "_manifest.json")) as f:
+        return json.load(f)["committed"]
+
+
+def assert_manifest_counts_data(spark, out):
+    """The manifest is the lineage: its per-key n_rows/n_ok sum to the
+    data's row and ok counts, and no lineage/ copy is written."""
+    committed = manifest_entries(out).values()
+    df = read_extractions(spark, out)
+    assert sum(v["n_rows"] for v in committed) == df.count()
+    assert sum(v["n_ok"] for v in committed) == \
+        df.where(F.col("status") == "ok").count()
+    assert not os.path.exists(os.path.join(out, "lineage"))
+
 
 GOLDEN_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "golden", "goldens.json")
@@ -88,13 +105,11 @@ def test_quarantine_rows_not_dropped(spark, extracted):
 
 def test_lineage_counts_match(spark, extracted):
     out, summary = extracted
-    lineage = spark.read.parquet(os.path.join(out, "lineage", "*"))
-    agg = lineage.agg(F.sum("n_rows").alias("n"),
-                      F.sum("n_ok").alias("ok")).collect()[0]
-    assert agg["n"] == N_ROWS
-    assert agg["ok"] == summary["n_ok"]
-    assert lineage.select("p_bucket").distinct().count() == \
-        summary["n_buckets"]
+    committed = manifest_entries(out)
+    assert sum(v["n_rows"] for v in committed.values()) == N_ROWS
+    assert sum(v["n_ok"] for v in committed.values()) == summary["n_ok"]
+    assert len(committed) == summary["n_buckets"]
+    assert_manifest_counts_data(spark, out)
 
 
 def test_exact_resume_after_kill(spark, pages_path, tmp_path_factory):
@@ -154,6 +169,9 @@ def test_resume_with_changed_commit_group_size(spark, pages_path,
     df = read_extractions(spark, out)
     assert df.count() == N_ROWS
     assert df.select("url").distinct().count() == N_ROWS
+    assert sum(v["n_rows"] for v in manifest_entries(out).values()) \
+        == N_ROWS
+    assert_manifest_counts_data(spark, out)
 
 
 def test_results_independent_of_parallelism(spark, pages_path,
@@ -198,7 +216,7 @@ def test_scan_layout_end_to_end(spark, pages_multi, tmp_path_factory):
     df = read_extractions(spark, out)
     assert df.count() == N_ROWS
     assert df.select("url").distinct().count() == N_ROWS
-    # lineage carries per-input-file provenance
+    # every row carries its per-input-file provenance
     assert "src_file" in df.columns
 
 
@@ -253,8 +271,8 @@ def test_scan_layout_resume_both_crash_windows(spark, pages_multi,
 @pytest.mark.parametrize("layout", ["scan", "bucketed"])
 def test_rerun_without_resume_keeps_lineage_exact(spark, tmp_path, layout):
     """A rerun with resume=False (CLI --no-resume) redoes every group;
-    lineage is overwritten per fixed group id, so it still sums to the
-    data rows instead of counting them twice."""
+    each key's manifest entry is overwritten, so the manifest still
+    sums to the data rows instead of counting them twice."""
     from extract_kit_spark.fixtures import write_pages_dir
     pages = str(tmp_path / "pages")
     out = str(tmp_path / "out")
@@ -270,8 +288,8 @@ def test_rerun_without_resume_keeps_lineage_exact(spark, tmp_path, layout):
         assert s["complete"] and s["n_groups_run"] >= 2
     n_data = read_extractions(spark, out).count()
     assert n_data == 80
-    lineage = spark.read.parquet(os.path.join(out, "lineage", "*"))
-    assert lineage.agg(F.sum("n_rows")).first()[0] == n_data
+    assert len(manifest_entries(out)) == (2 if layout == "scan" else 8)
+    assert_manifest_counts_data(spark, out)
 
 
 @pytest.mark.parametrize("layout", ["scan", "bucketed"])
@@ -453,6 +471,9 @@ def test_reprocess_quarantined_replays_only_failures(
          "from read_parquet('%s/data/*/*.parquet') order by url")
     assert con.sql(q % out).fetchall() == con.sql(q % ref).fetchall()
 
+    # the replay re-committed the keys it rewrote
+    assert_manifest_counts_data(spark, out)
+
     # idempotent second replay: same genuinely-broken rows, no churn
     again = reprocess_quarantined(spark, pages_path, out)
     assert again["now_ok"] == 0
@@ -481,6 +502,7 @@ def test_reprocess_quarantined_bucketed_layout(
     expected_bucket = F.pmod(F.xxhash64("url"),
                              F.lit(4)).cast("int")
     assert df.where(F.col("p_bucket") != expected_bucket).count() == 0
+    assert_manifest_counts_data(spark, out)
 
 
 def test_reprocess_missing_input_url_carried_forward(
