@@ -27,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import threading
 import time
 
 
@@ -35,6 +36,11 @@ class KeyPlanMismatch(ValueError):
 
 
 class Manifest:
+    # one lock for every Manifest of the process: a commit is a
+    # load-modify-rename of the whole file, so two unserialized commits
+    # (concurrent commit groups, or a replay beside a job) lose entries
+    _lock = threading.Lock()
+
     def __init__(self, output_dir: str, job_id: str):
         self.output_dir = output_dir
         self.job_id = job_id
@@ -74,25 +80,27 @@ class Manifest:
                key_plan: str) -> None:
         """Record buckets as done. bucket → {n_rows, n_ok, n_failed,
         bytes_in, checksum}. Re-committing a bucket overwrites its entry
-        (idempotent for resume-after-partial-write)."""
-        state = self.load()
-        if state.get("job_id") != self.job_id:
-            state = {"job_id": self.job_id, "committed": {}}
-        state["n_buckets"] = n_buckets
-        state["key_plan"] = key_plan
-        for b, info in buckets.items():
-            state["committed"][str(b)] = {**info,
-                                          "committed_at": time.time()}
-        os.makedirs(self.output_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.output_dir,
-                                   prefix="_manifest.", suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(state, f, indent=1, sort_keys=True)
-            os.replace(tmp, self.path)  # atomic commit
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        (idempotent for resume-after-partial-write). Thread-safe: commits
+        are serialized by the class lock."""
+        with self._lock:
+            state = self.load()
+            if state.get("job_id") != self.job_id:
+                state = {"job_id": self.job_id, "committed": {}}
+            state["n_buckets"] = n_buckets
+            state["key_plan"] = key_plan
+            for b, info in buckets.items():
+                state["committed"][str(b)] = {**info,
+                                              "committed_at": time.time()}
+            os.makedirs(self.output_dir, exist_ok=True)
+            fd, tmp = tempfile.mkstemp(dir=self.output_dir,
+                                       prefix="_manifest.", suffix=".tmp")
+            try:
+                with os.fdopen(fd, "w") as f:
+                    json.dump(state, f, indent=1, sort_keys=True)
+                os.replace(tmp, self.path)  # atomic commit
+            finally:
+                if os.path.exists(tmp):
+                    os.unlink(tmp)
 
     def is_complete(self) -> bool:
         state = self.load()

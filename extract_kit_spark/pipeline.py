@@ -8,7 +8,12 @@ One job loop (``_run_groups``), two layouts that only plan it. The
 manifest keys of a job are cut into fixed groups; for each group with
 uncommitted keys the loop runs plan → extract → write → commit over
 those keys only. Group ids are fixed slices of the full key range, so
-they never shift with what is already committed.
+they never shift with what is already committed. Groups run
+concurrently on the one session, ``defaultParallelism // tasks per
+group`` at a time (at least 1, so ``local[1]`` is the serial run), and
+commit in group order: a run commits a prefix of its groups, stops
+committing at its first failure, and its test hooks cut at exactly the
+same group at any pool width.
 
 ``run_extraction_scan`` (DEFAULT — the 100 TB path): NO shuffle. The
 extraction is a pure map, so the plan is scan → mapInPandas → write;
@@ -35,20 +40,22 @@ Shared scale design
   (queries.q_ext_*) run this same stage and only project its output
   with Spark column expressions.
 - Incremental commit: per group one data write and one aggregate
-  collect, then an atomic manifest commit; a rerun does only
-  uncommitted keys, and is refused if its key plan differs from the
-  recorded one. Writes are
-  idempotent (per-group dir overwrite / dynamic partition overwrite),
-  so a crash between write and commit never duplicates rows.
+  collect, then an atomic manifest commit (serialized by the
+  manifest's lock); a rerun does only uncommitted keys, and is refused
+  if its key plan differs from the recorded one. Writes are idempotent
+  (per-group dir overwrite / dynamic partition overwrite of the
+  group's own buckets), so a crash between write and commit never
+  duplicates rows.
 - Straggler cap: payloads over ``max_doc_bytes`` are quarantined
   without parsing (the analogue of the reference's pixel-budget input
   reduction, `image-optimization.ts:117-147`).
 - Deterministic output: sortWithinPartitions(url) so reruns are
   byte-comparable (SURVEY.md §4.3).
 - Lineage is the manifest: one column-pruned aggregate over the written
-  rows of a group's keys (never caches MB-size text columns) gives each
-  key's entry (n_rows, n_ok, n_failed, bytes_in, checksum). Per-input-
-  file provenance stays on every data row as ``src_file``.
+  rows of a group's keys, read from their own partition dirs only
+  (never caches MB-size text columns), gives each key's entry (n_rows,
+  n_ok, n_failed, bytes_in, checksum). Per-input-file provenance stays
+  on every data row as ``src_file``.
 """
 
 from __future__ import annotations
@@ -56,8 +63,10 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 import uuid
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
 import pandas as pd
@@ -86,13 +95,29 @@ def _group_checksum() -> F.Column:
         ":", F.col("url"), F.crc32("extracted_text")))).cast("string")
 
 
-def _commit_keys(spark: SparkSession, manifest: Manifest, part_col: str,
-                 keys: list[int], n_keys: int, key_plan: str) -> None:
-    """Commit one manifest entry per key of ``keys`` (= ``part_col``
-    values): one aggregate over the WRITTEN rows of those keys, one
-    collect. A key with no rows commits zeros and an empty checksum."""
-    rows = (spark.read.parquet(os.path.join(manifest.output_dir, "data"))
-            .where(F.col(part_col).isin(keys))
+def _key_entries(spark: SparkSession, data_dir: str, part_col: str,
+                 keys: list[int]) -> dict[int, dict]:
+    """One manifest entry per key of ``keys`` (= ``part_col`` values):
+    one aggregate over the WRITTEN rows of those keys, one collect. It
+    reads only the keys' own ``<part_col>=<k>`` dirs under a declared
+    schema (no footer inference, no listing of the other keys' dirs,
+    which concurrent groups may be overwriting). A key with no rows (no
+    dir) gets zeros and an empty checksum."""
+    empty = {"n_rows": 0, "n_ok": 0, "n_failed": 0, "bytes_in": 0,
+             "checksum": ""}
+    entries = {k: empty for k in keys}
+    dirs = [d for d in (os.path.join(data_dir, f"{part_col}={k}")
+                        for k in keys) if os.path.isdir(d)]
+    if not dirs:
+        return entries
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("extracted_text", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("bytes_in", T.LongType()),
+        T.StructField(part_col, T.IntegerType())])
+    rows = (spark.read.schema(schema).option("basePath", data_dir)
+            .parquet(*dirs)
             .groupBy(part_col)
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum(F.when(F.col("status") == "ok", 1)
@@ -102,12 +127,9 @@ def _commit_keys(spark: SparkSession, manifest: Manifest, part_col: str,
                  F.sum("bytes_in").alias("bytes_in"),
                  _group_checksum().alias("checksum"))
             .collect())
-    empty = {"n_rows": 0, "n_ok": 0, "n_failed": 0, "bytes_in": 0,
-             "checksum": ""}
-    entries = {k: empty for k in keys}
     for r in rows:
         entries[r[part_col]] = {c: r[c] for c in empty}
-    manifest.commit(entries, n_keys, key_plan)
+    return entries
 
 
 def extract_stage(pages: DataFrame, profile: str,
@@ -194,64 +216,113 @@ def read_pages(spark: SparkSession, input_path: str,
 def _run_groups(spark: SparkSession, manifest: Manifest,
                 groups: list[list[int]],
                 frame_for_group: Callable[[int, list[int]], DataFrame],
-                part_col: str, key_plan: str,
+                part_col: str, key_plan: str, tasks_per_key: int,
                 profile: str, max_doc_bytes: int, resume: bool,
                 fail_after_groups: int | None,
                 fail_before_commit_group: int | None) -> dict:
     """The job loop of both layouts. ``groups[gid]`` is the fixed list
-    of manifest keys (= ``part_col`` values) of group ``gid``; for each
-    group with uncommitted keys: extract ``frame_for_group(gid, todo)``,
-    write it idempotently, then commit every key of the group from one
-    aggregate over its written rows (``_commit_keys``). Two Spark
-    actions per group: the data write and one collect. Returns the
-    summary fields both layouts share.
+    of manifest keys (= ``part_col`` values) of group ``gid``; each
+    group with uncommitted keys (``todo``) extracts
+    ``frame_for_group(gid, todo)``, writes it idempotently and computes
+    the entry of every key of the group from one aggregate over its
+    written rows (``_key_entries``). Two Spark actions per group: the
+    data write and one collect. Returns the summary fields both
+    layouts share.
+
+    Groups run concurrently on the one session, ``width`` at a time:
+    ``defaultParallelism // tasks``, at least 1, where ``tasks`` is the
+    largest group's task count (``tasks_per_key * len(todo)``: a scan
+    group is one key of ``tasks_per_key`` files, a bucket one task), so
+    concurrent groups fill the cores and width 1 is the serial run.
+    Commits are ordered: a group's entries are committed, under
+    ``lock``, only once every group before it in this run committed,
+    so each run commits a prefix of its groups whatever the thread
+    timing. After the first failure no group commits or starts; the
+    loop waits for the groups in flight (their data writes may finish,
+    their keys stay uncommitted and a resume overwrites them) and
+    re-raises the failure.
 
     ``key_plan`` names what the keys mean (the bucket count, or a
     digest of the file groups). The manifest records it on first
     commit, and a run of the same job whose plan differs raises before
     any work: its keys would name other rows.
 
-    Test hooks: ``fail_after_groups`` raises after k committed groups;
-    ``fail_before_commit_group`` raises after group k's DATA write but
-    before its manifest commit (the crash window where idempotent
-    re-writes matter)."""
+    Test hooks, exact at any width: ``fail_after_groups`` runs only the
+    first k groups and raises after the k-th commit, so exactly k
+    groups are committed and no other group's work is wasted;
+    ``fail_before_commit_group`` raises at group g's turn to commit,
+    after its DATA write (the crash window where idempotent re-writes
+    matter), so the groups before it are committed and g is not.
+    ``n_groups_run`` counts committed groups."""
     data_dir = os.path.join(manifest.output_dir, "data")
     manifest.check_plan(key_plan)
     done = manifest.committed_buckets() if resume else set()
-    n_done_groups = 0
+    n_keys = sum(map(len, groups))
+    todo = {gid: [k for k in keys if k not in done]
+            for gid, keys in enumerate(groups)}
+    # a cut after k commits can commit no later group, so none starts
+    order = [gid for gid in todo if todo[gid]][:fail_after_groups]
+    tasks = max((tasks_per_key * len(todo[g]) for g in order), default=1)
+    width = max(1, spark.sparkContext.defaultParallelism // tasks)
+    lock = threading.Lock()
+    ready: dict[int, dict] = {}  # gid -> entries written, not committed
+    n_committed = 0
+    error: BaseException | None = None
 
-    for gid, keys in enumerate(groups):
-        todo = [k for k in keys if k not in done]
-        if not todo:
-            continue
-        extracted = extract_stage(frame_for_group(gid, todo), profile,
-                                  max_doc_bytes)
-        writer = (extracted.sortWithinPartitions("url")
-                  .write.mode("overwrite"))
-        if part_col == "group":
-            # the group is one partition: its own dir, plain overwrite
-            writer.parquet(os.path.join(data_dir, f"group={gid}"))
-        else:
-            # dynamic partition OVERWRITE (not append): a crash between
-            # write and commit leaves orphan partitions that the resume
-            # run simply replaces
-            (writer.option("partitionOverwriteMode", "dynamic")
-             .partitionBy(part_col).parquet(data_dir))
-        if fail_before_commit_group is not None \
-                and gid == fail_before_commit_group:
-            raise RuntimeError(
-                f"test hook: killed before commit of group {gid}")
+    def commit_ready() -> None:
+        # under ``lock``: commit the finished prefix of ``order``
+        nonlocal n_committed, error
+        while error is None and n_committed < len(order) \
+                and order[n_committed] in ready:
+            gid = order[n_committed]
+            if gid == fail_before_commit_group:
+                error = RuntimeError(
+                    f"test hook: killed before commit of group {gid}")
+                return
+            manifest.commit(ready.pop(gid), n_keys, key_plan)
+            n_committed += 1
+            if fail_after_groups is not None \
+                    and n_committed >= fail_after_groups:
+                error = RuntimeError(
+                    f"test hook: killed after {n_committed} groups")
 
-        _commit_keys(spark, manifest, part_col, keys,
-                     sum(map(len, groups)), key_plan)
-        n_done_groups += 1
-        if fail_after_groups is not None \
-                and n_done_groups >= fail_after_groups:
-            raise RuntimeError(
-                f"test hook: killed after {n_done_groups} groups")
+    def run_group(gid: int) -> None:
+        nonlocal error
+        if error is not None:
+            return
+        try:
+            extracted = extract_stage(frame_for_group(gid, todo[gid]),
+                                      profile, max_doc_bytes)
+            writer = (extracted.sortWithinPartitions("url")
+                      .write.mode("overwrite"))
+            if part_col == "group":
+                # the group is one partition: its own dir, plain
+                # overwrite
+                writer.parquet(os.path.join(data_dir, f"group={gid}"))
+            else:
+                # dynamic partition OVERWRITE (not append): a crash
+                # between write and commit leaves orphan partitions
+                # that the resume run simply replaces
+                (writer.option("partitionOverwriteMode", "dynamic")
+                 .partitionBy(part_col).parquet(data_dir))
+            entries = _key_entries(spark, data_dir, part_col, groups[gid])
+        except Exception as exc:
+            with lock:
+                error = error or exc
+            return
+        with lock:
+            ready[gid] = entries
+            commit_ready()
+
+    with ThreadPoolExecutor(width) as pool:
+        futures = [pool.submit(run_group, gid) for gid in order]
+    for f in futures:
+        f.result()
+    if error is not None:
+        raise error
 
     committed = manifest.load()["committed"].values()
-    return {"n_groups_run": n_done_groups,
+    return {"n_groups_run": n_committed,
             "n_rows": sum(v["n_rows"] for v in committed),
             "n_ok": sum(v["n_ok"] for v in committed),
             "complete": manifest.is_complete(),
@@ -305,7 +376,7 @@ def run_extraction_bucketed(spark: SparkSession,
     groups = [keys[i:i + commit_group_size]
               for i in range(0, n_buckets, commit_group_size)]
     run = _run_groups(spark, manifest, groups, frame_for_group,
-                      "p_bucket", f"n_buckets={n_buckets}",
+                      "p_bucket", f"n_buckets={n_buckets}", 1,
                       profile, max_doc_bytes, resume, fail_after_groups,
                       fail_before_commit_group)
     return {"job_id": job_id, "n_buckets": n_buckets, **run,
@@ -349,8 +420,16 @@ def run_extraction_scan(spark: SparkSession,
             os.path.join(input_path, "**", "*.warc.gz"),
             recursive=True)))
     else:
-        all_files = sorted(spark.read.parquet(input_path).inputFiles())
-    n_groups = min(n_groups, len(all_files)) or 1
+        # a declared schema lists the files without reading a footer;
+        # the group frames still infer theirs
+        all_files = sorted(spark.read
+                           .schema("url string, warc_ts timestamp, "
+                                   "html binary")
+                           .parquet(input_path).inputFiles())
+    if not all_files:
+        raise ValueError(f"no {input_format} input files under "
+                         f"{input_path}")
+    n_groups = min(n_groups, len(all_files))
     per = -(-len(all_files) // n_groups)  # ceil
     file_groups = [all_files[i:i + per]
                    for i in range(0, len(all_files), per)]
@@ -372,7 +451,7 @@ def run_extraction_scan(spark: SparkSession,
     manifest = Manifest(output_dir, job_id)
     run = _run_groups(spark, manifest,
                       [[g] for g in range(len(file_groups))],
-                      frame_for_group, "group", plan,
+                      frame_for_group, "group", plan, per,
                       profile, max_doc_bytes, resume, fail_after_groups,
                       fail_before_commit_group)
     return {"job_id": job_id, "n_groups": len(file_groups), **run}
@@ -476,8 +555,10 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
             f"but {n_fixed} replacements + {n_missing} carried")
     state = Manifest(output_dir, None).load()
     if state["job_id"] is not None:
-        _commit_keys(spark, Manifest(output_dir, state["job_id"]), pcol,
-                     parts, state["n_buckets"], state.get("key_plan"))
+        Manifest(output_dir, state["job_id"]).commit(
+            _key_entries(spark, os.path.join(output_dir, "data"), pcol,
+                         parts),
+            state["n_buckets"], state.get("key_plan"))
     now_ok = fixed.where(F.col("status") == "ok").count()
     return {"reprocessed": int(n_bad), "partitions": len(parts),
             "now_ok": int(now_ok), "missing": int(n_missing)}

@@ -268,6 +268,141 @@ def test_scan_layout_resume_both_crash_windows(spark, pages_multi,
     assert df.select("url").distinct().count() == N_ROWS
 
 
+@pytest.fixture
+def pool_widths(monkeypatch):
+    """The widths of the group pools ``_run_groups`` opens."""
+    from extract_kit_spark import pipeline
+    widths = []
+
+    class Spy(pipeline.ThreadPoolExecutor):
+        def __init__(self, width):
+            widths.append(width)
+            super().__init__(width)
+
+    monkeypatch.setattr(pipeline, "ThreadPoolExecutor", Spy)
+    return widths
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_fail_after_groups_is_exact_under_concurrency(spark, tmp_path, k,
+                                                      pool_widths):
+    """Concurrent groups (4 one-file scan groups at local[4], so a pool
+    of 4): a cut after k commits leaves exactly the first k groups
+    committed in every repetition, and the resume runs the rest."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages = str(tmp_path / "pages")
+    write_pages_dir(pages, 40, n_files=4)
+    for rep in range(5):
+        out = str(tmp_path / f"out{rep}")
+        with pytest.raises(RuntimeError, match=f"after {k} groups"):
+            run_extraction_scan(spark, pages, out, job_id="cut",
+                                n_groups=4, fail_after_groups=k)
+        assert sorted(manifest_entries(out)) == [str(g) for g in range(k)]
+        summary = run_extraction_scan(spark, pages, out, job_id="cut",
+                                      n_groups=4)
+        assert summary["n_groups_run"] == 4 - k and summary["complete"]
+        assert summary["n_rows"] == 40
+    assert min(pool_widths) >= 2
+
+
+def test_concurrent_kill_before_commit_then_resume(spark, pages_multi,
+                                                   tmp_path, pool_widths):
+    """Kill one scan group between its data write and its commit while
+    the other groups are in flight: only the groups before it commit,
+    and the resume leaves every url exactly once, with a manifest that
+    counts the data."""
+    out = str(tmp_path / "x")
+    with pytest.raises(RuntimeError, match="before commit of group 2"):
+        run_extraction_scan(spark, pages_multi, out, job_id="kill",
+                            n_groups=6, fail_before_commit_group=2)
+    assert pool_widths[0] >= 2
+    assert sorted(manifest_entries(out)) == ["0", "1"]
+    summary = run_extraction_scan(spark, pages_multi, out, job_id="kill",
+                                  n_groups=6)
+    assert summary["complete"] and summary["n_groups_run"] == 4
+    df = read_extractions(spark, out)
+    assert df.count() == N_ROWS
+    assert df.select("url").distinct().count() == N_ROWS
+    assert_manifest_counts_data(spark, out)
+
+
+def test_scan_output_equal_at_local1_and_local4(spark, pages_multi,
+                                                tmp_path):
+    """The same scan job at local[1] (a CLI child, serial groups) and
+    local[4] (this session, concurrent groups) writes the same rows."""
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    serial, wide = str(tmp_path / "l1"), str(tmp_path / "l4")
+    subprocess.run([sys.executable, "-m", "extract_kit_spark.run",
+                    "--input", pages_multi, "--output", serial,
+                    "--job-id", "par", "--n-groups", "6",
+                    "--master", "local[1]"],
+                   cwd=repo, check=True, stdout=subprocess.DEVNULL,
+                   stderr=subprocess.DEVNULL,
+                   env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"})
+    run_extraction_scan(spark, pages_multi, wide, job_id="par",
+                        n_groups=6)
+
+    def rows(out):
+        return sorted(read_extractions(spark, out).select(
+            "url", "status", "extracted_text", "spans").collect(),
+            key=lambda r: r["url"])
+
+    got = rows(wide)
+    assert len(got) == N_ROWS and got == rows(serial)
+
+
+def test_scan_listing_equals_inferred_listing(spark, tmp_path):
+    """The scan layout lists its input under a declared schema; the
+    file groups it plans (the manifest's key-plan digest) equal those
+    of the inferred-schema listing, and an empty input dir raises."""
+    import hashlib as _h
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_dir(pages, 40, n_files=4)
+    run_extraction_scan(spark, pages, out, job_id="ls", n_groups=2)
+    files = sorted(spark.read.parquet(pages).inputFiles())
+    assert len(files) == 4
+    groups = [files[:2], files[2:]]
+    digest = _h.sha256(json.dumps(groups).encode("utf-8")).hexdigest()
+    with open(os.path.join(out, "_manifest.json")) as f:
+        assert json.load(f)["key_plan"] == f"file_groups=2:{digest[:16]}"
+    os.makedirs(tmp_path / "empty")
+    with pytest.raises(ValueError, match="no parquet input files"):
+        run_extraction_scan(spark, str(tmp_path / "empty"),
+                            str(tmp_path / "o2"))
+
+
+def test_manifest_commit_is_thread_safe(tmp_path):
+    """8 threads committing disjoint keys to one manifest lose none."""
+    import sys
+    import threading
+    from extract_kit_spark.manifest import Manifest
+    m = Manifest(str(tmp_path), "mt")
+    entry = {"n_rows": 1, "n_ok": 1, "n_failed": 0, "bytes_in": 1,
+             "checksum": "x"}
+
+    def commit_range(t):
+        for i in range(25):
+            m.commit({t * 25 + i: entry}, 200, "n_buckets=200")
+
+    threads = [threading.Thread(target=commit_range, args=(t,))
+               for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert m.committed_buckets() == set(range(200))
+    assert m.is_complete()
+
+
 @pytest.mark.parametrize("layout", ["scan", "bucketed"])
 def test_rerun_without_resume_keeps_lineage_exact(spark, tmp_path, layout):
     """A rerun with resume=False (CLI --no-resume) redoes every group;
