@@ -14,15 +14,8 @@ import datetime as _dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), nullable=False),
-    T.StructField("warc_ts", T.TimestampType()),
-    T.StructField("html", T.BinaryType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("lang", T.StringType()),
-])
+from .schemas import PAGES_SCHEMA
 
 
 def rows_from_files(paths: list[str],

@@ -16,10 +16,11 @@ Layout under <output_dir>/ (pipeline._run_groups writes it):
                                        (group id / bucket id), n_rows,
                                        n_ok, n_failed, bytes_in, checksum
 
-A key's entry IS its partition's lineage, aggregated from the written
-rows; there is no separate lineage/ table (Iceberg likewise keeps record
-counts in its manifests). Per-input-file provenance is the ``src_file``
-column of every scan-layout row.
+A key's entry IS its partition's lineage, aggregated by an Observation
+on the rows of the write that produced them (pipeline._observe_entries),
+never by reading the output back; there is no separate lineage/ table
+(Iceberg likewise keeps record counts in its manifests). Per-input-file
+provenance is the ``src_file`` column of every scan-layout row.
 """
 
 from __future__ import annotations

@@ -26,10 +26,11 @@ from giant documents is bounded by the per-doc byte cap, not by
 repartitioning.
 
 ``run_extraction_bucketed``: adds a repartition on xxhash64(url) so the
-OUTPUT is bucketed by url hash (one bucket per task, sorted within,
-under data/p_bucket=<b>/) — pay the shuffle only when downstream
-consumers need url-co-located / bucket-joinable output. The manifest
-key is the bucket id; groups are ``commit_group_size`` buckets.
+OUTPUT is bucketed by url hash (under data/p_bucket=<b>/, sorted within
+each task) — pay the shuffle only when downstream consumers need
+url-co-located / bucket-joinable output. The manifest key is the
+bucket id; groups are ``commit_group_size`` buckets, which can share a
+task (a murmur3 hash of the bucket id picks it).
 
 Shared scale design
 -------------------
@@ -39,23 +40,21 @@ Shared scale design
   memory for MB docs. The registry's extraction queries
   (queries.q_ext_*) run this same stage and only project its output
   with Spark column expressions.
-- Incremental commit: per group one data write and one aggregate
-  collect, then an atomic manifest commit (serialized by the
-  manifest's lock); a rerun does only uncommitted keys, and is refused
-  if its key plan differs from the recorded one. Writes are idempotent
-  (per-group dir overwrite / dynamic partition overwrite of the
-  group's own buckets), so a crash between write and commit never
-  duplicates rows.
+- Incremental commit: per group one data write, then an atomic
+  manifest commit (serialized by the manifest's lock); a rerun does
+  only uncommitted keys, and is refused if its key plan differs from
+  the recorded one. Writes are idempotent (per-group dir overwrite /
+  dynamic partition overwrite of the group's own buckets), so a crash
+  between write and commit never duplicates rows.
 - Straggler cap: payloads over ``max_doc_bytes`` are quarantined
   without parsing (the analogue of the reference's pixel-budget input
   reduction, `image-optimization.ts:117-147`).
 - Deterministic output: sortWithinPartitions(url) so reruns are
   byte-comparable (SURVEY.md §4.3).
-- Lineage is the manifest: one column-pruned aggregate over the written
-  rows of a group's keys, read from their own partition dirs only
-  (never caches MB-size text columns), gives each key's entry (n_rows,
-  n_ok, n_failed, bytes_in, checksum). Per-input-file provenance stays
-  on every data row as ``src_file``.
+- Lineage is the manifest: an Observation on a group's write gives
+  each key's entry (n_rows, n_ok, n_failed, bytes_in, checksum);
+  nothing reads the output back. Per-input-file provenance stays on
+  every data row as ``src_file``.
 """
 
 from __future__ import annotations
@@ -71,65 +70,55 @@ from typing import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (DataFrame, Observation, SparkSession,
+                         functions as F)
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .kernels.extract import extract_document, MAX_DOC_BYTES
 from .manifest import Manifest
-from .schemas import EXTRACTION_SCHEMA
+from .schemas import EXTRACTION_SCHEMA, PAGES_SCHEMA
 
 DEFAULT_TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 
 
-def _group_checksum() -> F.Column:
-    """Order-independent content checksum for a manifest key: XOR of
-    per-row xxhash64("url:crc32(extracted_text)"). Commutative and
-    associative → map-side partial aggregation, constant memory, any
-    row order; equal row multisets ⇔ equal checksum (urls are unique
-    within a group, so XOR self-cancellation cannot occur). Replaces a
-    sort_array(collect_list(...)) formulation that materialized every
-    row of the group in one reducer — fine at test scale, an OOM at
-    10^12 rows."""
-    return F.bit_xor(F.xxhash64(F.concat_ws(
-        ":", F.col("url"), F.crc32("extracted_text")))).cast("string")
+_EMPTY_ENTRY = {"n_rows": 0, "n_ok": 0, "n_failed": 0, "bytes_in": 0,
+                "checksum": ""}
 
 
-def _key_entries(spark: SparkSession, data_dir: str, part_col: str,
-                 keys: list[int]) -> dict[int, dict]:
-    """One manifest entry per key of ``keys`` (= ``part_col`` values):
-    one aggregate over the WRITTEN rows of those keys, one collect. It
-    reads only the keys' own ``<part_col>=<k>`` dirs under a declared
-    schema (no footer inference, no listing of the other keys' dirs,
-    which concurrent groups may be overwriting). A key with no rows (no
-    dir) gets zeros and an empty checksum."""
-    empty = {"n_rows": 0, "n_ok": 0, "n_failed": 0, "bytes_in": 0,
-             "checksum": ""}
-    entries = {k: empty for k in keys}
-    dirs = [d for d in (os.path.join(data_dir, f"{part_col}={k}")
-                        for k in keys) if os.path.isdir(d)]
-    if not dirs:
-        return entries
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("bytes_in", T.LongType()),
-        T.StructField(part_col, T.IntegerType())])
-    rows = (spark.read.schema(schema).option("basePath", data_dir)
-            .parquet(*dirs)
-            .groupBy(part_col)
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.sum(F.when(F.col("status") == "ok", 1)
-                       .otherwise(0)).alias("n_ok"),
-                 F.sum(F.when(F.col("status") != "ok", 1)
-                       .otherwise(0)).alias("n_failed"),
-                 F.sum("bytes_in").alias("bytes_in"),
-                 _group_checksum().alias("checksum"))
-            .collect())
-    for r in rows:
-        entries[r[part_col]] = {c: r[c] for c in empty}
-    return entries
+def _observe_entries(df: DataFrame, keys: list[int], key: F.Column
+                     ) -> tuple[DataFrame, Callable[[], dict[int, dict]]]:
+    """Attach to ``df``, the rows about to be written, one Observation
+    of the manifest entry of each of ``keys`` over the rows whose
+    ``key`` equals it. Returns the frame to write and a function that
+    gives the entries once the write has returned. Spark merges
+    observed metrics from each task's successful attempt only, and
+    publishes them only when the action succeeds, so an entry counts
+    the written rows exactly. A key with no rows gets ``_EMPTY_ENTRY``.
+
+    The checksum is the XOR of per-row xxhash64("url:crc32(text)"):
+    order-independent and constant-memory, and urls are unique within
+    a key, so XOR self-cancellation cannot occur."""
+    obs = Observation()
+    ok = F.col("status") == "ok"
+    row_hash = F.xxhash64(F.concat_ws(":", "url",
+                                      F.crc32("extracted_text")))
+    aggs = []
+    for k in keys:
+        m = key == k
+        aggs += [F.count(F.when(m, 1)).alias(f"n_rows:{k}"),
+                 F.count(F.when(m & ok, 1)).alias(f"n_ok:{k}"),
+                 F.count(F.when(m & ~ok, 1)).alias(f"n_failed:{k}"),
+                 F.sum(F.when(m, F.col("bytes_in"))).alias(f"bytes_in:{k}"),
+                 F.bit_xor(F.when(m, row_hash)).cast("string")
+                 .alias(f"checksum:{k}")]
+
+    def entries() -> dict[int, dict]:
+        got = obs.get  # sum and bit_xor over no rows are null
+        return {k: {c: got[f"{c}:{k}"] or v for c, v in _EMPTY_ENTRY.items()}
+                for k in keys}
+
+    return df.observe(obs, *aggs), entries
 
 
 def extract_stage(pages: DataFrame, profile: str,
@@ -223,17 +212,19 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
     """The job loop of both layouts. ``groups[gid]`` is the fixed list
     of manifest keys (= ``part_col`` values) of group ``gid``; each
     group with uncommitted keys (``todo``) extracts
-    ``frame_for_group(gid, todo)``, writes it idempotently and computes
-    the entry of every key of the group from one aggregate over its
-    written rows (``_key_entries``). Two Spark actions per group: the
-    data write and one collect. Returns the summary fields both
-    layouts share.
+    ``frame_for_group(gid, todo)``, writes it idempotently and commits
+    the entry of every key of ``todo``, observed on the rows it wrote
+    (``_observe_entries``); keys committed by an earlier run keep their
+    entries. One Spark action per group, the data write; its jobs run
+    under the job group ``<job_id>/group=<gid>``. Returns the summary
+    fields both layouts share.
 
     Groups run concurrently on the one session, ``width`` at a time:
     ``defaultParallelism // tasks``, at least 1, where ``tasks`` is the
     largest group's task count (``tasks_per_key * len(todo)``: a scan
-    group is one key of ``tasks_per_key`` files, a bucket one task), so
-    concurrent groups fill the cores and width 1 is the serial run.
+    group is one key of ``tasks_per_key`` files, a bucketed group
+    shuffles into ``len(todo)`` tasks), so concurrent groups fill the
+    cores and width 1 is the serial run.
     Commits are ordered: a group's entries are committed, under
     ``lock``, only once every group before it in this run committed,
     so each run commits a prefix of its groups whatever the thread
@@ -255,6 +246,7 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
     matter), so the groups before it are committed and g is not.
     ``n_groups_run`` counts committed groups."""
     data_dir = os.path.join(manifest.output_dir, "data")
+    scan = part_col == "group"
     manifest.check_plan(key_plan)
     done = manifest.committed_buckets() if resume else set()
     n_keys = sum(map(len, groups))
@@ -291,11 +283,17 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
         if error is not None:
             return
         try:
-            extracted = extract_stage(frame_for_group(gid, todo[gid]),
-                                      profile, max_doc_bytes)
+            spark.sparkContext.setJobGroup(
+                f"{manifest.job_id}/group={gid}",
+                f"extract and write group {gid} of {manifest.job_id}")
+            # a scan group's frame has no key column: it is one key
+            extracted, observed = _observe_entries(
+                extract_stage(frame_for_group(gid, todo[gid]), profile,
+                              max_doc_bytes),
+                todo[gid], F.lit(gid) if scan else F.col(part_col))
             writer = (extracted.sortWithinPartitions("url")
                       .write.mode("overwrite"))
-            if part_col == "group":
+            if scan:
                 # the group is one partition: its own dir, plain
                 # overwrite
                 writer.parquet(os.path.join(data_dir, f"group={gid}"))
@@ -305,7 +303,7 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
                 # that the resume run simply replaces
                 (writer.option("partitionOverwriteMode", "dynamic")
                  .partitionBy(part_col).parquet(data_dir))
-            entries = _key_entries(spark, data_dir, part_col, groups[gid])
+            entries = observed()
         except Exception as exc:
             with lock:
                 error = error or exc
@@ -367,7 +365,7 @@ def run_extraction_bucketed(spark: SparkSession,
 
     def frame_for_group(gid: int, todo: list[int]) -> DataFrame:
         # bucket predicate prunes the shuffle input (partition pruning
-        # on a bucket-partitioned Iceberg table); one task per bucket
+        # on a bucket-partitioned Iceberg table); buckets can share a task
         return (bucketed.where(F.col("p_bucket").isin(todo))
                 .repartition(len(todo), "p_bucket"))
 
@@ -422,9 +420,7 @@ def run_extraction_scan(spark: SparkSession,
     else:
         # a declared schema lists the files without reading a footer;
         # the group frames still infer theirs
-        all_files = sorted(spark.read
-                           .schema("url string, warc_ts timestamp, "
-                                   "html binary")
+        all_files = sorted(spark.read.schema(PAGES_SCHEMA)
                            .parquet(input_path).inputFiles())
     if not all_files:
         raise ValueError(f"no {input_format} input files under "
@@ -501,8 +497,8 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
     either-old-or-new crash semantics as the original write). Works on
     both layouts — rows keep their original partition (group /
     p_bucket), and the manifest entries of the rewritten keys are
-    re-committed from the new rows, so resume state and per-key counts
-    stay exact.
+    re-committed from the rewrite's observed rows, so resume state and
+    per-key counts stay exact.
 
     Shuffle discipline: the quarantine key-set is tiny relative to the
     pages table (1-2% of urls, two skinny columns), so up to
@@ -542,8 +538,9 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
     n_missing = carried.count()
     keep = out.where(F.col(pcol).isin(parts)
                      & (F.col("status") == "ok"))
-    merged = (keep.unionByName(fixed.select(*out.columns))
-              .unionByName(carried.select(*out.columns)))
+    merged, observed = _observe_entries(
+        keep.unionByName(fixed.select(*out.columns))
+        .unionByName(carried.select(*out.columns)), parts, F.col(pcol))
     (merged.sortWithinPartitions("url")
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
@@ -556,9 +553,7 @@ def reprocess_quarantined(spark: SparkSession, input_path: str,
     state = Manifest(output_dir, None).load()
     if state["job_id"] is not None:
         Manifest(output_dir, state["job_id"]).commit(
-            _key_entries(spark, os.path.join(output_dir, "data"), pcol,
-                         parts),
-            state["n_buckets"], state.get("key_plan"))
+            observed(), state["n_buckets"], state.get("key_plan"))
     now_ok = fixed.where(F.col("status") == "ok").count()
     return {"reprocessed": int(n_bad), "partitions": len(parts),
             "now_ok": int(now_ok), "missing": int(n_missing)}

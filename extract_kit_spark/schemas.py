@@ -92,6 +92,18 @@ METADATA_STRUCT = T.StructType([
     T.StructField("optimizations", T.ArrayType(T.StringType())),
 ])
 
+# the pages table, the extraction job's input (url, warc_ts, html are
+# what the extractor reads). File sources read every column as
+# nullable, so the non-null url is enforced only on rows built in
+# Python (ingest.append_pages)
+PAGES_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType(), nullable=False),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("html", T.BinaryType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("lang", T.StringType()),
+])
+
 # the extraction stage's full output row (FIXTURES.md §3)
 EXTRACTION_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), nullable=False),

@@ -28,13 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import types as T
 
-PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("warc_ts", T.TimestampType()),
-    T.StructField("html", T.BinaryType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("lang", T.StringType()),
-])
+from .schemas import PAGES_SCHEMA
 
 
 def _read(spark: SparkSession, schema: T.StructType, input_dir: str,

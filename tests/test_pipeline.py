@@ -3,6 +3,7 @@ byte-identical text vs goldens THROUGH the distributed path, exact
 resume after a mid-job kill, manifest (= per-partition lineage)
 integrity, and parallelism-independence of results."""
 
+import datetime
 import hashlib
 import json
 import os
@@ -25,14 +26,40 @@ def manifest_entries(out):
 
 
 def assert_manifest_counts_data(spark, out):
-    """The manifest is the lineage: its per-key n_rows/n_ok sum to the
-    data's row and ok counts, and no lineage/ copy is written."""
-    committed = manifest_entries(out).values()
+    """The manifest is the lineage: each committed key's entry equals an
+    aggregate over that key's rows read back from the data (a key with
+    no rows: zeros and an empty checksum), every key with rows is
+    committed, and no lineage/ copy is written."""
     df = read_extractions(spark, out)
-    assert sum(v["n_rows"] for v in committed) == df.count()
-    assert sum(v["n_ok"] for v in committed) == \
-        df.where(F.col("status") == "ok").count()
+    key = "group" if "group" in df.columns else "p_bucket"
+    ok = F.col("status") == "ok"
+    data = {str(r[key]): r.asDict() for r in df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.when(ok, 1).otherwise(0)).alias("n_ok"),
+        F.sum(F.when(~ok, 1).otherwise(0)).alias("n_failed"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.bit_xor(F.xxhash64(F.concat_ws(
+            ":", "url", F.crc32("extracted_text")))).cast("string")
+        .alias("checksum")).collect()}
+    empty = {"n_rows": 0, "n_ok": 0, "n_failed": 0, "bytes_in": 0,
+             "checksum": ""}
+    committed = manifest_entries(out)
+    assert set(data) <= set(committed)
+    for k, entry in committed.items():
+        want = {c: data[k][c] for c in empty} if k in data else empty
+        assert {c: entry[c] for c in empty} == want, k
     assert not os.path.exists(os.path.join(out, "lineage"))
+
+
+def write_warc_pages(out_dir, n, records_per_file):
+    """The first ``n`` fixture pages as .warc.gz archives."""
+    from extract_kit_spark import warc
+    rows = []
+    for r in gen_pages(n):
+        td = r["warc_ts"] - datetime.datetime(1970, 1, 1)
+        rows.append({"url": r["url"], "payload": r["html"],
+                     "ts_micros": td // datetime.timedelta(microseconds=1)})
+    warc.write_warc_local(rows, out_dir, records_per_file=records_per_file)
 
 
 GOLDEN_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -323,6 +350,107 @@ def test_concurrent_kill_before_commit_then_resume(spark, pages_multi,
     df = read_extractions(spark, out)
     assert df.count() == N_ROWS
     assert df.select("url").distinct().count() == N_ROWS
+    assert_manifest_counts_data(spark, out)
+
+
+# Spark jobs per commit group, by (layout, input format). No job reads
+# the written rows back: the manifest entries are observed on the write.
+GROUP_JOBS = {
+    # the group frame's parquet footer inference, then the write
+    ("scan", "parquet"): 2,
+    # the write alone: read_warc declares its schema
+    ("scan", "warc"): 1,
+    # AQE's job for the url-hash shuffle's map stage, then the write
+    ("bucketed", "parquet"): 2,
+    ("bucketed", "warc"): 2,
+}
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "warc"])
+@pytest.mark.parametrize("layout", ["scan", "bucketed"])
+def test_each_group_runs_its_jobs_under_its_name(spark, tmp_path, layout,
+                                                 fmt):
+    """Every job of a commit group runs under the job group
+    ``<job_id>/group=<gid>``, and a group runs only the jobs of its
+    plan and its write; the observed entries equal the read-back
+    aggregate."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    if fmt == "parquet":
+        write_pages_dir(pages, 40, n_files=2)
+    else:
+        write_warc_pages(pages, 40, records_per_file=20)
+    job_id = f"jobs-{layout}-{fmt}"
+    if layout == "scan":
+        run_extraction_scan(spark, pages, out, job_id=job_id, n_groups=2,
+                            input_format=fmt)
+    else:
+        run_extraction_bucketed(spark, pages, out, job_id=job_id,
+                                n_buckets=4, commit_group_size=2,
+                                input_format=fmt)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = [len(tracker.getJobIdsForGroup(f"{job_id}/group={gid}"))
+            for gid in range(2)]
+    assert jobs == [GROUP_JOBS[layout, fmt]] * 2
+    assert_manifest_counts_data(spark, out)
+
+
+# the child: the scan job at local[2,2] (a task may fail once), with a
+# stage after the extraction whose first attempt of one task passes all
+# of its rows on and then fails
+_RETRY_CHILD = """
+import os, sys
+from pyspark import TaskContext
+from extract_kit_spark import pipeline
+from extract_kit_spark.session import get_spark
+
+pages, out, marker = sys.argv[1:4]
+real_stage = pipeline.extract_stage
+
+
+def fail_once(batches):
+    yield from batches
+    if TaskContext.get().attemptNumber() == 0:
+        try:
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+        except FileExistsError:
+            return
+        raise RuntimeError("injected failure after the task's rows")
+
+
+def failing_stage(*args, **kwargs):
+    df = real_stage(*args, **kwargs)
+    return df.mapInPandas(fail_once, schema=df.schema)
+
+
+pipeline.extract_stage = failing_stage
+spark = get_spark(master="local[2,2]", shuffle_partitions=2)
+pipeline.run_extraction_scan(spark, pages, out, job_id="retry", n_groups=4)
+spark.stop()
+"""
+
+
+def test_entries_exact_when_a_task_attempt_fails(spark, tmp_path):
+    """A task attempt that fails after its rows went through the write's
+    observation is retried; the manifest counts the committed rows
+    once, not the failed attempt's too."""
+    import subprocess
+    import sys
+    from extract_kit_spark.fixtures import write_pages_dir
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    marker = tmp_path / "failed-once"
+    write_pages_dir(pages, 200, n_files=4)
+    subprocess.run([sys.executable, "-c", _RETRY_CHILD, pages, out,
+                    str(marker)],
+                   cwd=repo, check=True, timeout=600,
+                   stdout=subprocess.DEVNULL,
+                   stderr=subprocess.DEVNULL,
+                   env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"})
+    assert marker.exists()
+    entries = manifest_entries(out)
+    assert len(entries) == 4
+    assert sum(v["n_rows"] for v in entries.values()) == 200
     assert_manifest_counts_data(spark, out)
 
 
