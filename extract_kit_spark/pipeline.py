@@ -25,12 +25,15 @@ payload shuffle would be the single dominant cost of the job. Skew
 from giant documents is bounded by the per-doc byte cap, not by
 repartitioning.
 
-``run_extraction_bucketed``: adds a repartition on xxhash64(url) so the
-OUTPUT is bucketed by url hash (under data/p_bucket=<b>/, sorted within
-each task) — pay the shuffle only when downstream consumers need
-url-co-located / bucket-joinable output. The manifest key is the
-bucket id; groups are ``commit_group_size`` buckets, which can share a
-task (a murmur3 hash of the bucket id picks it).
+``run_extraction_bucketed``: the OUTPUT is bucketed by url hash (under
+data/p_bucket=<b>/, one file per bucket, sorted by url) — pay the
+shuffle only when downstream consumers need url-co-located /
+bucket-joinable output. The job parses its input once: one stage write
+shuffles it into <output>/stage/p_bucket=<b>/ (each bucket wholly in one
+task, so one file), and each commit group reads only its own buckets'
+stage dirs, one task per bucket and no shuffle; a resume reads no input,
+and the stage is deleted once the job is complete. The manifest key is
+the bucket id; groups are ``commit_group_size`` buckets.
 
 Shared scale design
 -------------------
@@ -59,9 +62,11 @@ Shared scale design
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
+import shutil
 import threading
 import uuid
 from collections.abc import Iterator
@@ -174,23 +179,20 @@ def extract_stage(pages: DataFrame, profile: str,
     return pages.mapInPandas(extract_batch, schema=schema)
 
 
-def plan_partition_count(df: DataFrame,
-                         target_bytes: int) -> tuple[int, int]:
-    """One column-pruned aggregate over the payload length sizes the
-    shuffle: returns (n_partitions, total_bytes)."""
-    row = df.select(
-        F.coalesce(F.sum(F.length("html")), F.lit(0)).alias("b"),
-        F.count(F.lit(1)).alias("n")).collect()[0]
-    total = int(row["b"])
-    n = max(1, -(-total // target_bytes))  # ceil
-    return n, total
+def _read_parquet_pages(spark: SparkSession, *paths: str) -> DataFrame:
+    """(url, warc_ts, html) of parquet pages under ``PAGES_SCHEMA``: a
+    declared schema reads no footer to infer one, so it runs no job of
+    its own. A ``string`` html column reads as its UTF-8 bytes."""
+    return (spark.read.schema(PAGES_SCHEMA).parquet(*paths)
+            .select("url", "warc_ts", "html"))
 
 
-def read_pages(spark: SparkSession, input_path: str,
+def read_pages(spark: SparkSession, input_path: str | list[str],
                input_format: str = "parquet") -> DataFrame:
     """Column-pruned scan of the pages table: the extractor needs only
     (url, warc_ts, html); Catalyst pushes the projection to parquet so
-    `text`/`lang` are never read (SURVEY.md §4.2).
+    `text`/`lang` are never read (SURVEY.md §4.2). ``input_path`` is a
+    directory or a list of files.
 
     input_format="warc" reads a Common-Crawl-style archive directory
     instead (warc.read_warc), mapping payload→html — the rest of the
@@ -199,7 +201,47 @@ def read_pages(spark: SparkSession, input_path: str,
         from .warc import read_warc
         return read_warc(spark, input_path, with_index=False).select(
             "url", "warc_ts", F.col("payload").alias("html"))
-    return spark.read.parquet(input_path).select("url", "warc_ts", "html")
+    paths = [input_path] if isinstance(input_path, str) else input_path
+    return _read_parquet_pages(spark, *paths)
+
+
+def _list_input(spark: SparkSession, input_path: str,
+                input_format: str) -> list[str]:
+    """The sorted input files of a job, both layouts' key plan: the scan
+    layout's file groups, and with ``_stored_bytes`` the bucketed
+    layout's bucket count and digest. Raises ValueError on an input
+    with no files."""
+    if input_format == "warc":
+        import glob as _glob
+        # recursive: must agree with the CLI's input validation
+        # (run.py accepts nested archives via **/*.warc.gz — a
+        # top-level-only glob here would pass validation then run
+        # with zero file groups). "**" also matches zero directories,
+        # so top-level archives are included.
+        files = sorted(set(_glob.glob(
+            os.path.join(input_path, "**", "*.warc.gz"),
+            recursive=True)))
+    else:
+        # a declared schema lists the files without reading a footer
+        files = sorted(spark.read.schema(PAGES_SCHEMA)
+                       .parquet(input_path).inputFiles())
+    if not files:
+        raise ValueError(f"no {input_format} input files under "
+                         f"{input_path}")
+    return files
+
+
+def _stored_bytes(spark: SparkSession, files: list[str]) -> list[int]:
+    """Each file's stored (on-disk, compressed) size, from its file
+    system's listing; no file is opened."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    return [int(p.getFileSystem(conf).getFileStatus(p).getLen())
+            for p in map(hpath, files)]
+
+
+def _digest(obj) -> str:
+    return hashlib.sha256(json.dumps(obj).encode("utf-8")).hexdigest()[:16]
 
 
 def _run_groups(spark: SparkSession, manifest: Manifest,
@@ -208,7 +250,8 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
                 part_col: str, key_plan: str, tasks_per_key: int,
                 profile: str, max_doc_bytes: int, resume: bool,
                 fail_after_groups: int | None,
-                fail_before_commit_group: int | None) -> dict:
+                fail_before_commit_group: int | None,
+                expected_rows: dict[int, int] | None = None) -> dict:
     """The job loop of both layouts. ``groups[gid]`` is the fixed list
     of manifest keys (= ``part_col`` values) of group ``gid``; each
     group with uncommitted keys (``todo``) extracts
@@ -233,10 +276,13 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
     their keys stay uncommitted and a resume overwrites them) and
     re-raises the failure.
 
-    ``key_plan`` names what the keys mean (the bucket count, or a
-    digest of the file groups). The manifest records it on first
-    commit, and a run of the same job whose plan differs raises before
-    any work: its keys would name other rows.
+    ``key_plan`` names what the keys mean (the bucket count and input
+    listing, or a digest of the file groups). The manifest records it,
+    and a run of the same job whose plan differs from the one its
+    committed keys were written under raises before any work: its keys
+    would name other rows. With ``expected_rows`` (key -> the rows its
+    input holds), a group whose observed ``n_rows`` of a key differs
+    fails before its commit.
 
     Test hooks, exact at any width: ``fail_after_groups`` runs only the
     first k groups and raises after the k-th commit, so exactly k
@@ -304,6 +350,12 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
                 (writer.option("partitionOverwriteMode", "dynamic")
                  .partitionBy(part_col).parquet(data_dir))
             entries = observed()
+            for k, entry in entries.items():
+                if expected_rows is not None \
+                        and entry["n_rows"] != expected_rows[k]:
+                    raise RuntimeError(
+                        f"group {gid} wrote {entry['n_rows']} rows of "
+                        f"key {k}, its input holds {expected_rows[k]}")
         except Exception as exc:
             with lock:
                 error = error or exc
@@ -327,6 +379,34 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
             "output": data_dir}
 
 
+def _write_stage(spark: SparkSession, manifest: Manifest,
+                 files: list[str], input_format: str, n_buckets: int,
+                 key_plan: str, stage_dir: str) -> dict[int, int]:
+    """Parse the input once into ``stage_dir``, partitioned by
+    ``p_bucket``, and record the stage's per-bucket row counts (observed
+    on the write) in the manifest with ``key_plan``; returns them. The
+    repartition puts each bucket wholly in one task, so each
+    ``p_bucket=<b>/`` dir is one file. The old record is dropped first,
+    so a stage write cut before its record is never taken for a whole
+    one: the next run rebuilds it."""
+    manifest.record_stage(key_plan, n_buckets, None)
+    # deterministic bucket: xxhash64(url) — plan-side expression, stays
+    # in whole-stage codegen; pmod keeps it non-negative
+    bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+    obs = Observation()
+    staged = (read_pages(spark, files, input_format)
+              .withColumn("p_bucket", bucket)
+              .repartition(n_buckets, "p_bucket"))
+    staged = staged.observe(obs, *[
+        F.count(F.when(F.col("p_bucket") == b, 1)).alias(str(b))
+        for b in range(n_buckets)])
+    staged.write.mode("overwrite").partitionBy("p_bucket").parquet(
+        stage_dir)
+    rows = {b: obs.get[str(b)] for b in range(n_buckets)}
+    manifest.record_stage(key_plan, n_buckets, rows)
+    return rows
+
+
 def run_extraction_bucketed(spark: SparkSession,
                             input_path: str,
                             output_dir: str,
@@ -348,35 +428,65 @@ def run_extraction_bucketed(spark: SparkSession,
     [g*commit_group_size, (g+1)*commit_group_size); it runs only its
     uncommitted buckets, so a resume at another ``commit_group_size``
     still finishes exactly. Returns a summary dict; test hooks as in
-    ``_run_groups``."""
-    job_id = job_id or f"extract-{uuid.uuid4().hex[:8]}"
-    pages = read_pages(spark, input_path, input_format)
-    if n_buckets is None:
-        n_buckets, total_bytes = plan_partition_count(
-            pages, target_partition_bytes)
-    else:
-        total_bytes = -1
+    ``_run_groups``.
 
-    # deterministic bucket: xxhash64(url) — plan-side expression, stays
-    # in whole-stage codegen; pmod keeps it non-negative
-    bucketed = pages.withColumn(
-        "p_bucket",
-        F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    The input is parsed once per job: before the groups, a run with
+    uncommitted buckets and no stage recorded under its key plan (or
+    ``resume=False``) writes the stage, ``<output>/stage/p_bucket=<b>/``
+    (``_write_stage``: the job's one shuffle). Each group then reads
+    its own buckets' stage dirs, one read per dir so that each bucket
+    is one task (one read of all of them would let the file-split
+    packer merge mid-sized files into one task), with no shuffle; a
+    resume reads no input at all. The stage is deleted once the job is
+    complete. The tradeoff: one extra O(input) parquet write and read,
+    against one input parse per group before. The name is ``stage``,
+    not ``_stage``: Spark's file index hides ``_``/``.`` paths.
+
+    The key plan ``n_buckets=<n>:inputs=<digest>`` names the bucket
+    count and the sorted input listing (paths and stored sizes), so a
+    resume over changed input is refused (``KeyPlanMismatch``) before
+    any job runs. ``n_buckets=None`` sizes the buckets from the listed
+    bytes: ``total_bytes_planned`` is the input's stored (compressed)
+    size."""
+    job_id = job_id or f"extract-{uuid.uuid4().hex[:8]}"
+    files = _list_input(spark, input_path, input_format)
+    sizes = _stored_bytes(spark, files)
+    total_bytes = sum(sizes)
+    if n_buckets is None:
+        n_buckets = max(1, -(-total_bytes // target_partition_bytes))
+    key_plan = (f"n_buckets={n_buckets}:"
+                f"inputs={_digest(list(zip(files, sizes)))}")
+    manifest = Manifest(output_dir, job_id)
+    manifest.check_plan(key_plan)  # a refused rerun writes nothing
+    stage_dir = os.path.join(output_dir, "stage")
+    stage_rows = manifest.stage_rows(key_plan) if resume else None
+    done = manifest.committed_buckets() if resume else set()
+    if stage_rows is None and len(done) < n_buckets:
+        stage_rows = _write_stage(spark, manifest, files, input_format,
+                                  n_buckets, key_plan, stage_dir)
 
     def frame_for_group(gid: int, todo: list[int]) -> DataFrame:
-        # bucket predicate prunes the shuffle input (partition pruning
-        # on a bucket-partitioned Iceberg table); buckets can share a task
-        return (bucketed.where(F.col("p_bucket").isin(todo))
-                .repartition(len(todo), "p_bucket"))
+        # an empty bucket has no stage dir
+        parts = [_read_parquet_pages(
+            spark, os.path.join(stage_dir, f"p_bucket={b}"))
+            .withColumn("p_bucket", F.lit(b)) for b in todo if stage_rows[b]]
+        if not parts:
+            return spark.createDataFrame([], T.StructType(
+                [PAGES_SCHEMA[c] for c in ("url", "warc_ts", "html")])
+            ).withColumn("p_bucket", F.lit(0))
+        return functools.reduce(DataFrame.unionByName, parts)
 
-    manifest = Manifest(output_dir, job_id)
     keys = list(range(n_buckets))
     groups = [keys[i:i + commit_group_size]
               for i in range(0, n_buckets, commit_group_size)]
     run = _run_groups(spark, manifest, groups, frame_for_group,
-                      "p_bucket", f"n_buckets={n_buckets}", 1,
-                      profile, max_doc_bytes, resume, fail_after_groups,
-                      fail_before_commit_group)
+                      "p_bucket", key_plan, 1, profile, max_doc_bytes,
+                      resume, fail_after_groups, fail_before_commit_group,
+                      expected_rows=stage_rows)
+    if run["complete"] and (stage_rows is not None
+                            or os.path.exists(stage_dir)):
+        manifest.record_stage(key_plan, n_buckets, None)
+        shutil.rmtree(stage_dir, ignore_errors=True)
     return {"job_id": job_id, "n_buckets": n_buckets, **run,
             "total_bytes_planned": total_bytes}
 
@@ -399,32 +509,15 @@ def run_extraction_scan(spark: SparkSession,
     (spark.sql.files.maxPartitionBytes), so payload bytes cross the
     wire exactly once (scan) and once more on write.
 
-    Group g is a fixed slice of the sorted input-file list and its own
-    manifest key; its output lives in data/group=<g>/, and every row
-    keeps its input file as ``src_file``. input_format="warc" runs the
-    same protocol over a directory of .warc.gz archives (one scan task
-    per archive file).
+    Group g is a fixed slice of the sorted input-file list
+    (``_list_input``) and its own manifest key; its output lives in
+    data/group=<g>/, and every row keeps its input file as
+    ``src_file``. input_format="warc" runs the same protocol over a
+    directory of .warc.gz archives (one scan task per archive file).
     Returns a summary dict; test hooks as in ``_run_groups``.
     """
     job_id = job_id or f"extract-{uuid.uuid4().hex[:8]}"
-    if input_format == "warc":
-        import glob as _glob
-        # recursive: must agree with the CLI's input validation
-        # (run.py accepts nested archives via **/*.warc.gz — a
-        # top-level-only glob here would pass validation then run
-        # with zero file groups). "**" also matches zero directories,
-        # so top-level archives are included.
-        all_files = sorted(set(_glob.glob(
-            os.path.join(input_path, "**", "*.warc.gz"),
-            recursive=True)))
-    else:
-        # a declared schema lists the files without reading a footer;
-        # the group frames still infer theirs
-        all_files = sorted(spark.read.schema(PAGES_SCHEMA)
-                           .parquet(input_path).inputFiles())
-    if not all_files:
-        raise ValueError(f"no {input_format} input files under "
-                         f"{input_path}")
+    all_files = _list_input(spark, input_path, input_format)
     n_groups = min(n_groups, len(all_files))
     per = -(-len(all_files) // n_groups)  # ceil
     file_groups = [all_files[i:i + per]
@@ -437,13 +530,10 @@ def run_extraction_scan(spark: SparkSession,
             return read_warc(spark, files).select(
                 "url", "warc_ts", F.col("payload").alias("html"),
                 F.col("warc_file").alias("src_file"))
-        return (spark.read.parquet(*files)
-                .select("url", "warc_ts", "html")
+        return (_read_parquet_pages(spark, *files)
                 .withColumn("src_file", F.input_file_name()))
 
-    digest = hashlib.sha256(
-        json.dumps(file_groups).encode("utf-8")).hexdigest()[:16]
-    plan = f"file_groups={len(file_groups)}:{digest}"
+    plan = f"file_groups={len(file_groups)}:{_digest(file_groups)}"
     manifest = Manifest(output_dir, job_id)
     run = _run_groups(spark, manifest,
                       [[g] for g in range(len(file_groups))],

@@ -249,33 +249,41 @@ def test_scan_layout_end_to_end(spark, pages_multi, tmp_path_factory):
 
 def test_group_plans_shuffle_only_in_bucketed_layout(
         spark, tmp_path, monkeypatch):
-    """Both layouts run through the one group loop; the scan layout's
-    extraction plan has no Exchange (payload never shuffled), the
-    bucketed one has its url-hash repartition."""
+    """Both layouts run through the one group loop, and no group's
+    extraction plan has an Exchange (payload never shuffled there); the
+    bucketed layout's one url-hash repartition is in its stage write."""
     import contextlib
     import io
+    from pyspark.sql.readwriter import DataFrameWriter
     from extract_kit_spark import pipeline
     from extract_kit_spark.fixtures import write_pages_dir
-    stages = []
-    real = pipeline.extract_stage
+    stages, writes = [], {}
+    real, real_parquet = pipeline.extract_stage, DataFrameWriter.parquet
 
     def spy(*args, **kwargs):
         stages.append(real(*args, **kwargs))
         return stages[-1]
 
+    def spy_parquet(writer, path, *args, **kwargs):
+        writes[os.path.basename(path)] = writer._df
+        return real_parquet(writer, path, *args, **kwargs)
+
     monkeypatch.setattr(pipeline, "extract_stage", spy)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
     pages = str(tmp_path / "pages")
     write_pages_dir(pages, 20, n_files=2)
     run_extraction_scan(spark, pages, str(tmp_path / "s"), n_groups=2)
     run_extraction_bucketed(spark, pages, str(tmp_path / "b"),
                             n_buckets=2, commit_group_size=2)
-    has_exchange = []
-    for df in stages:
+
+    def has_exchange(df):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain()
-        has_exchange.append("Exchange" in buf.getvalue())
-    assert has_exchange == [False, False, True]
+        return "Exchange" in buf.getvalue()
+
+    assert [has_exchange(df) for df in stages] == [False, False, False]
+    assert has_exchange(writes["stage"])
 
 
 def test_scan_layout_resume_both_crash_windows(spark, pages_multi,
@@ -355,14 +363,14 @@ def test_concurrent_kill_before_commit_then_resume(spark, pages_multi,
 
 # Spark jobs per commit group, by (layout, input format). No job reads
 # the written rows back: the manifest entries are observed on the write.
+# Each is the write alone: parquet is read under a declared schema,
+# read_warc declares its schema, and a bucketed group reads its staged
+# buckets with no shuffle.
 GROUP_JOBS = {
-    # the group frame's parquet footer inference, then the write
-    ("scan", "parquet"): 2,
-    # the write alone: read_warc declares its schema
+    ("scan", "parquet"): 1,
     ("scan", "warc"): 1,
-    # AQE's job for the url-hash shuffle's map stage, then the write
-    ("bucketed", "parquet"): 2,
-    ("bucketed", "warc"): 2,
+    ("bucketed", "parquet"): 1,
+    ("bucketed", "warc"): 1,
 }
 
 
@@ -591,6 +599,240 @@ def test_rerun_with_another_key_plan_is_refused(spark, tmp_path, layout):
     df = read_extractions(spark, out)
     assert df.count() == 40
     assert df.select("url").distinct().count() == 40
+
+
+@pytest.fixture
+def read_pages_calls(monkeypatch):
+    """The number of ``pipeline.read_pages`` calls so far."""
+    from extract_kit_spark import pipeline
+    calls = []
+    real = pipeline.read_pages
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "read_pages", spy)
+    return calls
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "warc"])
+def test_bucketed_job_parses_its_input_once(spark, tmp_path, fmt,
+                                            read_pages_calls):
+    """A bucketed job cut after one group and resumed parses its input
+    once, in the stage write; the resume reads only the stage, which is
+    gone once the job is complete."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    if fmt == "parquet":
+        write_pages_dir(pages, 40, n_files=2)
+    else:
+        write_warc_pages(pages, 40, records_per_file=20)
+
+    def run(**kw):
+        return run_extraction_bucketed(spark, pages, out, job_id="once",
+                                       n_buckets=4, commit_group_size=2,
+                                       input_format=fmt, **kw)
+
+    with pytest.raises(RuntimeError, match="after 1 groups"):
+        run(fail_after_groups=1)
+    assert os.path.isdir(os.path.join(out, "stage"))
+    summary = run()
+    assert summary["complete"] and summary["n_groups_run"] == 1
+    assert len(read_pages_calls) == 1
+    assert not os.path.exists(os.path.join(out, "stage"))
+    with open(os.path.join(out, "_manifest.json")) as f:
+        assert "stage_rows" not in json.load(f)
+    assert read_extractions(spark, out).count() == 40
+    assert_manifest_counts_data(spark, out)
+
+
+def test_bucketed_resume_over_changed_input_is_refused(spark, tmp_path):
+    """An input file added between a cut and its resume changes the
+    input listing in the key plan: the resume is refused before any
+    job, and the manifest and stage stay as the cut left them."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    from extract_kit_spark.manifest import KeyPlanMismatch
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_dir(pages, 40, n_files=2)
+
+    def run(**kw):
+        return run_extraction_bucketed(spark, pages, out, job_id="chg",
+                                       n_buckets=4, commit_group_size=2,
+                                       **kw)
+
+    with pytest.raises(RuntimeError, match="after 1 groups"):
+        run(fail_after_groups=1)
+    manifest_path = os.path.join(out, "_manifest.json")
+    with open(manifest_path, "rb") as f:
+        before = f.read()
+    stage_files = sorted(os.listdir(os.path.join(out, "stage")))
+    write_pages_dir(str(tmp_path / "more"), 10, n_files=1, seed=7)
+    os.replace(tmp_path / "more" / "part-0000.parquet",
+               os.path.join(pages, "part-9999.parquet"))
+    for resume in (True, False):
+        with pytest.raises(KeyPlanMismatch, match="n_buckets=4:inputs="):
+            run(resume=resume)
+    with open(manifest_path, "rb") as f:
+        assert f.read() == before
+    assert sorted(os.listdir(os.path.join(out, "stage"))) == stage_files
+
+
+def test_output_of_the_unstaged_plan_is_refused(spark, tmp_path):
+    """An output whose keys were committed under the plan that named
+    only the bucket count is refused, not resumed over the stage."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    from extract_kit_spark.manifest import KeyPlanMismatch, Manifest
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_dir(pages, 20, n_files=2)
+    Manifest(out, "old").commit(
+        {0: {"n_rows": 5, "n_ok": 5, "n_failed": 0, "bytes_in": 1,
+             "checksum": "1"}}, 4, "n_buckets=4")
+    with pytest.raises(KeyPlanMismatch, match="planned as n_buckets=4,"):
+        run_extraction_bucketed(spark, pages, out, job_id="old",
+                                n_buckets=4, commit_group_size=2)
+    assert sorted(os.listdir(out)) == ["_manifest.json"]
+
+
+def test_stage_write_cut_before_its_record_is_rebuilt(spark, tmp_path,
+                                                      monkeypatch,
+                                                      read_pages_calls):
+    """A stage written but not recorded (the job killed in between) is
+    not trusted: the next run writes it again, and the job ends with
+    every url exactly once."""
+    import shutil
+    from extract_kit_spark.fixtures import write_pages_dir
+    from extract_kit_spark.manifest import Manifest
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_dir(pages, 40, n_files=2)
+    real = Manifest.record_stage
+
+    def killed(self, key_plan, n_buckets, rows):
+        if rows is not None:
+            raise RuntimeError("killed before the stage record")
+        return real(self, key_plan, n_buckets, rows)
+
+    monkeypatch.setattr(Manifest, "record_stage", killed)
+    with pytest.raises(RuntimeError, match="before the stage record"):
+        run_extraction_bucketed(spark, pages, out, job_id="cut",
+                                n_buckets=4, commit_group_size=2)
+    monkeypatch.setattr(Manifest, "record_stage", real)
+    # the stage on disk is whole here; lose a bucket of it, as a write
+    # cut part way would
+    stage = os.path.join(out, "stage")
+    shutil.rmtree(os.path.join(stage, sorted(
+        d for d in os.listdir(stage) if d.startswith("p_bucket="))[0]))
+    assert manifest_entries(out) == {}
+    summary = run_extraction_bucketed(spark, pages, out, job_id="cut",
+                                      n_buckets=4, commit_group_size=2)
+    assert len(read_pages_calls) == 2
+    assert summary["complete"] and summary["n_rows"] == 40
+    df = read_extractions(spark, out)
+    assert df.count() == 40 and df.select("url").distinct().count() == 40
+    assert_manifest_counts_data(spark, out)
+
+
+def test_group_short_of_its_stage_rows_fails_before_commit(spark,
+                                                           tmp_path):
+    """A group that reads fewer rows of a bucket than the stage recorded
+    raises before its commit, so the bucket stays uncommitted."""
+    import glob
+    import pyarrow.parquet as pq
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_dir(pages, 40, n_files=2)
+
+    def run(**kw):
+        return run_extraction_bucketed(spark, pages, out, job_id="short",
+                                       n_buckets=4, commit_group_size=2,
+                                       **kw)
+
+    with pytest.raises(RuntimeError, match="after 1 groups"):
+        run(fail_after_groups=1)
+    assert sorted(manifest_entries(out)) == ["0", "1"]
+    [part] = glob.glob(os.path.join(out, "stage", "p_bucket=3", "*.parquet"))
+    table = pq.read_table(part)
+    assert table.num_rows > 1
+    pq.write_table(table.slice(1), part, coerce_timestamps="us")
+    # Hadoop's local file system checks the old file's checksum file
+    os.remove(os.path.join(os.path.dirname(part),
+                           f".{os.path.basename(part)}.crc"))
+    with pytest.raises(RuntimeError,
+                       match=f"rows of key 3, its input holds "
+                             f"{table.num_rows}"):
+        run()
+    assert sorted(manifest_entries(out)) == ["0", "1"]
+
+
+def test_each_bucket_dir_holds_one_file(spark, tmp_path):
+    """A bucket lies wholly in one stage task and is read back as one
+    task, so a full run leaves exactly one file per data bucket dir,
+    and every row of bucket b lies under p_bucket=<b>/."""
+    import glob
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_dir(pages, 80, n_files=4)
+    run_extraction_bucketed(spark, pages, out, job_id="files",
+                            n_buckets=8, commit_group_size=4)
+    dirs = glob.glob(os.path.join(out, "data", "p_bucket=*"))
+    assert len(dirs) == 8
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    df = read_extractions(spark, out)
+    bucket = F.pmod(F.xxhash64("url"), F.lit(8)).cast("int")
+    assert df.where(F.col("p_bucket") != bucket).count() == 0
+
+
+def test_empty_buckets_are_committed_empty(spark, tmp_path):
+    """Buckets with no rows have no stage dir; their groups, some with
+    no row at all, still run and commit empty entries, so the job is
+    complete."""
+    from extract_kit_spark.fixtures import write_pages_dir
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_dir(pages, 5, n_files=1)
+    summary = run_extraction_bucketed(spark, pages, out, job_id="empty",
+                                      n_buckets=16, commit_group_size=2)
+    assert summary["complete"] and summary["n_rows"] == 5
+    entries = manifest_entries(out)
+    assert len(entries) == 16
+    assert any(entries[str(2 * g)]["n_rows"] + entries[str(2 * g + 1)]
+               ["n_rows"] == 0 for g in range(8))
+    assert_manifest_counts_data(spark, out)
+
+
+def test_string_html_reads_as_its_utf8_bytes(spark, tmp_path):
+    """Pages are read under PAGES_SCHEMA: a file whose html column is
+    a string reads as its UTF-8 bytes, so it extracts to the same rows,
+    bytes_in included, as the file with binary html."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from extract_kit_spark.fixtures import _rows_to_arrow
+    from extract_kit_spark.pipeline import read_pages
+    rows = []
+    for r in gen_pages(40):
+        try:
+            r["html"].decode("utf-8")
+        except UnicodeDecodeError:
+            continue
+        rows.append(r)
+    assert len(rows) > 20
+    binary = _rows_to_arrow(rows)
+    text = binary.set_column(2, "html", pa.array(
+        [r["html"].decode("utf-8") for r in rows], type=pa.string()))
+    got = {}
+    for name, table in (("binary", binary), ("string", text)):
+        os.makedirs(tmp_path / name)
+        pq.write_table(table, str(tmp_path / name / "part-0.parquet"))
+        out = str(tmp_path / f"out-{name}")
+        run_extraction_scan(spark, str(tmp_path / name), out,
+                            job_id=name, n_groups=1)
+        got[name] = (
+            sorted(read_pages(spark, str(tmp_path / name)).collect()),
+            sorted(read_extractions(spark, out).select(
+                "url", "warc_ts", "status", "extracted_text", "bytes_in")
+                .collect()))
+    assert got["string"] == got["binary"]
+    assert len(got["binary"][0]) == len(rows)
 
 
 def test_extract_stage_echoes_extra_columns(spark):
