@@ -62,7 +62,11 @@ def classify_exception(exc: BaseException, phase: str = "") -> ExtractError:
         return exc
     msg = str(exc)
     low = msg.lower()
-    if isinstance(exc, FileNotFoundError) or "enoent" in low:
+    if isinstance(exc, RecursionError):
+        # nesting deeper than the recursive tree walkers reach: the same
+        # input fails the same way again, so not TIMEOUT (recoverable)
+        code, phase = CONVERSION_FAILED, phase or "depth"
+    elif isinstance(exc, FileNotFoundError) or "enoent" in low:
         code = FILE_NOT_FOUND
     elif isinstance(exc, (TimeoutError,)) or "timeout" in low:
         code = TIMEOUT

@@ -294,8 +294,9 @@ def extract_document(url: str, payload: bytes | None,
                        val_errors=[f"{exc.phase}: {exc}"], t0=t0)
     except Exception as exc:  # absolute backstop: one row in, one row out
         err = errors.classify_exception(exc)
+        msg = f"{err.phase}: {exc}" if err.phase else str(exc)
         return _result(url, detect.KIND_UNKNOWN, status=err.code,
-                       val_errors=[str(exc)], t0=t0)
+                       val_errors=[msg], t0=t0)
 
 
 def span_digest(spans: "list[dict]") -> str:

@@ -54,6 +54,15 @@ Shared scale design
   reduction, `image-optimization.ts:117-147`).
 - Deterministic output: sortWithinPartitions(url) so reruns are
   byte-comparable (SURVEY.md §4.3).
+- Per-task Python cost: PySpark's worker runs
+  ``importlib.invalidate_caches()`` before every task, and before
+  CPython 3.13 that re-reads the central directory of every zip on the
+  worker's path (pyspark.zip once per imported subpackage, plus
+  py4j's): 0.25–0.3 s of setup per task even in a reused worker, more
+  than most groups' UDF time. The package, once imported inside a task,
+  re-reads an archive only when its stat changed
+  (``extract_kit_spark._stat_checked_zip_rereads``), so a reused
+  worker's setup is a few ms; only a worker's first task still pays it.
 - Lineage is the manifest: an Observation on a group's write gives
   each key's entry (n_rows, n_ok, n_failed, bytes_in, checksum);
   nothing reads the output back. Per-input-file provenance stays on

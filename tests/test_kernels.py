@@ -1772,6 +1772,69 @@ def test_wav_roundtrip_and_stdlib_crosscheck():
     assert (pe["fmt_tag"], pe["sample_rate"]) == ("pcm", 22050)
 
 
+_NAN = float("nan")
+# per encoding: channel-0 samples and the channel-0 ints _pcm_ints must
+# give for them, worked out by hand (8-bit: unsigned - 128; 16-bit: as
+# is; 24/32-bit: floor of value / 2**(bits - 16); float: clamp to
+# [-1, 1], times 32767, truncated toward zero, NaN -> 0)
+_WAV_CH0 = {
+    ("pcm", 8): ([0, 128, 255, 1, 200], [-128, 0, 127, -127, 72]),
+    ("pcm", 16): ([0, 1, -1, 32767, -32768, 12345],
+                  [0, 1, -1, 32767, -32768, 12345]),
+    ("pcm", 24): ([0, 1, -1, 8388607, -8388608, 0x123456, -0x123456],
+                  [0, 0, -1, 32767, -32768, 0x1234, -0x1235]),
+    ("pcm", 32): ([0, 1, -1, 2**31 - 1, -2**31, 0x12345678, -0x12345678],
+                  [0, 0, -1, 32767, -32768, 0x1234, -0x1235]),
+    ("float", 32): ([0.0, 0.5, -0.5, 1.0, -1.0, 1.5, -3.0, _NAN, 0.25],
+                    [0, 16383, -16383, 32767, -32767, 32767, -32767, 0,
+                     8191]),
+    ("float", 64): ([0.0, 0.5, -0.5, 1.0, -1.0, 1.5, -3.0, _NAN, 0.25],
+                    [0, 16383, -16383, 32767, -32767, 32767, -32767, 0,
+                     8191]),
+}
+
+
+@pytest.mark.parametrize("channels", [1, 2], ids=["mono", "stereo"])
+@pytest.mark.parametrize("extensible", [False, True],
+                         ids=["plain", "extensible"])
+@pytest.mark.parametrize("fmt_tag,bits", list(_WAV_CH0),
+                         ids=[f"{t}{b}" for t, b in _WAV_CH0])
+def test_wav_codec_round_trip(fmt_tag, bits, extensible, channels):
+    """Every variant decode_wav accepts: encode_wav -> decode_wav ->
+    ops.multimodal._pcm_ints gives the channel-0 ints worked out
+    above; channel 1 carries other values, so an interleave slip
+    shows."""
+    import struct
+    from extract_kit_spark.kernels import wav
+    from extract_kit_spark.ops.multimodal import _pcm_ints
+
+    ch0, want = _WAV_CH0[(fmt_tag, bits)]
+    width = bits // 8
+
+    def sample(v):
+        if fmt_tag == "float":
+            return struct.pack("<d" if bits == 64 else "<f", v)
+        if bits == 8:
+            return bytes([v])
+        return v.to_bytes(width, "little", signed=True)
+
+    def other(v):  # the channel-1 partner of a channel-0 sample
+        if fmt_tag == "float":
+            return -v / 2
+        return 255 - v if bits == 8 else -1 - v
+
+    frames = b"".join(
+        sample(v) + (sample(other(v)) if channels == 2 else b"")
+        for v in ch0)
+    snd = wav.decode_wav(wav.encode_wav(
+        8000, channels, bits, frames, float_fmt=fmt_tag == "float",
+        extensible=extensible))
+    assert (snd["fmt_tag"], snd["bit_depth"], snd["channels"],
+            snd["n_samples"]) == (fmt_tag, bits, channels, len(ch0))
+    assert snd["samples"] == frames
+    assert _pcm_ints(snd) == want
+
+
 def test_wav_typed_errors():
     """Structural damage / unsupported codecs → WavError only."""
     import random

@@ -864,6 +864,30 @@ def test_extract_stage_echoes_extra_columns(spark):
                 == {(r["url"], r["n"], r["tag"]) for r in rows}
 
 
+def test_deep_nesting_gets_one_typed_row(spark):
+    """Nesting past Python's recursion limit in the tree walkers gives
+    exactly one row with a typed, non-recoverable status
+    (CONVERSION_FAILED, phase depth), not GENERAL_ERROR; 700 levels
+    still extract with their text."""
+    from extract_kit_spark.kernels import errors
+    from extract_kit_spark.pipeline import extract_stage
+    rows = gen_pages(2)
+    for r, depth in zip(rows, (700, 1000)):
+        r.pop("_kind")
+        r["html"] = (f"<html><body>{'<font>' * depth}deep {depth} text"
+                     f"{'</font>' * depth}</body></html>").encode()
+    pages = spark.createDataFrame(rows).select("url", "warc_ts", "html")
+    got = {r["url"]: r for r in
+           extract_stage(pages, "auto", 1 << 20).collect()}
+    assert sorted(got) == sorted(r["url"] for r in rows)
+    ok, deep = (got[r["url"]] for r in rows)
+    assert ok["status"] == "ok"
+    assert ok["extracted_text"].strip() == "deep 700 text"
+    assert deep["status"] == errors.CONVERSION_FAILED
+    assert deep["status"] not in errors.RECOVERABLE
+    assert deep["validation"]["errors"][0].startswith("depth: ")
+
+
 def test_scan_layout_matches_bucketed_results(spark, pages_multi,
                                               extracted):
     """Both layouts produce the identical (url, extracted_text) set."""
