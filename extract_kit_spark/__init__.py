@@ -13,7 +13,8 @@ Layout
 kernels/   pure-Python extraction kernels (no Spark imports) — unit-testable
 ops/       training-data-pipeline operators (dedup, similarity, text stats)
 schemas.py StructType contracts (the reference's Zod schemas re-expressed)
-pipeline.py  the Spark job: read → gate → repartition → mapInPandas → write
+pipeline.py  the Spark job: per commit group read → mapInPandas → write
+             → manifest commit
 manifest.py  checkpoint manifest (= per-partition lineage), exact resume
 fixtures.py  deterministic synthetic `pages` table generator (seed=42)
 session.py   SparkSession helper tuned for the extraction workload

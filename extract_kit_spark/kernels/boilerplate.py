@@ -103,41 +103,22 @@ def _stripped_len(st: tuple) -> int:
     return s if s > 0 else 0
 
 
-def link_density(node: Node, stats: dict | None = None) -> float:
-    """anchor-text chars / total text chars of a subtree (0 if no text)."""
-    if stats is None:
-        stats = compute_stats(node)
-    st = stats[id(node)]
-    total = _stripped_len(st)
-    if total == 0:
-        return 0.0
-    return min(1.0, st[3] / total)
-
-
-def text_density(node: Node) -> float:
-    """text chars per descendant element (Boilerpipe-style density proxy)."""
-    n_elems = sum(1 for _ in node.iter())
-    return len(node.text_content().strip()) / max(1, n_elems)
-
-
 def _is_chrome_named(node: Node) -> bool:
     blob = f"{node.get('id')} {node.get('class')} {node.get('role')}"
     return bool(_CHROME_RE.search(blob))
 
 
-def classify_block(node: Node, stats: dict | None = None) -> bool:
+def classify_block(node: Node, stats: dict) -> bool:
     """True if the block is boilerplate (should be removed).
 
-    Density/protection signals come from a precomputed stats table
-    (``compute_stats``); callers classifying many blocks of one tree
-    pass the table so shared subtrees are measured exactly once."""
+    Density/protection signals come from the tree's precomputed stats
+    table (``compute_stats``), so shared subtrees are measured exactly
+    once."""
     if node.tag in _STRIP_TAGS:
         return True
     if node.tag in ("header", "footer") and node.parent is not None \
             and node.parent.tag in ("body", "html", "#document", "div"):
         return True
-    if stats is None:
-        stats = compute_stats(node)
     st = stats[id(node)]
     total = _stripped_len(st)
     protected = st[4] or total >= LONG_TEXT_CHARS

@@ -3,9 +3,11 @@
 Re-expresses the reference's detector (D1–D5 in SURVEY.md §2.2):
 signature matching (`office-to-markdown/src/utils/file-detector.ts:59-107`),
 ZIP-container Office sniff looking for ``word/document.xml`` etc. in the
-leading bytes (`file-detector.ts:112-138`), and the supported-type
-allowlist (`file-detector.ts:203-230`).  Runs per Arrow batch (bytes ops
-over a pandas column) — never per-row Python at the plan level.
+leading bytes (`file-detector.ts:112-138`). The supported-type
+allowlist (`file-detector.ts:203-230`) is ``extract.extract_document``'s
+converter branches: every other kind is quarantined. Runs per Arrow
+batch (bytes ops over a pandas column) — never per-row Python at the
+plan level.
 """
 
 from __future__ import annotations
@@ -26,12 +28,6 @@ KIND_GIF = "gif"
 KIND_BMP = "bmp"
 KIND_EMPTY = "empty"
 KIND_UNKNOWN = "unknown"
-
-# supported-for-conversion parity with the reference's allowlist
-# (file-detector.ts:203-230: docx/msword, text/html, text/plain,
-# text/markdown); msword (.doc CFB) is detected but quarantined like
-# every kind without a converter branch
-SUPPORTED = frozenset({KIND_HTML, KIND_PDF, KIND_DOCX, KIND_TEXT})
 
 # magic signatures, checked in order (parity: file-detector.ts:59-107)
 _SIGS = (
@@ -184,6 +180,3 @@ def sniff_charset(payload: bytes, default: str = "utf-8") -> str:
             pass
     return default
 
-
-def is_supported(kind: str) -> bool:
-    return kind in SUPPORTED

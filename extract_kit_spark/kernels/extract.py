@@ -72,37 +72,61 @@ def _result(url: str, doc_kind: str, title=None, text="", spans=None,
 
 
 def _select_profile(requested: str, root) -> str:
+    return _choose_profile(requested, root.text_content,
+                           lambda: root.find("table") is not None)
+
+
+def _select_profile_lines(requested: str, lines: list[str]) -> str:
+    return _choose_profile(
+        requested, lambda: "\n".join(lines),
+        lambda: extract_tables_lines(lines)["table_count"] > 0)
+
+
+def _choose_profile(requested: str, text_of, has_table) -> str:
     """Schema-selection precedence analogue (Q1,
     `core/vision/schema-selector.ts:20-58`): an explicit profile wins;
     ``auto`` sniffs the document (invoice labels > receipt items >
-    tables > generic)."""
+    tables > generic). The input's ``text_of``/``has_table`` run lazily."""
     if requested != "auto":
         return requested
-    text = root.text_content()
+    text = text_of()
     low = text.lower()
     if "invoice number" in low or "facture n" in low:
         return "invoice"
     if " @ " in text and ("payment:" in low or "paiement" in low):
         return "receipt"
-    if root.find("table") is not None:
+    if has_table():
         return "tables"
     return "generic"
 
 
-def _extract_fields(profile: str, root) -> tuple[dict, list[str], str]:
+def _extract_fields(profile: str, doc, tables, invoice,
+                    receipt) -> tuple[dict, list[str]]:
+    """Run ``profile`` with one input's extractors: the DOM body with
+    ``extract_{tables,invoice,receipt}``, or text lines with their
+    ``_lines`` forms."""
     fields = _empty_fields()
     val_errors: list[str] = []
     if profile == "invoice":
-        fields["invoice"], val_errors = extract_invoice(root)
         # an invoice page's line-items table is also a table
-        fields["tables"] = extract_tables(root)
+        fields["tables"] = tables(doc)
+        fields["invoice"], val_errors = invoice(doc, fields["tables"])
     elif profile == "receipt":
-        fields["receipt"], val_errors = extract_receipt(root)
+        fields["receipt"], val_errors = receipt(doc)
     elif profile == "tables":
-        fields["tables"] = extract_tables(root)
+        fields["tables"] = tables(doc)
         if fields["tables"]["table_count"] == 0:
             val_errors = ["tables profile: no tables detected"]
-    return fields, val_errors, profile
+    return fields, val_errors
+
+
+def _line_fields(profile: str, lines: list[str]) -> tuple:
+    """(schema_used, fields, validation errors) of reading-ordered lines
+    (the PDF and text branches)."""
+    chosen = _select_profile_lines(profile, lines)
+    return (chosen, *_extract_fields(chosen, lines, extract_tables_lines,
+                                     extract_invoice_lines,
+                                     extract_receipt_lines))
 
 
 def extract_html(url: str, payload: bytes, profile: str, t0: float,
@@ -120,46 +144,11 @@ def extract_html(url: str, payload: bytes, profile: str, t0: float,
     chosen = _select_profile(profile, body)
     blocks = serialize_blocks(body)
     text, spans = assemble(blocks)
-    fields, val_errors, schema_used = _extract_fields(chosen, body)
+    fields, val_errors = _extract_fields(chosen, body, extract_tables,
+                                         extract_invoice, extract_receipt)
     return _result(url, doc_kind, title=title, text=text, spans=spans,
                    fields=fields, val_errors=val_errors, pages=1,
-                   schema_used=schema_used, optimizations=opts, t0=t0)
-
-
-def _select_profile_lines(requested: str, lines: list[str]) -> str:
-    """Schema-selection precedence for the PDF branch — same rules as
-    _select_profile but over reading-ordered text lines (Q1 analogue,
-    `core/vision/schema-selector.ts:20-58`)."""
-    if requested != "auto":
-        return requested
-    text = "\n".join(lines)
-    low = text.lower()
-    if "invoice number" in low or "facture n" in low:
-        return "invoice"
-    if " @ " in text and ("payment:" in low or "paiement" in low):
-        return "receipt"
-    if extract_tables_lines(lines)["table_count"] > 0:
-        return "tables"
-    return "generic"
-
-
-def _extract_fields_lines(profile: str,
-                          lines: list[str]) -> tuple[dict, list[str], str]:
-    """Line-based twin of _extract_fields — the deterministic analogue
-    of extractInvoicePdf / extractReceiptPdf / extractTablesPdf
-    (`pdf-processor/src/lib/index.ts:138-184`)."""
-    fields = _empty_fields()
-    val_errors: list[str] = []
-    if profile == "invoice":
-        fields["invoice"], val_errors = extract_invoice_lines(lines)
-        fields["tables"] = extract_tables_lines(lines)
-    elif profile == "receipt":
-        fields["receipt"], val_errors = extract_receipt_lines(lines)
-    elif profile == "tables":
-        fields["tables"] = extract_tables_lines(lines)
-        if fields["tables"]["table_count"] == 0:
-            val_errors = ["tables profile: no tables detected"]
-    return fields, val_errors, profile
+                   schema_used=chosen, optimizations=opts, t0=t0)
 
 
 def extract_text(url: str, payload: bytes, profile: str,
@@ -224,10 +213,8 @@ def extract_text(url: str, payload: bytes, profile: str,
     if title is None:  # no heading: first non-empty source line
         title = next((ln.strip() for ln in lines if ln.strip()), None)
     out_text, spans = assemble(blocks)
-    chosen = _select_profile_lines(profile,
-                                   [ln.strip() for ln in lines])
-    fields, val_errors, schema_used = _extract_fields_lines(
-        chosen, [ln.strip() for ln in lines])
+    schema_used, fields, val_errors = _line_fields(
+        profile, [ln.strip() for ln in lines])
     return _result(url, detect.KIND_TEXT, title=title, text=out_text,
                    spans=spans, fields=fields, val_errors=val_errors,
                    pages=1, schema_used=schema_used,
@@ -241,7 +228,7 @@ def extract_pdf(url: str, payload: bytes, profile: str, t0: float) -> dict:
     flat_lines: list[str] = []
     for lines in pages:
         flat_lines.extend(lines)
-        for i, line in enumerate(lines):
+        for line in lines:
             if title is None and line.strip():
                 title = line.strip()
                 blocks.append(("heading", f"# {title}"))
@@ -249,9 +236,7 @@ def extract_pdf(url: str, payload: bytes, profile: str, t0: float) -> dict:
                 blocks.append(("para", line))
     text, spans = assemble(blocks)
     n_pages = page_count(payload) or len(pages)
-    chosen = _select_profile_lines(profile, flat_lines)
-    fields, val_errors, schema_used = _extract_fields_lines(chosen,
-                                                            flat_lines)
+    schema_used, fields, val_errors = _line_fields(profile, flat_lines)
     return _result(url, detect.KIND_PDF, title=title, text=text,
                    spans=spans, fields=fields, val_errors=val_errors,
                    pages=n_pages, schema_used=schema_used,

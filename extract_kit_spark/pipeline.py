@@ -1,4 +1,5 @@
-"""The extraction job: read → gate → mapInPandas → write.
+"""The extraction job: per commit group read → mapInPandas → write →
+commit.
 
 The Spark lifecycle of SURVEY.md §3.4, replacing the reference's two
 orchestrators (`core/vision/processor.ts:68-146` and

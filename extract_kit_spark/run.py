@@ -18,7 +18,9 @@ cluster time is spent.
 from __future__ import annotations
 
 import argparse
+import glob
 import json
+import os
 import sys
 
 from .kernels.extract import MAX_DOC_BYTES, PROFILES
@@ -140,154 +142,127 @@ def _cli_spark(app_name: str, master: str | None):
     return spark, pre is None
 
 
+def _error(msg: str) -> int:
+    print(f"extract_kit_spark: error: {msg}", file=sys.stderr)
+    return 2
+
+
+def _run_job(app_name: str, master: str | None, job) -> int:
+    """Run ``job(spark)`` in the CLI session and print its summary as
+    one JSON line: exit 0, or 2 on a manifest key-plan mismatch. Stops
+    the session only when this call made it (``_cli_spark``)."""
+    from .manifest import KeyPlanMismatch
+    spark, owns = _cli_spark(app_name, master)
+    try:
+        print(json.dumps(job(spark)), flush=True)
+        return 0
+    except KeyPlanMismatch as exc:
+        return _error(str(exc))
+    finally:
+        if owns:
+            spark.stop()
+
+
+def _crawl_plan(spark, args: argparse.Namespace) -> dict:
+    """Write the next crawl cycle to <output>/crawl_plan; summarize it."""
+    from pyspark.sql import functions as F
+
+    from .ops.weburl import crawl_plan
+    pages = spark.read.parquet(args.input).select("url", "warc_ts")
+    plan = crawl_plan(spark.read.parquet(args.sitemaps),
+                      pages, spark.read.parquet(args.robots))
+    out = os.path.join(args.output, "crawl_plan")
+    (plan.sortWithinPartitions("domain", "seq")
+     .write.mode("overwrite").parquet(out))
+    row = spark.read.parquet(out).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("reason") == "new", 1)
+              .otherwise(0)).alias("n_new"),
+        F.countDistinct("domain").alias("n_domains"),
+        F.max("fetch_offset_s").alias("max_off")).collect()[0]
+    return {"n_urls": int(row["n"]),
+            "n_new": int(row["n_new"] or 0),
+            "n_stale": int(row["n"] - (row["n_new"] or 0)),
+            "n_domains": int(row["n_domains"]),
+            "max_offset_s": int(row["max_off"] or 0),
+            "output": out}
+
+
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-    import glob
-    import os
+    mode = ("compact" if args.compact else "manifest" if args.manifest
+            else "curate" if args.curate else None)
+    if mode and "://" not in args.output and not os.path.isdir(
+            os.path.join(args.output, "data")):
+        return _error(f"--output has no data/ dir to {mode}: "
+                      f"{args.output}")
     if args.compact:
         from .compact import compact_output
-        if "://" not in args.output and not os.path.isdir(
-                os.path.join(args.output, "data")):
-            print(f"extract_kit_spark: error: --output has no data/ "
-                  f"dir to compact: {args.output}", file=sys.stderr)
-            return 2
-        spark, owns = _cli_spark("extract-kit-compact", args.master)
-        try:
-            summary = compact_output(
-                spark, args.output,
-                target_bytes=args.target_partition_bytes)
-            print(json.dumps(summary), flush=True)
-            return 0
-        finally:
-            if owns:
-                spark.stop()
+        return _run_job("extract-kit-compact", args.master,
+                        lambda spark: compact_output(
+                            spark, args.output,
+                            target_bytes=args.target_partition_bytes))
     if args.manifest:
         from .pipeline import manifest_extracted
-        if "://" not in args.output and not os.path.isdir(
-                os.path.join(args.output, "data")):
-            print(f"extract_kit_spark: error: --output has no data/ "
-                  f"dir to manifest: {args.output}", file=sys.stderr)
-            return 2
-        spark, owns = _cli_spark("extract-kit-manifest", args.master)
-        try:
-            summary = manifest_extracted(
-                spark, args.output, min_quality=args.min_quality)
-            print(json.dumps(summary), flush=True)
-            return 0
-        finally:
-            if owns:
-                spark.stop()
+        return _run_job("extract-kit-manifest", args.master,
+                        lambda spark: manifest_extracted(
+                            spark, args.output, min_quality=args.min_quality))
     if args.curate:
         from .pipeline import curate_extracted
-        if "://" not in args.output and not os.path.isdir(
-                os.path.join(args.output, "data")):
-            print(f"extract_kit_spark: error: --output has no data/ "
-                  f"dir to curate: {args.output}", file=sys.stderr)
-            return 2
-        spark, owns = _cli_spark("extract-kit-curate", args.master)
-        try:
-            summary = curate_extracted(
-                spark, args.output, min_quality=args.min_quality,
-                langs=tuple(x for x in args.langs.split(",") if x),
-                strip_dup_spans=args.strip_dup_spans,
-                route=args.near_dup_route)
-            print(json.dumps(summary), flush=True)
-            return 0
-        finally:
-            if owns:
-                spark.stop()
+        return _run_job("extract-kit-curate", args.master,
+                        lambda spark: curate_extracted(
+                            spark, args.output, min_quality=args.min_quality,
+                            langs=tuple(x for x in args.langs.split(",")
+                                        if x),
+                            strip_dup_spans=args.strip_dup_spans,
+                            route=args.near_dup_route))
     if "://" not in args.input:
         if not os.path.exists(args.input):
-            print(f"extract_kit_spark: error: --input path does not "
-                  f"exist: {args.input}", file=sys.stderr)
-            return 2
+            return _error(f"--input path does not exist: {args.input}")
         ext = ("*.warc.gz" if args.input_format == "warc"
                else "*.parquet")
         if os.path.isdir(args.input) and not (
                 glob.glob(os.path.join(args.input, ext))
                 or glob.glob(os.path.join(args.input, "**", ext),
                              recursive=True)):
-            print(f"extract_kit_spark: error: --input contains no "
-                  f"{ext} files: {args.input}", file=sys.stderr)
-            return 2
+            return _error(f"--input contains no {ext} files: "
+                          f"{args.input}")
     if args.crawl_plan:
         if not args.robots or not args.sitemaps:
-            print("extract_kit_spark: error: --crawl-plan requires "
-                  "--robots and --sitemaps", file=sys.stderr)
-            return 2
+            return _error("--crawl-plan requires --robots and --sitemaps")
         for pth, nm in ((args.robots, "--robots"),
                         (args.sitemaps, "--sitemaps")):
             if "://" not in pth and not os.path.exists(pth):
-                print(f"extract_kit_spark: error: {nm} path does not "
-                      f"exist: {pth}", file=sys.stderr)
-                return 2
-        from pyspark.sql import functions as F
-        from .ops.weburl import crawl_plan
-        spark, owns = _cli_spark("extract-kit-crawl-plan", args.master)
-        try:
-            pages = spark.read.parquet(args.input) \
-                .select("url", "warc_ts")
-            plan = crawl_plan(spark.read.parquet(args.sitemaps),
-                              pages, spark.read.parquet(args.robots))
-            out = os.path.join(args.output, "crawl_plan")
-            (plan.sortWithinPartitions("domain", "seq")
-             .write.mode("overwrite").parquet(out))
-            done = spark.read.parquet(out)
-            row = done.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("reason") == "new", 1)
-                      .otherwise(0)).alias("n_new"),
-                F.countDistinct("domain").alias("n_domains"),
-                F.max("fetch_offset_s").alias("max_off")).collect()[0]
-            summary = {"n_urls": int(row["n"]),
-                       "n_new": int(row["n_new"] or 0),
-                       "n_stale": int(row["n"] - (row["n_new"] or 0)),
-                       "n_domains": int(row["n_domains"]),
-                       "max_offset_s": int(row["max_off"] or 0),
-                       "output": out}
-            print(json.dumps(summary), flush=True)
-            return 0
-        finally:
-            if owns:
-                spark.stop()
-    from .manifest import KeyPlanMismatch
+                return _error(f"{nm} path does not exist: {pth}")
+        return _run_job("extract-kit-crawl-plan", args.master,
+                        lambda spark: _crawl_plan(spark, args))
     from .pipeline import (reprocess_quarantined,
                            run_extraction_bucketed, run_extraction_scan)
-    spark, owns = _cli_spark("extract-kit-run", args.master)
-    try:
+
+    def extract(spark) -> dict:
         if args.reprocess_quarantined:
-            summary = reprocess_quarantined(
+            return reprocess_quarantined(
                 spark, args.input, args.output, profile=args.profile,
                 max_doc_bytes=args.max_doc_bytes,
                 input_format=args.input_format)
-            print(json.dumps(summary), flush=True)
-            return 0
         if args.layout == "scan":
-            summary = run_extraction_scan(
+            return run_extraction_scan(
                 spark, args.input, args.output,
                 profile=args.profile, job_id=args.job_id,
                 n_groups=args.n_groups,
                 max_doc_bytes=args.max_doc_bytes,
                 resume=not args.no_resume,
                 input_format=args.input_format)
-        else:
-            summary = run_extraction_bucketed(
-                spark, args.input, args.output,
-                profile=args.profile, job_id=args.job_id,
-                n_buckets=args.n_buckets,
-                commit_group_size=args.commit_group_size,
-                target_partition_bytes=args.target_partition_bytes,
-                max_doc_bytes=args.max_doc_bytes,
-                resume=not args.no_resume,
-                input_format=args.input_format)
-        print(json.dumps(summary), flush=True)
-        return 0
-    except KeyPlanMismatch as exc:
-        print(f"extract_kit_spark: error: {exc}", file=sys.stderr)
-        return 2
-    finally:
-        if owns:
-            spark.stop()
+        return run_extraction_bucketed(
+            spark, args.input, args.output,
+            profile=args.profile, job_id=args.job_id,
+            n_buckets=args.n_buckets,
+            commit_group_size=args.commit_group_size,
+            target_partition_bytes=args.target_partition_bytes,
+            max_doc_bytes=args.max_doc_bytes,
+            resume=not args.no_resume,
+            input_format=args.input_format)
+    return _run_job("extract-kit-run", args.master, extract)
 
 
 if __name__ == "__main__":

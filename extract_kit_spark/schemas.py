@@ -94,8 +94,7 @@ METADATA_STRUCT = T.StructType([
 
 # the pages table, the extraction job's input (url, warc_ts, html are
 # what the extractor reads). File sources read every column as
-# nullable, so the non-null url is enforced only on rows built in
-# Python (ingest.append_pages)
+# nullable, so the declared non-null url is not enforced on read
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), nullable=False),
     T.StructField("warc_ts", T.TimestampType()),

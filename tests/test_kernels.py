@@ -360,6 +360,90 @@ def test_invoice_coherence():
         assert 0.0 <= inv["confidence_score"] <= 1.0
 
 
+def test_invoice_page_builds_its_tables_once(monkeypatch):
+    """The invoice profile hands its tables to extract_invoice: an HTML
+    invoice page under ``auto`` builds them once, not once per use."""
+    from extract_kit_spark.kernels import extract, fields
+    real = fields.extract_tables
+    calls = []
+
+    def counted(root):
+        calls.append(root)
+        return real(root)
+    monkeypatch.setattr(fields, "extract_tables", counted)
+    monkeypatch.setattr(extract, "extract_tables", counted)
+    row = next(r for r in map(gen_page, range(400))
+               if r["_kind"] == "invoice_page")
+    res = extract_document(row["url"], row["html"])
+    assert res["metadata"]["schema_used"] == "invoice"
+    assert res["fields"]["invoice"]["line_items"]
+    assert res["fields"]["tables"]["table_count"] == 1
+    assert len(calls) == 1
+
+
+def _html_and_text(res_of, html_body: str, lines: list[str]):
+    """``res_of`` of the same document as HTML and as plain text."""
+    html = f"<html><body>{html_body}</body></html>".encode("utf-8")
+    text = "\n".join(lines).encode("utf-8")
+    got = [extract_document("u", payload) for payload in (html, text)]
+    assert [r["doc_kind"] for r in got] == ["html", "text"]
+    return [res_of(r) for r in got]
+
+
+@pytest.mark.parametrize("total,items", [
+    ("3.99", [("bread", 2, "1.50", "3.00"), ("milk", 1, "0.99", "0.99")]),
+    ("5.00", [("bread", 2, "1.50", "3.00"), ("milk", 1, "0.99", "0.99")]),
+    ("0.00", [("free sample", 1, "0.00", "0.00")]),
+], ids=["coherent", "incoherent", "zero-price"])
+def test_receipt_same_rules_for_dom_and_lines(total, items):
+    """A receipt as <h1>/<p>/<li> HTML and as the equivalent text lines
+    gives equal fields and equal validation errors."""
+    item_lines = [f"{n} x{q} @ {p} = {t}" for n, q, p, t in items]
+    labels = ["Date: 2025-03-04", f"Total: {total}", "Payment: card",
+              "Currency: EUR"]
+    html = ("<h1>Corner Store</h1>"
+            + "".join(f"<p>{ln}</p>" for ln in labels[:1])
+            + "<ul>" + "".join(f"<li>{ln}</li>" for ln in item_lines)
+            + "</ul>" + "".join(f"<p>{ln}</p>" for ln in labels[1:]))
+    dom, lines = _html_and_text(
+        lambda r: (r["metadata"]["schema_used"], r["fields"]["receipt"],
+                   r["validation"]["errors"]),
+        html, ["Corner Store", *labels[:1], *item_lines, *labels[1:]])
+    assert dom == lines
+    assert dom[0] == "receipt"
+    assert dom[1]["merchant_name"] == "Corner Store"
+    assert len(dom[1]["items"]) == len(items)
+    assert bool(dom[2]) == (total != "3.99")
+
+
+@pytest.mark.parametrize("total", ["Total: 25.50 EUR", "Total: 30.00 EUR",
+                                   "Grand sum 25.50"],
+                         ids=["coherent", "incoherent", "no-total"])
+def test_invoice_same_rules_for_dom_and_lines(total):
+    """An invoice as labeled <p>s plus a line-items table and as the
+    equivalent text lines gives equal labeled fields, total, line items
+    and coherence errors."""
+    labels = ["Invoice Number: INV-000042", "Invoice Date: 2025-04-01",
+              "Currency: EUR", "Seller: Acme GmbH", "Buyer: Bolt SARL"]
+    items = [("widget", 2, "10.00", "20.00"), ("bolt", 1, "5.50", "5.50")]
+    rows = "".join(f"<tr><td>{d}</td><td>{q}</td><td>{u}</td><td>{t}</td>"
+                   "</tr>" for d, q, u, t in items)
+    html = ("".join(f"<p>{ln}</p>" for ln in labels)
+            + "<table><tr><th>Description</th><th>Quantity</th>"
+            "<th>Unit Price</th><th>Line Total</th></tr>" + rows
+            + f"</table><p>{total}</p>")
+    dom, lines = _html_and_text(
+        lambda r: (r["metadata"]["schema_used"], r["fields"]["invoice"],
+                   r["validation"]["errors"]),
+        html, [*labels, *(f"{d} x{q} @ {u} = {t}" for d, q, u, t in items),
+               total])
+    assert dom == lines
+    assert dom[0] == "invoice"
+    assert dom[1]["seller"] == "Acme GmbH"
+    assert len(dom[1]["line_items"]) == 2
+    assert bool(dom[2]) == (total != "Total: 25.50 EUR")
+
+
 def test_docx_math_to_latex():
     for i in range(400):
         row = gen_page(i)
