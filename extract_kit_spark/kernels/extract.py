@@ -76,10 +76,11 @@ def _select_profile(requested: str, root) -> str:
                            lambda: root.find("table") is not None)
 
 
-def _select_profile_lines(requested: str, lines: list[str]) -> str:
+def _select_profile_lines(requested: str, lines: list[str],
+                          tables_of) -> str:
     return _choose_profile(
         requested, lambda: "\n".join(lines),
-        lambda: extract_tables_lines(lines)["table_count"] > 0)
+        lambda: tables_of(lines)["table_count"] > 0)
 
 
 def _choose_profile(requested: str, text_of, has_table) -> str:
@@ -122,9 +123,17 @@ def _extract_fields(profile: str, doc, tables, invoice,
 
 def _line_fields(profile: str, lines: list[str]) -> tuple:
     """(schema_used, fields, validation errors) of reading-ordered lines
-    (the PDF and text branches)."""
-    chosen = _select_profile_lines(profile, lines)
-    return (chosen, *_extract_fields(chosen, lines, extract_tables_lines,
+    (the PDF and text branches). The lines' tables are built at most
+    once: ``auto``'s table check and the tables profile share them."""
+    built: list[dict] = []
+
+    def tables_of(doc: list[str]) -> dict:
+        if not built:
+            built.append(extract_tables_lines(doc))
+        return built[0]
+
+    chosen = _select_profile_lines(profile, lines, tables_of)
+    return (chosen, *_extract_fields(chosen, lines, tables_of,
                                      extract_invoice_lines,
                                      extract_receipt_lines))
 

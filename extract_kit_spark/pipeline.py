@@ -276,8 +276,9 @@ def _run_groups(spark: SparkSession, manifest: Manifest,
     ``defaultParallelism // tasks``, at least 1, where ``tasks`` is the
     largest group's task count (``tasks_per_key * len(todo)``: a scan
     group is one key of ``tasks_per_key`` files, a bucketed group
-    shuffles into ``len(todo)`` tasks), so concurrent groups fill the
-    cores and width 1 is the serial run.
+    reads its ``len(todo)`` stage dirs, one task per bucket and no
+    shuffle), so concurrent groups fill the cores and width 1 is the
+    serial run.
     Commits are ordered: a group's entries are committed, under
     ``lock``, only once every group before it in this run committed,
     so each run commits a prefix of its groups whatever the thread

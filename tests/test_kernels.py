@@ -381,6 +381,26 @@ def test_invoice_page_builds_its_tables_once(monkeypatch):
     assert len(calls) == 1
 
 
+def test_text_tables_document_builds_its_tables_once(monkeypatch):
+    """``auto``'s table check over text lines and the tables profile it
+    picks share one ``extract_tables_lines`` result."""
+    from extract_kit_spark.kernels import extract
+    real = extract.extract_tables_lines
+    calls = []
+
+    def counted(lines):
+        calls.append(lines)
+        return real(lines)
+    monkeypatch.setattr(extract, "extract_tables_lines", counted)
+    res = extract_document(
+        "u", b"Parts list\nwidget x2 @ 10.00 = 20.00\n"
+             b"bolt x1 @ 5.50 = 5.50\n")
+    assert res["doc_kind"] == "text"
+    assert res["metadata"]["schema_used"] == "tables"
+    assert res["fields"]["tables"]["table_count"] == 1
+    assert len(calls) == 1
+
+
 def _html_and_text(res_of, html_body: str, lines: list[str]):
     """``res_of`` of the same document as HTML and as plain text."""
     html = f"<html><body>{html_body}</body></html>".encode("utf-8")

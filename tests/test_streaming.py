@@ -48,202 +48,30 @@ def test_streaming_incremental_exactly_once(spark, tmp_path_factory):
     assert ok > 180
 
 
-def _write_events(spark, path, start_hour, end_hour, fname):
-    """Deterministic events: 4 per hour (2 types) at fixed minutes."""
-    import datetime as dt
-    rows = []
-    base = dt.datetime(2024, 1, 1)
-    for h in range(start_hour, end_hour):
-        for i, (etype, minute) in enumerate(
-                [("click", 5), ("view", 20), ("click", 35), ("view", 50)]):
-            rows.append((h * 10 + i,
-                         base + dt.timedelta(hours=h, minutes=minute),
-                         h, etype, float(h) + i / 10.0, "{}"))
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    # the file-stream source lists FLAT files: write to a temp dir and
-    # move the single part file into place
-    import glob
-    import shutil
-    tmp = path + ".tmp-" + fname
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(tmp + "/part-*.parquet")[0]
-    shutil.move(part, path + "/" + fname + ".parquet")
-    shutil.rmtree(tmp)
+def test_streaming_extraction_equals_batch_scan(spark, tmp_path_factory):
+    """The stream runs the batch job's one extraction stage: over the
+    same pages dir, the streamed and the scanned tables hold the same
+    (url, status, text, span digest) rows."""
+    from extract_kit_spark.kernels.extract import span_digest
+    from extract_kit_spark.pipeline import run_extraction_scan
 
+    src = str(tmp_path_factory.mktemp("sbsrc") / "pages")
+    stream_out = str(tmp_path_factory.mktemp("sbstream") / "x")
+    scan_out = str(tmp_path_factory.mktemp("sbscan") / "x")
+    write_pages_dir(src, 120, n_files=3)
 
-def test_streaming_watermarked_windows_converge_to_batch(
-        spark, tmp_path_factory):
-    import os
-    from pyspark.sql import functions as F
-    from extract_kit_spark.streaming import run_event_window_stream
+    run_extraction_stream(spark, src, stream_out)
+    run_extraction_scan(spark, src, scan_out, job_id="sb", n_groups=3)
 
-    src = str(tmp_path_factory.mktemp("evsrc") / "events")
-    out = str(tmp_path_factory.mktemp("evout") / "w")
-    os.makedirs(src, exist_ok=True)
-    _write_events(spark, src, 0, 5, "b1a")
-    _write_events(spark, src, 5, 10, "b1b")
-
-    # one-file microbatches: the watermark advances between batches,
-    # so windows from the first file finalize within this run
-    run_event_window_stream(spark, src, out, max_files_per_trigger=1)
-    got1 = spark.read.parquet(os.path.join(out, "data"))
-    n1 = got1.count()
-    # watermark after file 1 = 05:50 - 2h: hours 0..2 finalized;
-    # 10 hours x 2 types = 20 total windows, recent ones held in state
-    assert 0 < n1 < 20
-
-    # newer events advance the watermark; held windows flush
-    _write_events(spark, src, 10, 20, "b2")
-    run_event_window_stream(spark, src, out, max_files_per_trigger=1)
-    got2 = spark.read.parquet(os.path.join(out, "data"))
-    assert got2.count() > n1
-    # exactly-once: each (window, type) emitted at most once
-    assert got2.groupBy("window_start", "event_type").count() \
-        .where(F.col("count") > 1).count() == 0
-
-    # every finalized window matches the batch ground truth
-    ev = spark.read.parquet(src)
-    truth = (ev.groupBy(
-        F.date_format(F.window("ts", "1 hour").getField("start"),
-                      "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 4).alias("total_value")))
-    joined = got2.alias("g").join(
-        truth.alias("t"), ["window_start", "event_type"], "inner")
-    assert joined.count() == got2.count()
-    mismatches = joined.where(
-        (F.col("g.n_events") != F.col("t.n_events"))
-        | (F.col("g.total_value") != F.col("t.total_value"))).count()
-    assert mismatches == 0
-
-
-def test_streaming_stateful_sessionize(spark, tmp_path_factory):
-    """applyInPandasWithState sessionizer, WATERMARK-FINAL semantics:
-    nothing is emitted until the watermark passes session_end + gap, so
-    a late-but-in-watermark event arriving in a LATER microbatch can
-    retroactively merge two provisional spans — the cross-batch
-    reordering case a fold-as-newest sessionizer gets wrong."""
-    import datetime as dt
-    import os
-    from pyspark.sql import functions as F
-    from extract_kit_spark.streaming import run_session_stream
-
-    src = str(tmp_path_factory.mktemp("sesssrc") / "events")
-    out = str(tmp_path_factory.mktemp("sessout") / "s")
-    os.makedirs(src, exist_ok=True)
-    base = dt.datetime(2024, 1, 1)
-
-    def write(rows, fname):
-        import glob
-        import shutil
-        df = spark.createDataFrame(
-            [(i, base + dt.timedelta(minutes=m), uid, "e", v, "{}")
-             for i, (uid, m, v) in enumerate(rows)],
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string")
-        tmp = src + ".tmp-" + fname
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(glob.glob(tmp + "/part-*.parquet")[0],
-                    src + "/" + fname + ".parquet")
-        shutil.rmtree(tmp)
-
-    # user 1: minutes 0 and 40 — a PROVISIONAL >30min gap that a late
-    # event will close; user 2: one session. Watermark is still 0
-    # during this batch, so nothing may be emitted yet.
-    write([(1, 0, 1.0), (1, 40, 3.0), (2, 5, 5.0)], "b1")
-    run_session_stream(spark, src, out)
-
-    # batch 2 delivers a LATE event at minute 20 (admitted: watermark
-    # after b1 is max(40min) - 2h → 0) that merges user 1's spans, plus
-    # a far-future event that advances the watermark past every open
-    # session's timeout so the no-data batch flushes them.
-    write([(1, 20, 2.0), (3, 600, 9.0)], "b2")
-    run_session_stream(spark, src, out)
-    got2 = spark.read.parquet(os.path.join(out, "data"))
-    sessions = {(r["user_id"],
-                 r["session_start"].hour * 60 + r["session_start"].minute,
-                 r["session_end"].hour * 60 + r["session_end"].minute,
-                 r["n_events"], r["total_value"])
-                for r in got2.collect()}
-    # ONE merged session 0→40 with all three events — not two spans
-    assert (1, 0, 40, 3, 6.0) in sessions
-    assert (2, 5, 5, 1, 5.0) in sessions
-    # user 1 emitted exactly once (the provisional split never leaked)
-    assert got2.where(F.col("user_id") == 1).count() == 1
-    # user 3's session is still open (watermark hasn't passed it)
-    assert got2.where(F.col("user_id") == 3).count() == 0
-    # exactly-once
-    assert got2.groupBy("user_id", "session_start").count() \
-        .where(F.col("count") > 1).count() == 0
-
-
-def test_streaming_stream_stream_interval_join(spark, tmp_path_factory):
-    """Stream-stream interval join converges to the batch predicate:
-    every (click, view) pair with view_ts <= click_ts <= view_ts+10min
-    for the same user, each emitted exactly once across incremental
-    runs."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-    from pyspark.sql import functions as F
-    from extract_kit_spark.streaming import run_click_attribution_stream
-
-    src = str(tmp_path_factory.mktemp("ssj") / "events")
-    out = str(tmp_path_factory.mktemp("ssj") / "o")
-    os.makedirs(src, exist_ok=True)
-    base = dt.datetime(2024, 1, 1)
-
-    def write(rows, fname):
-        df = spark.createDataFrame(
-            [(eid, base + dt.timedelta(minutes=m), uid, et, v, "{}")
-             for eid, (uid, m, et, v) in enumerate(rows, start=hash(fname) % 1000 * 100)],
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string")
-        tmp = src + ".tmp-" + fname
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(glob.glob(tmp + "/part-*.parquet")[0],
-                    src + "/" + fname + ".parquet")
-        shutil.rmtree(tmp)
-
-    # user 1: view@0 matched by clicks @5 and @9, NOT @15; view@20
-    # matched by click@25. user 2: click@3 with no view. noise types.
-    write([(1, 0, "view", 0.0), (1, 5, "click", 1.0),
-           (1, 9, "click", 2.0), (1, 15, "click", 3.0),
-           (2, 3, "click", 9.0), (1, 2, "purchase", 5.0)], "b1")
-    run_click_attribution_stream(spark, src, out)
-    got1 = spark.read.parquet(os.path.join(out, "data"))
-    pairs1 = {(r["user_id"], r["click_ts"].minute, r["view_ts"].minute)
-              for r in got1.collect()}
-    assert pairs1 == {(1, 5, 0), (1, 9, 0)}
-
-    # incremental: a later view+click arrive in a new file
-    write([(1, 20, "view", 0.0), (1, 25, "click", 4.0)], "b2")
-    run_click_attribution_stream(spark, src, out)
-    got2 = spark.read.parquet(os.path.join(out, "data"))
-    pairs2 = {(r["user_id"], r["click_ts"].minute, r["view_ts"].minute)
-              for r in got2.collect()}
-    assert pairs2 == {(1, 5, 0), (1, 9, 0), (1, 25, 20)}
-    # exactly-once per (click, view)
-    assert got2.groupBy("click_id", "view_id").count() \
-        .where(F.col("count") > 1).count() == 0
-
-    # batch ground truth: identical pair set
-    ev = spark.read.parquet(src)
-    v = ev.where("event_type = 'view'").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("view_ts"))
-    c = ev.where("event_type = 'click'").select(
-        "user_id", F.col("ts").alias("click_ts"))
-    truth = c.join(v, F.expr(
-        "v_user = user_id AND view_ts <= click_ts "
-        "AND click_ts <= view_ts + interval 10 minutes"))
-    tpairs = {(r["user_id"], r["click_ts"].minute, r["view_ts"].minute)
-              for r in truth.collect()}
-    assert pairs2 == tpairs
+    def rows(out):
+        return {(r["url"], r["status"], r["extracted_text"],
+                 span_digest(r["spans"]))
+                for r in spark.read.parquet(os.path.join(out, "data"))
+                .select("url", "status", "extracted_text", "spans")
+                .collect()}
+    streamed = rows(stream_out)
+    assert len(streamed) == 120
+    assert streamed == rows(scan_out)
 
 
 def test_streaming_dedup_first_seen_wins(spark, tmp_path_factory):
@@ -299,14 +127,13 @@ from extract_kit_spark.session import get_spark
 from extract_kit_spark import streaming
 spark = get_spark(master="local[2]", app_name="crash-child",
                   shuffle_partitions=2)
-streaming.{fn}(spark, {src!r}, {out!r}, max_files_per_trigger=1{extra})
+streaming.{fn}(spark, {src!r}, {out!r}, max_files_per_trigger=1)
 print("CHILD_COMPLETED", flush=True)
 """
 
 
 def _run_child_until_killed(tmp_path_factory, fn, src, out,
-                            extra="", min_commits=3,
-                            n_batches_total=10**9):
+                            min_commits=3, n_batches_total=10**9):
     """Start the stream in a CHILD process (own JVM), poll the
     checkpoint commit log, and SIGKILL the whole process group the
     moment >= min_commits microbatches have committed — an unclean
@@ -322,7 +149,7 @@ def _run_child_until_killed(tmp_path_factory, fn, src, out,
     script = str(tmp_path_factory.mktemp("crash") / "child.py")
     with open(script, "w") as fh:
         fh.write(_CHILD_TEMPLATE.format(repo=repo, fn=fn, src=src,
-                                        out=out, extra=extra))
+                                        out=out))
     commits_dir = os.path.join(out, "_checkpoint", "commits")
     child = subprocess.Popen([sys.executable, script],
                              stdout=subprocess.PIPE,
@@ -392,83 +219,6 @@ def test_streaming_extraction_crash_recovery(spark, tmp_path_factory):
                       df.select("url", "status",
                                 "extracted_text").collect()}
     assert key(got) == key(want)
-
-
-def test_streaming_sessionize_crash_recovery(spark, tmp_path_factory):
-    """Kill -9 the STATEFUL sessionizer mid-run — per-user session
-    state spans the kill point — restart from the checkpoint, and
-    prove the final emitted sessions equal a clean run's: sessions
-    straddling the crash are merged correctly from recovered state,
-    already-emitted sessions are not re-emitted (sink exactly-once),
-    and nothing is lost."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-    from pyspark.sql import functions as F
-    from extract_kit_spark.streaming import run_session_stream
-
-    src = str(tmp_path_factory.mktemp("scrashsrc") / "events")
-    out = str(tmp_path_factory.mktemp("scrashout") / "s")
-    ref = str(tmp_path_factory.mktemp("scrashref") / "s")
-    os.makedirs(src, exist_ok=True)
-    base = dt.datetime(2024, 1, 1)
-
-    def write(rows, fname):
-        df = spark.createDataFrame(
-            [(i, base + dt.timedelta(minutes=m), uid, "e", v, "{}")
-             for i, (uid, m, v) in enumerate(rows)],
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double, props string")
-        tmp = src + ".tmp-" + fname
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.move(glob.glob(tmp + "/part-*.parquet")[0],
-                    src + "/" + fname + ".parquet")
-        shutil.rmtree(tmp)
-
-    # users 1-4: one event every 10 min for 15 files -> each user has a
-    # single long session spanning every microbatch (state straddles
-    # the kill); user 5: one event in the first file only, whose
-    # session finalizes EARLY (1-minute watermark delay) so some rows
-    # are already emitted when the kill lands
-    for k in range(15):
-        rows = [(uid, k * 10, float(uid)) for uid in (1, 2, 3, 4)]
-        if k == 0:
-            rows.append((5, 0, 50.0))
-        write(rows, f"b{k:02d}")
-    # far-future event advances the watermark past every open session
-    write([(999, 100000, 0.0)], "zflush")
-
-    n_at_kill = _run_child_until_killed(
-        tmp_path_factory, "run_session_stream", src, out,
-        extra=", watermark_delay='1 minute'",
-        min_commits=5, n_batches_total=16)
-    assert 0 < n_at_kill < 16
-
-    run_session_stream(spark, src, out, watermark_delay="1 minute",
-                       max_files_per_trigger=1)
-    got = spark.read.parquet(os.path.join(out, "data"))
-
-    run_session_stream(spark, src, ref, watermark_delay="1 minute",
-                       max_files_per_trigger=1)
-    want = spark.read.parquet(os.path.join(ref, "data"))
-
-    key = lambda df: {(r["user_id"], r["session_start"],
-                       r["session_end"], r["n_events"],
-                       r["total_value"]) for r in df.collect()}
-    assert key(got) == key(want)
-    # the spanning sessions were stitched across the crash: one
-    # session per user covering minutes 0..140 with all 15 events
-    rows = {r["user_id"]: r for r in got.collect()}
-    for uid in (1, 2, 3, 4):
-        r = rows[uid]
-        assert r["n_events"] == 15
-        assert r["session_start"] == base
-        assert r["session_end"] == base + dt.timedelta(minutes=140)
-    assert rows[5]["n_events"] == 1 and rows[5]["total_value"] == 50.0
-    # exactly-once on the emitted stream
-    assert got.groupBy("user_id", "session_start").count() \
-        .where(F.col("count") > 1).count() == 0
 
 
 def test_url_dedup_stream_first_canonical_wins(spark,
